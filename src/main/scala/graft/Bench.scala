@@ -1,47 +1,105 @@
 package graft
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
+import scala.collection.mutable.ArrayBuffer
+
+/** The measurement entry point over the tables in `SPARK_GRAFT_SF_DIR`:
+  * `runMain graft.Bench [--only q1,q2,...] [--explain <outDir> <suffix>]`.
+  *
+  * No args: time every registry query; print the four JSON contract lines.
+  * `--only`: time the listed queries in order with the same pass
+  * semantics (memo cleared once per rep, so a number is the query's cost
+  * given the earlier ones; list a query alone for its from-scratch cost);
+  * print per-query times and rows, and the last rep's per-stage tables.
+  * `--explain`: write `.explain("formatted")` of the `--only` (else all)
+  * queries to `<outDir>/<query>_<suffix>.txt` instead of timing — the
+  * initial plan (AQE on, isFinalPlan=false): join-strategy/exchange
+  * structure is what the files evidence.
+  */
 object Bench {
+
+  /** Full-row checksum and row count in one aggregate. The checksum over
+    * every column forces full evaluation — a bare count() lets Catalyst
+    * prune unreferenced projections, so expression-heavy queries would
+    * be measured as scan-only. bit_xor (not sum): sum(xxhash64)
+    * overflows LongType under Spark 4 ANSI mode for any multi-row
+    * result, aborting the job mid-flight and timing only to first task
+    * failure. */
+  def checksum(df: DataFrame): (Long, Long) = {
+    val r = df.agg(bit_xor(xxhash64(df.columns.map(col).toIndexedSeq: _*)),
+      count(lit(1))).head()
+    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+  }
+
   def main(args: Array[String]): Unit = {
+    val (only, explain) = (args.toList match {
+      // distinct up front: per-pass timings are keyed by name
+      case "--only" :: qs :: rest => (Some(qs.split(',').toSeq.distinct), rest)
+      case rest => (None, rest)
+    }) match {
+      case (o, Nil) => (o, None)
+      case (o, "--explain" :: dir :: suffix :: Nil) => (o, Some((dir, suffix)))
+      case _ => throw new IllegalArgumentException(
+        "usage: graft.Bench [--only q1,q2,...] [--explain <outDir> <suffix>]")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.functions.GraftFunctions.inject)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Checksum over every column forces full evaluation — a bare
-    // count() lets Catalyst prune unreferenced projections, so
-    // expression-heavy queries would be measured as scan-only.
-    // bit_xor (not sum): sum(xxhash64) overflows LongType under
-    // Spark 4 ANSI mode for any multi-row result, aborting the job
-    // mid-flight and timing only to first task failure.
-    def checksum(df: DataFrame): Unit =
-      df.agg(bit_xor(xxhash64(df.columns.map(col): _*))).collect()
+    val spark = graft.core.Sessions.local()
+    val failures = explain.fold(measure(spark, sfDir, only)) { case (outDir, suffix) =>
+      dumpPlans(spark, sfDir, only.getOrElse(SparkEntry.queries.keys.toSeq.sorted), outDir, suffix)
+    }
+    spark.stop()
+    if (failures > 0) sys.exit(1)
+  }
+
+  /** Times the selected queries and prints the report; returns the
+    * number of failed queries. */
+  private def measure(spark: SparkSession, sfDir: String, only: Option[Seq[String]]): Int = {
+    val selected = only.fold(SparkEntry.queries.toSeq)(_.map(n => n -> SparkEntry.queries(n)))
     // untimed warmup: JVM/codegen/session initialization otherwise
     // lands entirely on whichever query the Map iterates first
     try checksum(SparkEntry.queries("q1_agg")(spark, sfDir))
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
     var failures = 0
-    def runOnce(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try checksum(fn(spark, sfDir))
-      catch {
-        case e: Throwable =>
-          // A bench that can't fail can't be trusted: report and count,
-          // so a partial timing is never mistaken for a full one.
-          failures += 1
-          System.err.println(s"[bench] $name FAILED: ${e.toString.linesIterator.next()}")
+    // Stage tables of an --only run: the listener keeps (wall ms, table
+    // row) per completed stage; the last rep snapshots them per query.
+    val stages = ArrayBuffer.empty[(Long, String)]
+    if (only.isDefined) spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        val wall = (for { s <- i.submissionTime; c <- i.completionTime } yield c - s)
+          .getOrElse(-1L)
+        val row = f"  stage ${i.stageId}%4d wall $wall%6d ms tasks ${i.numTasks}%4d taskSum " +
+          f"${i.taskMetrics.executorRunTime}%6d ms  ${i.name.linesIterator.next().take(90)}"
+        stages.synchronized(stages += wall -> row)
       }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    })
+    val stageTables = ArrayBuffer.empty[String]
+    def runOnce(recordStages: Boolean = false): Seq[(String, Double, Long)] =
+      selected.map { case (name, fn) =>
+        if (recordStages) stages.synchronized(stages.clear())
+        val t0 = System.nanoTime()
+        val rows =
+          try checksum(fn(spark, sfDir))._2
+          catch {
+            case e: Throwable =>
+              // A bench that can't fail can't be trusted: report and count,
+              // so a partial timing is never mistaken for a full one.
+              failures += 1
+              System.err.println(s"[bench] $name FAILED: ${e.toString.linesIterator.next()}")
+              -1L
+          }
+        val secs = (System.nanoTime() - t0) / 1e9
+        if (recordStages) {
+          Thread.sleep(500) // let listener events drain
+          val sts = stages.synchronized(stages.toList)
+          stageTables += (f"== $name: last rep $secs%.3f s, ${sts.size} stages ==" +:
+            sts.sortBy(-_._1).take(30).map(_._2) :+
+            s"  [stageWallSum] ${sts.map(_._1).sum} ms over ${sts.size} stages").mkString("\n")
+        }
+        (name, secs, rows)
+      }
     // retry-and-min: per-query min over REPS full passes. A transient
     // co-tenant load spike inflates one pass, not both — min recovers
     // the machine-capability number (two recorded rounds were load-
@@ -81,17 +139,33 @@ object Bench {
       runOnce()
       failures = 0 // warm-up outcomes are not evidence either way
     }
-    val passRuns = (1 to reps).map { _ =>
+    val passRuns = (1 to reps).map { rep =>
       graft.core.Memo.clear()
       val w0 = System.nanoTime(); val c0 = processCpuNanos()
-      val r = runOnce()
+      val r = runOnce(recordStages = only.isDefined && rep == reps)
       val wall = (System.nanoTime() - w0) / 1e9
       val cpu = (processCpuNanos() - c0) / 1e9
       val ratio = if (c0 >= 0 && wall > 0)
         math.round(cpu / wall * 100.0) / 100.0 else -1.0
       (r, graft.core.Memo.buildSeconds, ratio)
     }
-    val passes = passRuns.map(_._1)
+
+    if (only.isDefined) {
+      stageTables.foreach(println)
+      selected.indices.foreach { i =>
+        val (name, _, rows) = passRuns.last._1(i)
+        val ts = passRuns.map(_._1(i)._2)
+        println(f"""{"query":"$name","min":${ts.min}%.3f,"passes":[${ts.map(t => f"$t%.3f").mkString(",")}],"rows":$rows}""")
+      }
+    } else printContract(sfDir, passRuns, failures, reps, warmupPasses, loadavg)
+    failures
+  }
+
+  /** The four JSON contract lines of a full run. */
+  private def printContract(sfDir: String,
+      passRuns: Seq[(Seq[(String, Double, Long)], Map[String, Double], Double)],
+      failures: Int, reps: Int, warmupPasses: Int, loadavg: Seq[Double]): Unit = {
+    val passes = passRuns.map(_._1.map { case (n, t, _) => n -> t }.toMap)
     val passCpuRatios = passRuns.map(_._3)
     // shared memo-slot build cost per pass, min across passes like the
     // per-query numbers — the build lands on whichever group query the
@@ -191,7 +265,32 @@ object Bench {
     // top_queries/memo_build lines above are kept unchanged as the
     // second truncation defense.
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failures":$failures,"n_queries":${results.size},"reps":$reps,"warmup_passes":$warmupPasses,"pass_totals":$passJson,"loadavg":$loadJson,"pass_cpu_ratios":$cpuJson,"memo_groups":$groups,"queries":$qs}""")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
+  }
+
+  /** Writes each query's formatted plan; returns the number that failed. */
+  private def dumpPlans(spark: SparkSession, sfDir: String,
+      names: Seq[String], outDir: String, suffix: String): Int = {
+    Files.createDirectories(Paths.get(outDir))
+    // Route graft.core.PlanTrace marks (the INTERNAL pre-checkpoint /
+    // pre-collect frames that the registry-level dump cannot see — they
+    // truncate to Scan ExistingRDD / LocalTableScan) into the same out
+    // dir, tagged with the suffix (round-18, verdict ask #9). Building
+    // a query's frame below may eagerly run its scalar/checkpoint jobs,
+    // which is exactly when the marks fire.
+    System.setProperty("graft.plantrace.dir", s"$outDir/trace_$suffix")
+    names.count { n =>
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.write(Paths.get(outDir, s"${n}_$suffix.txt"), txt.getBytes("UTF-8"))
+        println(s"[explain] $n -> $outDir/${n}_$suffix.txt")
+        false
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[explain] $n FAILED: ${e.toString.linesIterator.next()}")
+          true
+      }
+    }
   }
 }

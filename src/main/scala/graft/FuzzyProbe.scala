@@ -17,13 +17,7 @@ import org.apache.spark.sql.functions._
   * other side: ~1e5+ first tokens, blocks far below any cap. */
 object FuzzyProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.functions.GraftFunctions.inject)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     val docs = graft.core.Tables.documents(spark, args(0))
     val t0 = System.nanoTime()
     val (pairs, stats) = graft.dedup.Dedup.fuzzyJoinBlockedWithStats(

@@ -20,13 +20,7 @@ object PairSlice {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PairSlice <docsDir> <outDir> [modulo]")
     val modulo = if (args.length > 2) args(2).toInt else 10
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.functions.GraftFunctions.inject)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     val docs = graft.core.Tables.documents(spark, args(0))
       .filter(col("doc_id") % modulo === 0)
     graft.dedup.Dedup.minHashNearDup(docs, "doc_id", "text", threshold = 0.5)

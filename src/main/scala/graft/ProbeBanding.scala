@@ -37,14 +37,7 @@ object ProbeBanding {
       .map { s => val Array(b, r) = s.split("x"); (b.toInt, r.toInt) }
     val shapes = if (shapes0.nonEmpty) shapes0.toSeq
       else Seq((8, 4), (16, 4), (8, 6), (12, 6), (16, 6), (8, 8))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.functions.GraftFunctions.inject)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     val docs = graft.core.Tables.documents(spark, dir)
     val sh = graft.dedup.Dedup
       .hashedCharNgrams(docs, "doc_id", "text", ngram).cache()

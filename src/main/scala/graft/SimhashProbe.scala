@@ -19,13 +19,7 @@ package graft
   * numbers. */
 object SimhashProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.functions.GraftFunctions.inject)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     import org.apache.spark.sql.functions._
     val bits = if (args.length > 1) args(1).toInt else 60
     val maxHamming = if (args.length > 2) args(2).toInt else 3

@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.DataFrame
 
 /** Plan-evidence hook for INTERNAL frames that the registry-level
-  * `ExplainDump` cannot see: operators that end in a localCheckpoint
-  * dump as `Scan ExistingRDD` at the registry boundary, and operators
-  * that compute their scalars eagerly dump as `LocalTableScan` — the
-  * round-17 verdict's "vacuous exactly where the biggest claims are"
+  * `Bench --explain` dump cannot see: operators that end in a
+  * localCheckpoint dump as `Scan ExistingRDD` at the registry boundary,
+  * and operators that compute their scalars eagerly dump as
+  * `LocalTableScan` — the round-17 verdict's "vacuous exactly where the biggest claims are"
   * gap. Operators call `mark(name, df)` right before the truncating
   * boundary; the call is a no-op (one system-property read) unless
   * `graft.plantrace.dir` is set, in which case the formatted plan is

@@ -2,27 +2,28 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
+/** The one SparkSession factory of the graft engine: every main, the
+  * benchmark mains and the test suite build their session here, so
+  * correctness runs, timings and unit tests all run the shipped plans.
   *
   * Settings chosen for scale (see SURVEY.md §4/§7): AQE on (runtime
   * re-planning, skew-join splitting, shuffle coalescing), UTC session
   * timezone (oracle parity), shuffle partitions sized to the local core
-  * count rather than the 200 default. On a real cluster the caller
-  * overrides `shufflePartitions` to ~2-3x total executor cores.
+  * count rather than the 200 default.
   */
 object Sessions {
 
-  def local(
-      appName: String = "graft",
-      cores: Int = Runtime.getRuntime.availableProcessors(),
-      shufflePartitions: Int = 32,
-      extraConf: Map[String, String] = Map.empty): SparkSession = {
+  /** `SPARK_GRAFT_CPUS` when set, else every available processor. */
+  lazy val defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
-      .appName(appName)
+      .appName("graft")
       .withExtensions(graft.functions.GraftFunctions.inject)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -31,9 +32,8 @@ object Sessions {
       // default; read as epoch-nanos long and convert explicitly.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => spark.config(k, v) }
-    val built = spark.getOrCreate()
-    built.sparkContext.setLogLevel("WARN")
-    built
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

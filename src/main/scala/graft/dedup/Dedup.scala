@@ -458,7 +458,7 @@ object Dedup {
       .select(col("id_1"), col("id_2"),
         (col("i") / (col("n1") + col("n2") - col("i"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    // the registry-level ExplainDump sees only Scan ExistingRDD past the
+    // the registry-level Bench --explain sees only Scan ExistingRDD past the
     // checkpoint below — this mark is the real pre-checkpoint plan
     graft.core.PlanTrace.mark("minHashNearDup_verified", verifiedPlan)
     val verified =

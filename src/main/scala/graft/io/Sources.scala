@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -71,23 +71,35 @@ object Sources {
       case c => c.toString
     }
 
+  /** Write a driver-side file as Luigi's `LocalTarget` does: into a
+    * hidden temp file in the same directory, then one atomic rename, so
+    * a crash never leaves a truncated file that a resumed DAG would take
+    * for a complete output (Pipeline.complete). */
+  private def writeAtomically(path: String)(write: Path => Unit): Unit = {
+    val dst = Paths.get(path).toAbsolutePath
+    Files.createDirectories(dst.getParent)
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.tmp")
+    try {
+      write(tmp)
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   /** S4: JSON scalar-map manifest write (driver-side control data). */
   def writeJsonManifest(path: String, entries: Map[String, String]): Unit = {
     val json = entries.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
       .mkString("{", ", ", "}")
-    Files.createDirectories(Paths.get(path).getParent)
-    Files.writeString(Paths.get(path), json)
+    writeAtomically(path)(Files.writeString(_, json))
   }
 
   /** S4: JSON string-list write (optimal feature lists,
     * create_solution.py:167-168). Items are escaped like manifest
     * values — a feature name with a quote or comma must round-trip. */
-  def writeJsonList(path: String, items: Seq[String]): Unit = {
-    Files.createDirectories(Paths.get(path).getParent)
-    Files.writeString(Paths.get(path),
-      items.map(s => s""""${esc(s)}"""").mkString("[", ", ", "]"))
-  }
+  def writeJsonList(path: String, items: Seq[String]): Unit =
+    writeAtomically(path)(Files.writeString(_,
+      items.map(s => s""""${esc(s)}"""").mkString("[", ", ", "]")))
 
   /** Inverse of writeJsonManifest's `esc` — without it, a value
     * containing quotes/backslashes/newlines would not round-trip (the
@@ -209,8 +221,7 @@ object Sources {
   def copyConfig(srcConfig: String, outDir: String): Unit = {
     val src = Paths.get(srcConfig)
     require(Files.exists(src), s"No config file found in: $srcConfig")
-    Files.createDirectories(Paths.get(outDir))
-    Files.copy(src, Paths.get(outDir).resolve(src.getFileName),
-      StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(Paths.get(outDir).resolve(src.getFileName).toString)(
+      Files.copy(src, _, StandardCopyOption.REPLACE_EXISTING))
   }
 }

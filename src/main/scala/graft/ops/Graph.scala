@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Graph analytics over relational co-occurrence structure: weighted
   * co-occurrence edge extraction from basket-shaped data, weighted
@@ -159,11 +160,19 @@ object Graph {
   def triangleStats(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    // Ids must be integral: the widening cast to long below is then
+    // lossless. A string or fractional id would be cast silently into a
+    // different node ("7" and "07" both become 7, 1.5 and 1.7 both 1),
+    // turning distinct edges into self-loops or merged nodes.
+    Seq("src", "dst").foreach { c =>
+      val t = edges.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"triangleStats: id column '$c' must be an integral type, got ${t.simpleString}")
+    }
     // cast ids to long up front: the adjacency intersect runs through
     // sorted_intersect_count, which type-checks array<bigint> only —
-    // without the cast an int/short-id edge list fails at analysis even
-    // though the scaladoc contract is any orderable id (the cast is a
-    // plan no-op when ids are already long)
+    // without the cast an int/short-id edge list fails at analysis (the
+    // cast is a plan no-op when ids are already long)
     val und = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).localCheckpoint(false)
     val deg = und.select(col("src").as("node"))

@@ -3,11 +3,18 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 /** §3.1 orchestration: a task DAG with Luigi's file-target semantics —
-  * a task is *complete* iff every declared output file exists, complete
+  * a task is *complete* iff every declared output is complete, complete
   * tasks are skipped wholesale, incomplete tasks first ensure their
   * dependencies then run (create_solution.py:67-69 and every Luigi
   * `output()`/`requires()` pair). Resume-after-partial-failure works by
   * construction: whatever produced its outputs stays skipped.
+  *
+  * An output is complete when it is a file that exists, or a directory
+  * holding `_SUCCESS`. A Spark write creates its directory (with
+  * `_temporary/`) when the job starts and writes `_SUCCESS` only on
+  * commit, so a crash mid-write leaves the task incomplete. Driver-side
+  * files must be written atomically (`Sources` writes a temp file and
+  * renames it), so an existing file is always a whole one.
   */
 object Pipeline {
 
@@ -19,7 +26,10 @@ object Pipeline {
   final case class Report(ran: Seq[String], skipped: Seq[String])
 
   def complete(t: Task): Boolean =
-    t.outputs.nonEmpty && t.outputs.forall(o => Files.exists(Paths.get(o)))
+    t.outputs.nonEmpty && t.outputs.forall { o =>
+      val p = Paths.get(o)
+      if (Files.isDirectory(p)) Files.exists(p.resolve("_SUCCESS")) else Files.exists(p)
+    }
 
   /** Post-order execution with memoized completeness. */
   def execute(roots: Task*): Report = {

@@ -115,6 +115,18 @@ class GraphSpec extends SparkSpec {
     assert(r.getLong(3) == 0L && r.getDouble(4) == 0.0)
   }
 
+  test("triangleStats: non-integral ids are rejected, not cast into each other") {
+    // as strings "7" and "07" are distinct nodes; a cast to long would
+    // merge them and turn the edge 7 -> 07 into a self-loop
+    val strIds = Seq(("7", "07", 1L), ("7", "8", 1L), ("07", "8", 1L))
+      .toDF("src", "dst", "w")
+    val e = intercept[IllegalArgumentException](Graph.triangleStats(strIds))
+    assert(e.getMessage.contains("string"), e.getMessage)
+    val dblIds = Seq((1.5, 1.7, 1L)).toDF("src", "dst", "w")
+    assert(intercept[IllegalArgumentException](Graph.triangleStats(dblIds))
+      .getMessage.contains("double"))
+  }
+
   test("graph plans: no nested-loop join anywhere in the executed shapes") {
     val li = core.Tables.lineitem(spark, sf)
     for (df <- Seq(

@@ -4,14 +4,13 @@ import java.nio.file.{Files, Paths}
 import graft.io.{Hocon, ProjectPaths, Sources}
 
 /** S1-S7 sources/sinks + HOCON config + path deriver. The parser is
-  * exercised against the reference's real iris solution.conf (read-only
-  * fixture) and the path deriver against the directory examples
-  * documented in config_parser.py:45-147.
+  * exercised against an iris solution.conf laid out like the reference's
+  * (in-repo fixture under src/test/resources) and the path deriver
+  * against the directory examples documented in config_parser.py:45-147.
   */
 class IoSpec extends SparkSpec {
 
-  private val irisConf =
-    "/root/reference/examples/classification/multiclass/iris/configs/solution.conf"
+  private val irisConf = "src/test/resources/iris/configs/solution.conf"
 
   test("hocon: parses the reference's full solution.conf") {
     val cfg = Hocon.parseFile(irisConf)
@@ -181,7 +180,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("hocon + path deriver handle the second reference config (credit_scoring)") {
-    val conf = "/root/reference/examples/classification/binary/credit_scoring/configs/solution.conf"
+    val conf = "src/test/resources/credit_scoring/configs/solution.conf"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(conf))) {
       val cfg = Hocon.parseFile(conf)
       assert(cfg.getString("raw_data_settings.target_column").nonEmpty)

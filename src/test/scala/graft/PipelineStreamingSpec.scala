@@ -32,6 +32,39 @@ class PipelineStreamingSpec extends SparkSpec {
     assert(runs == Map("a" -> 1, "b" -> 2))
   }
 
+  test("pipeline: a task that crashed mid-write re-runs on resume") {
+    import spark.implicits._
+    val rows = (1 to 60).map(i => (i, i * i)).toDF("id", "sq")
+    def task(dir: String, crash: Boolean) = Pipeline.Task("write",
+        Seq(s"$dir/meta.txt", s"$dir/t.csv"))(() => {
+      graft.io.Sources.writeJsonManifest(s"$dir/meta.txt", Map("rows" -> "60"))
+      if (crash) {
+        // What a process killed during the Spark write leaves behind: the
+        // output directory, created at job start, holding a partial part
+        // file under _temporary/ and no _SUCCESS. (An in-process failure
+        // is cleaned up by the job abort; a killed process is not.)
+        val part = Paths.get(s"$dir/t.csv/_temporary/0/_temporary/attempt_0/part-00000.csv")
+        Files.createDirectories(part.getParent)
+        Files.writeString(part, "id,sq\n1,1\n2,4\n")
+        throw new IllegalStateException("injected fault")
+      }
+      graft.io.Sources.writeCsv(rows, s"$dir/t.csv", floatDecimals = None)
+    })
+    def content(dir: String) = (
+      Files.readString(Paths.get(s"$dir/meta.txt")),
+      spark.read.option("header", "true").csv(s"$dir/t.csv")
+        .collect().map(_.toSeq).toSeq.sortBy(_.head.toString.toInt))
+    val clean = Files.createTempDirectory("graft_pipe_clean").toString
+    assert(Pipeline.execute(task(clean, crash = false)).ran == Seq("write"))
+
+    val dir = Files.createTempDirectory("graft_pipe_crash").toString
+    intercept[IllegalStateException](Pipeline.execute(task(dir, crash = true)))
+    val resumed = Pipeline.execute(task(dir, crash = false))
+    assert(resumed.ran == Seq("write"), "a directory without _SUCCESS is not complete")
+    assert(content(dir) == content(clean))
+    assert(Pipeline.execute(task(dir, crash = true)).skipped == Seq("write"))
+  }
+
   test("corpus build: config-driven curation pipeline with file-target resume") {
     val proj = Files.createTempDirectory("graft_corpus").toString
     Files.createDirectories(Paths.get(s"$proj/configs"))
@@ -132,8 +165,8 @@ class PipelineStreamingSpec extends SparkSpec {
   }
 
   test("solution build: iris end-to-end with reference artifact layout") {
-    // materialize the reference's iris project skeleton in a temp dir
-    val ref = "/root/reference/examples/classification/multiclass/iris"
+    // materialize the iris project skeleton (in-repo fixture) in a temp dir
+    val ref = "src/test/resources/iris"
     val proj = Files.createTempDirectory("graft_iris").toString
     Files.createDirectories(Paths.get(s"$proj/configs"))
     Files.createDirectories(Paths.get(s"$proj/features_generation/features_dataset_001"))

@@ -11,5 +11,5 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   // One JVM-wide session for the whole forked test run.
-  lazy val session: SparkSession = graft.core.Sessions.local("graft-test", cores = 4, shufflePartitions = 4)
+  lazy val session: SparkSession = graft.core.Sessions.local()
 }

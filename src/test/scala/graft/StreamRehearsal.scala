@@ -21,13 +21,7 @@ object StreamRehearsal {
     val sfDir = args(0)
     val chunks = if (args.length > 1) args(1).toInt else 20
     val only = if (args.length > 2) args(2).split(",").toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .appName("graft-stream-rehearsal")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
 
     val streamDir = Files.createTempDirectory("graft_rehearsal").toString
     stageChunks(spark, s"$sfDir/events.parquet", streamDir, chunks)

@@ -7,9 +7,9 @@ Usage: python3 tools/bench_diff.py <old> <new> [--ratio 2.0] [--floor 0.5]
 line wrapped in "tail") or raw graft.Bench JSON lines. Prints the
 pass-total brackets of both runs, every per-query delta whose new/old
 ratio exceeds --ratio with new >= --floor seconds (the absolute floor
-keeps sub-second jitter out), and the exact graft.BenchOne command that
-attributes the flagged queries on an idle box (pass mode — the
-artifact's memo-slot accounting). Exits 1 when anything is flagged, so
+keeps sub-second jitter out), and the exact `graft.Bench --only` command
+that attributes the flagged queries on an idle box (the artifact's
+pass semantics and memo-slot accounting). Exits 1 when anything is flagged, so
 the round-close sequence can gate on it.
 
 Dev-tool only (driver-side python, like check_oracle.py).
@@ -184,7 +184,8 @@ def main():
         sf = str(sf)
         sf_dir = sf if sf.startswith("/") else f"/root/testdata/sf{sf}"
     print("\nattribute on an idle box with:")
-    print(f"  sbt -batch \"runMain graft.BenchOne {sf_dir} {names} 3 pass\"")
+    print(f"  SPARK_GRAFT_SF_DIR={sf_dir} SPARK_GRAFT_BENCH_REPS=3 "
+          f"sbt -batch \"runMain graft.Bench --only {names}\"")
     sys.exit(1)
 
 
