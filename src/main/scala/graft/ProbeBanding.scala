@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import graft.dedup.{Banding, Dedup}
 
 /** Banding-shape probe for the MinHash near-dup pipelines — the
   * runnable 100 TB recipe (promoted from the round-13 test-scope
@@ -8,7 +9,8 @@ import org.apache.spark.sql.functions._
   * run this on the corpus (or a sample) to price the candidate-pair
   * mass Σ C(bucket, 2) of each (bands, rowsPerBand) shape, total and
   * under the `maxBucketSize` caps, from the CHEAP half of the
-  * pipeline alone (one signature aggregate + one count per shape).
+  * pipeline alone (per shape: scan-local signatures, then the
+  * [[graft.dedup.Banding]] census once per cap).
   * Pick the shape whose candidate mass is answer-scale — the sf10
   * rehearsal measured 8.1e8 candidates (disk-full) at (8, 4) on a
   * dense-background corpus vs ~1e6 with `minBandAgreements = 2`,
@@ -27,6 +29,27 @@ import org.apache.spark.sql.functions._
   * the shapes.
   */
 object ProbeBanding {
+
+  /** One shape's census line: kept candidate mass Σ C(bucket, 2) with
+    * no cap and under caps 10k / 1k / 100, the largest bucket and the
+    * bucket count. */
+  final case class Shape(candAll: Long, cap10k: Long, cap1k: Long,
+      cap100: Long, maxBucket: Long, buckets: Long)
+
+  /** The census of one (bands, rowsPerBand) shape over per-doc gram
+    * arrays (id, __gs). */
+  def shapeCensus(grams: DataFrame, bands: Int, rowsPerBand: Int): Shape = {
+    val banded = Banding.explodeBands(
+        Dedup.enrichedGrams(grams, bands * rowsPerBand),
+        Banding.minhashBands(bands, rowsPerBand), "id")
+      .cache()
+    val Seq(all, c10k, c1k, c100) =
+      Seq(Int.MaxValue, 10000, 1000, 100).map(Banding.census(banded, _))
+    banded.unpersist()
+    Shape(all.keptMass, c10k.keptMass, c1k.keptMass, c100.keptMass,
+      all.maxBucket, all.buckets)
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.error("usage: ProbeBanding <docsDir> [BxR ...] [--ngram N]"))
@@ -39,32 +62,17 @@ object ProbeBanding {
       else Seq((8, 4), (16, 4), (8, 6), (12, 6), (16, 6), (8, 8))
     val spark = graft.core.Sessions.local()
     val docs = graft.core.Tables.documents(spark, dir)
-    val sh = graft.dedup.Dedup
-      .hashedCharNgrams(docs, "doc_id", "text", ngram).cache()
-    sh.count()
-    val pairs = (col("n") * (col("n") - 1) / 2).cast("double")
+    val grams = Dedup.charNgramArrays(docs, "doc_id", "text", ngram).cache()
+    grams.count()
     shapes.foreach { case (b, r) =>
       val t0 = System.nanoTime()
-      val sizes = graft.dedup.Dedup.bandedSignatures(sh, b, r)
-        .groupBy("band", "bsig").agg(count(lit(1)).as("n"))
-      val row = sizes.agg(
-        sum(pairs).as("cand_all"),
-        sum(when(col("n") <= 10000, pairs)).as("cand_cap10k"),
-        sum(when(col("n") <= 1000, pairs)).as("cand_cap1k"),
-        sum(when(col("n") <= 100, pairs)).as("cand_cap100"),
-        max(col("n")).as("max_bucket"),
-        count(lit(1)).as("n_buckets")).head()
-      def d(i: Int): Double =
-        Option(row.get(i)).fold(0.0)(_ => row.getDouble(i))
-      // max(n) is null over an EMPTY corpus (0 signature rows —
-      // empty documents.parquet or every doc shorter than the n-gram
-      // width); print a zeros line instead of an NPE
-      def l(i: Int): Long =
-        Option(row.get(i)).fold(0L)(_ => row.getLong(i))
+      val s = shapeCensus(grams, b, r)
+      // an EMPTY corpus (no doc as long as the n-gram width) censuses
+      // to all zeros
       println(f"[probebanding] ngram=$ngram b=$b%2d r=$r%d " +
-        f"candAll=${d(0)}%.3g cap10k=${d(1)}%.3g cap1k=${d(2)}%.3g " +
-        f"cap100=${d(3)}%.3g maxBucket=${l(4)}%d " +
-        f"buckets=${l(5)}%d " +
+        f"candAll=${s.candAll.toDouble}%.3g cap10k=${s.cap10k.toDouble}%.3g " +
+        f"cap1k=${s.cap1k.toDouble}%.3g cap100=${s.cap100.toDouble}%.3g " +
+        f"maxBucket=${s.maxBucket}%d buckets=${s.buckets}%d " +
         f"wall=${(System.nanoTime() - t0) / 1e9}%.0fs")
     }
     spark.stop()

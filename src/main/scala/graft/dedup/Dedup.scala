@@ -11,15 +11,16 @@ import org.apache.spark.sql.functions._
   * design, not a port).
   *
   * Scale design: nothing in this module materializes an all-pairs
-  * product. Near-dup candidates come from MinHash band buckets (the
-  * classic LSH banding scheme); exact Jaccard is computed only on
-  * candidate pairs via two key-equi joins on the shingle table. Every
-  * join is a hash/sort-merge equi join on bounded keys; skewed buckets
-  * can be capped via `maxBucketSize`.
+  * product. Every LSH family — MinHash and char-n-gram Jaccard, the
+  * persisted band-index probe, SimHash, embedding SRP-LSH and Hamming
+  * fingerprints — is a signature, its band keys, a verify predicate and
+  * its own sizing rule on top of ONE banding core, [[Banding]]: the
+  * bucket census, the `maxBucketSize` skew cap with its drop stats, and
+  * the bucket equi-join that yields candidates. Exact verification runs
+  * on candidate pairs only. Each family has `X` and `XWithStats`; `X`
+  * is `XWithStats(...)._1`.
   */
 object Dedup {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.dedup")
 
   /** Whitespace tokens — ONE definition with [[graft.text.TextOps
     * .tokens]] (regex-trimmed over ALL whitespace, not just 0x20, so
@@ -68,46 +69,12 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Word k-shingle occurrences: (id, shingle) — duplicates retained.
-    * The token array is materialized in its own projection first: the
-    * shingle lambda references it k+2 times, and inlining the regex
-    * split into every reference re-tokenizes the document per shingle
-    * element (measured ~6x slowdown; CollapseProject keeps the barrier
-    * because split is not a cheap expression). Consumers needing set
-    * semantics apply `.distinct()` themselves — the minhash signature
-    * path deliberately does NOT (min over a multiset equals min over
-    * its set, and skipping the distinct removes a corpus-scale shuffle
-    * before the map-side-combinable signature aggregation). */
-  def shingles(df: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
-    val tok = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__w"))
-    val w = col("__w")
-    val sh = when(size(w) >= k,
-      transform(sequence(lit(0), size(w) - k),
-        i => concat_ws(" ", (0 until k).map(j => element_at(w, i + j + 1)): _*)))
-      .otherwise(array())
-    tok.select(col("id"), explode(sh).as("s"))
-  }
-
-  /** Shingle occurrences with 64-bit-hashed shingles: every downstream
-    * join and minhash runs on fixed-width longs instead of multi-word
-    * strings — a large shuffle/compare win; set semantics survive
-    * hashing up to a ~1e-19 per-pair collision probability. Computed
-    * by the native HashedShingles expression (one pass over the byte
-    * buffer, no token/shingle string materialization; whitespace-
-    * normalized like the concat_ws form — see NgramHash). Multiset
-    * (see shingles). */
-  private[dedup] def hashedShingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    graft.core.Parallelize.scan(df)
-      .select(col(idCol).as("id"), explode(
-        graft.functions.GraftFunctions.hashedShingles(
-          df.sparkSession, col(textCol), k)).as("s"))
-
-  /** Per-doc word-shingle hash arrays (id, __gs) — the UNEXPLODED
-    * counterpart of [[hashedShingles]]: one native-expression pass per
-    * document, no corpus-scale (id, gram) row stream. The minhash
-    * pipeline consumes this shape since round 17 (signature and
-    * exact-verify unit set are both per-document functions — see
-    * [[minHashOverGramsCore]]). */
+  /** Per-doc word k-shingle hash arrays (id, __gs): the native
+    * HashedShingles expression hashes each shingle to a long in one
+    * pass over the text (set semantics survive hashing up to a ~1e-19
+    * per-pair collision probability). Multiset — [[enrichedGrams]]
+    * applies set semantics per document, so no corpus-scale (id, gram)
+    * row stream or distinct shuffle ever exists. */
   private[dedup] def shingleArrays(df: DataFrame, idCol: String,
       textCol: String, k: Int): DataFrame =
     graft.core.Parallelize.scan(df)
@@ -127,8 +94,8 @@ object Dedup {
 
   /** MinHash near-duplicate pairs with exact-Jaccard verification.
     *
-    * 1. signatures: numHashes seeded xxhash64 min-hashes per id, one
-    *    aggregation pass over the shingle table;
+    * 1. signatures: numHashes seeded xxhash64 min-hashes per doc,
+    *    computed scan-local from its shingle-hash array;
     * 2. banding: `bands` bands of `rowsPerBand` hashes; ids sharing any
     *    band signature become candidates (bucket self-join — never
     *    all-pairs). Miss probability for a pair with Jaccard j is
@@ -138,9 +105,11 @@ object Dedup {
     *    120,982 reported pairs, completeness 12,634/12,750 (99.1%) on
     *    the slice replay with every miss confined to the published
     *    S-curve tail j in [0.50, 0.571] and zero false extras — a pair
-    *    above j ~ 0.57 is effectively never missed;
+    *    above j ~ 0.57 is effectively never missed.
+    *    Buckets above `maxBucketSize` are dropped (the [[Banding]]
+    *    census, sizing rule and skew cap);
     * 3. verify: exact Jaccard on candidates only, via joins against the
-    *    shingle table; keep pairs with jaccard >= threshold.
+    *    per-doc sorted gram arrays; keep pairs with jaccard >= threshold.
     *
     * `minBandAgreements` (default 1 = classic banding, exact for the
     * gate corpora) is the dense-background knob: requiring k >= 2
@@ -162,36 +131,30 @@ object Dedup {
       threshold: Double = 0.5, shingleK: Int = 3,
       bands: Int = 16, rowsPerBand: Int = 2,
       maxBucketSize: Int = 10000, minBandAgreements: Int = 1): DataFrame =
-    minHashOverGrams(shingleArrays(df, idCol, textCol, shingleK),
-      threshold, bands, rowsPerBand, maxBucketSize, minBandAgreements)
+    minHashNearDupWithStats(df, idCol, textCol, threshold, shingleK, bands,
+      rowsPerBand, maxBucketSize, minBandAgreements)._1
 
   /** [[minHashNearDup]] plus the `maxBucketSize` guard's drop stats: a
     * one-row (n_groups_dropped, n_rows_dropped) frame counting dropped
     * (band, bsig) buckets and the SIGNATURE rows (id × band
-    * memberships) inside them, computed eagerly from the cheap half of
-    * the pipeline (one extra aggregate over the cached gram table) and
-    * logged as a warning when nonzero — the no-silent-caps rule for a
-    * guard whose drops otherwise only show as missing pairs. */
+    * memberships) inside them, read off the bucket census the sizing
+    * rule already pays for (and logged as a warning when nonzero on
+    * every path) — the no-silent-caps rule for a guard whose drops
+    * otherwise only show as missing pairs. */
   def minHashNearDupWithStats(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, shingleK: Int = 3,
       bands: Int = 16, rowsPerBand: Int = 2,
       maxBucketSize: Int = 10000,
       minBandAgreements: Int = 1): (DataFrame, DataFrame) =
-    minHashOverGramsCore(shingleArrays(df, idCol, textCol, shingleK),
-      threshold, bands, rowsPerBand, maxBucketSize, minBandAgreements,
-      wantStats = true) match { case (p, s) => (p, s.get) }
+    minHashOverGrams(shingleArrays(df, idCol, textCol, shingleK),
+      threshold, bands, rowsPerBand, maxBucketSize, minBandAgreements)
 
   /** Character n-gram occurrences as hashed Jaccard units: (id, s)
     * with s = xxhash64 of each n-char window of the trimmed text,
     * computed by the native HashedNgrams expression — one pass over
-    * the UTF-8 buffer, hashing windows in place, instead of the
-    * substr-per-window formulation that allocates a UTF8String copy
-    * per gram (a 1000-char doc = ~1000 allocations) inside an
-    * interpreted higher-order lambda. The character-level variant
-    * catches near-dups word shingles miss (reorderings/typos inside
-    * tokens, whitespace-insensitive). Multiset — see shingles for why
-    * the distinct is deferred. */
+    * the UTF-8 buffer, hashing windows in place. The exploded
+    * reference form of [[charNgramArrays]]. */
   private[graft] def hashedCharNgrams(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val t = graft.core.Parallelize.scan(df)
@@ -202,27 +165,17 @@ object Dedup {
   }
 
   /** N-gram Jaccard near-dup: the MinHash/banding/exact-verify pipeline
-    * over character n-gram sets instead of word shingles. Same scale
-    * properties (bucketed candidates, never all-pairs). */
+    * over character n-gram sets instead of word shingles — catches
+    * near-dups word shingles miss (reorderings/typos inside tokens,
+    * whitespace-insensitive). Same scale properties (bucketed
+    * candidates, never all-pairs). */
   def ngramJaccardNearDup(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, n: Int = 3,
       bands: Int = 16, rowsPerBand: Int = 2,
       maxBucketSize: Int = 10000, minBandAgreements: Int = 1): DataFrame =
     minHashOverGrams(charNgramArrays(df, idCol, textCol, n),
-      threshold, bands, rowsPerBand, maxBucketSize, minBandAgreements)
-
-  /** [[ngramJaccardNearDup]] with the guard drop stats of
-    * [[minHashNearDupWithStats]] (same semantics, char-n-gram units). */
-  def ngramJaccardNearDupWithStats(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, n: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 2,
-      maxBucketSize: Int = 10000,
-      minBandAgreements: Int = 1): (DataFrame, DataFrame) =
-    minHashOverGramsCore(charNgramArrays(df, idCol, textCol, n),
-      threshold, bands, rowsPerBand, maxBucketSize, minBandAgreements,
-      wantStats = true) match { case (p, s) => (p, s.get) }
+      threshold, bands, rowsPerBand, maxBucketSize, minBandAgreements)._1
 
   /** Deterministic per-anchor output budget for verified pair tables —
     * the answer-volume knob for the output-bound pair generators
@@ -252,21 +205,6 @@ object Dedup {
           count(lit(1)).over(Window.partitionBy(anchorCol)) - budget))
       .filter(col("__rn") <= budget).drop("__rn")
   }
-
-  /** Shared MinHash LSH core over any hashed unit table (id, s: long).
-    * The input may be a multiset: the signature min-aggregation is
-    * idempotent over duplicates (and map-side combinable, so the gram
-    * explosion never crosses the shuffle at corpus scale), and the
-    * exact-verification path applies set semantics AFTER restricting to
-    * candidate ids — a corpus-scale `.distinct()` up front would be a
-    * full shuffle spent mostly on documents that never reach a bucket
-    * pair. */
-  private def minHashOverGrams(
-      docGrams: DataFrame, threshold: Double,
-      bands: Int, rowsPerBand: Int, maxBucketSize: Int,
-      minBandAgreements: Int = 1): DataFrame =
-    minHashOverGramsCore(docGrams, threshold, bands, rowsPerBand,
-      maxBucketSize, minBandAgreements, wantStats = false)._1
 
   /** The MinHash banding sizing rule, factored pure for spec-ability —
     * the [[simHashSizingIssue]] analogue, fed by MEASURED bucket
@@ -326,179 +264,46 @@ object Dedup {
   /** (id, __gs sorted-distinct array, __sig minhash array) per doc —
     * computed SCAN-LOCAL in one projection: both the exact-verify unit
     * set and the signature are per-document functions, so nothing here
-    * shuffles. Docs with no grams (short/NULL text) carry a NULL
-    * signature and are dropped, exactly as the exploded form produced
-    * no rows for them. */
-  private def enrichedGrams(docGrams: DataFrame, numHashes: Int): DataFrame =
+    * shuffles. The native signature is deliberately bands·rowsPerBand
+    * INDEPENDENT seeded hashes: a Kirsch-Mitzenmacher (h1 + j·h2)
+    * derivation makes band collisions correlate and banding recall
+    * collapse. Docs with no grams (short/NULL text) carry a NULL
+    * signature and are dropped. */
+  private[graft] def enrichedGrams(docGrams: DataFrame, numHashes: Int): DataFrame =
     docGrams.select(col("id"),
         sort_array(array_distinct(col("__gs"))).as("__gs"),
         graft.functions.GraftFunctions.minhashSignature(
           docGrams.sparkSession, col("__gs"), numHashes).as("__sig"))
       .filter(col("__sig").isNotNull)
 
-  /** Thin (id, band, bsig) banded frame from a __sig minhash-array
-    * column — bit-identical to [[bandedSignatures]]' output (element_at
-    * yields the same LongType hash columns the aggregate produced, so
-    * the band hash chain is unchanged). */
-  private def bandedFromSig(enriched: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      val hs = (0 until rowsPerBand).map(r =>
-        element_at(col("__sig"), b * rowsPerBand + r + 1))
-      struct(lit(b).as("band"), xxhash64(hs: _*).as("bsig"))
-    }
-    enriched.select(col("id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("id"), col("bs.band"), col("bs.bsig"))
-  }
-
-  private def minHashOverGramsCore(
+  /** The MinHash LSH pipeline over per-doc gram arrays (id, __gs):
+    * signatures, the [[Banding]] census / sizing rule / cap /
+    * candidate join, then exact Jaccard on candidates from the
+    * sorted-distinct gram arrays. Returns (pairs, drop stats). */
+  private def minHashOverGrams(
       docGrams: DataFrame, threshold: Double,
       bands: Int, rowsPerBand: Int, maxBucketSize: Int,
-      minBandAgreements: Int,
-      wantStats: Boolean): (DataFrame, Option[DataFrame]) = {
+      minBandAgreements: Int): (DataFrame, DataFrame) = {
     require(minBandAgreements >= 1 && minBandAgreements <= bands,
       s"minBandAgreements must be in [1, $bands], got $minBandAgreements")
-    // ONE corpus-scale cache: (id, sorted-distinct grams, signature),
-    // all scan-local. The round-16 shape exploded grams to corpus-scale
-    // (id, gram) rows and re-aggregated them twice (signature min-agg,
-    // verify collect_list) — two full shuffles of data that never
-    // needed to leave its document. Same bytes cached (arrays vs rows),
-    // two shuffles and one aggregation machine fewer.
+    // ONE corpus-scale cache; the census fills it and every later
+    // stage reads it
     val enriched = enrichedGrams(docGrams, bands * rowsPerBand).cache()
-    val banded = bandedFromSig(enriched, bands, rowsPerBand)
-
-    // Plan-time sizing enforcement (the simHashNearDup discipline,
-    // round 16): one bucket-count aggregate — filling the enriched
-    // cache every later stage reads — measures the index BEFORE the
-    // quadratic candidate join is paid. It yields the sizing-rule
-    // inputs AND the skew-guard drop stats in the same pass. The
-    // bucket-count frame is kept (cached, bucket-cardinality-bounded)
-    // because the skew-guard filter below reuses it as an anti-join
-    // list — replacing the round-16 window count over the banded frame
-    // (one full sort saved; over-cap keys number at most
-    // totalRows / maxBucketSize, so the anti-join side is always the
-    // small one).
-    val bc = banded.groupBy("band", "bsig").agg(count(lit(1)).as("__n"))
-      .cache()
-    val m = bc.agg(
-      coalesce(sum(col("__n")), lit(0L)).as("rows"),
-      coalesce(sum(when(col("__n") > maxBucketSize, col("__n"))), lit(0L))
-        .as("over_rows"),
-      coalesce(sum(when(col("__n") > maxBucketSize, 1L)), lit(0L))
-        .as("over_groups"),
-      // n·(n−1) is even; shiftright halves it in exact long arithmetic
-      // (Column./ is double division)
-      coalesce(sum(when(col("__n") <= maxBucketSize,
-        shiftright(col("__n") * (col("__n") - 1), 1))), lit(0L))
-        .as("kept_mass"))
-      .head()
-    val (totalRows, overRows, overGroups, keptMass) =
-      (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3))
-    minHashSizingIssue(totalRows / bands, bands, rowsPerBand,
-        minBandAgreements, maxBucketSize, totalRows, overRows, keptMass)
-      .foreach {
-        case (true, msg)  => throw new IllegalArgumentException(msg)
-        case (false, msg) => log.warn(msg)
-      }
-    // skew-guard drops are loud on EVERY path now that the numbers are
-    // free (no-silent-caps rule); the WithStats variant additionally
-    // surfaces them as a frame
-    if (overGroups > 0) log.warn(
-      s"minhash LSH maxBucketSize=$maxBucketSize dropped $overGroups " +
-        s"bucket(s) spanning $overRows signature rows; near-dups " +
-        "colliding only there are not searched - raise the cap or " +
-        "re-band (graft.ProbeBanding prices the shapes)")
-    val stats = if (!wantStats) None else {
-      val spark = docGrams.sparkSession
-      Some(spark.range(1).select(lit(overGroups).as("n_groups_dropped"),
-        lit(overRows).as("n_rows_dropped")))
-    }
-
-    // drop pathological buckets (stop-shingle skew guard at scale) by
-    // anti-joining the over-cap bucket list measured above — identical
-    // keep-set to the round-16 per-bucket window count, minus its sort.
-    // The sizing aggregate already counted the over-cap buckets, so
-    // when there are NONE (the common healthy-corpus case) the
-    // anti-join is provably the identity and is skipped outright —
-    // one exchange + join stage fewer per call (guide §2.4).
-    val sized =
-      if (overGroups == 0L) banded
-      else banded.join(
-        bc.filter(col("__n") > maxBucketSize).select("band", "bsig"),
-        Seq("band", "bsig"), "left_anti")
-
-    // the self-join output is THIN (two longs per row) — the k-band
-    // agreement count folds it before anything wide (gram arrays)
-    // ships: candidates that collide in only one band are background
-    // at dense-similarity corpora and never reach the verify stage
-    // when minBandAgreements >= 2
-    val candBase = sized.as("a").join(sized.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-    val cand = if (minBandAgreements <= 1) candBase.distinct()
-      else candBase.groupBy("id_1", "id_2")
-        .agg(count(lit(1)).as("__k"))
-        .filter(col("__k") >= minBandAgreements).drop("__k")
-
-    // exact Jaccard on candidates: attach each side's sorted-distinct
-    // gram array straight from the enriched cache (the inner join IS
-    // the candidate restriction — the round-16 semi-join + per-doc
-    // re-distinct + collect_list re-aggregation are gone, the arrays
-    // already exist)
-    val inter = graft.functions.GraftFunctions
-      .sortedIntersectCount(docGrams.sparkSession, col("gs1"), col("gs2"))
-    val verifiedPlan = cand
-      .join(enriched.select(col("id").as("id_1"), col("__gs").as("gs1")),
-        Seq("id_1"))
-      .join(enriched.select(col("id").as("id_2"), col("__gs").as("gs2")),
-        Seq("id_2"))
-      .select(col("id_1"), col("id_2"),
-        inter.as("i"), size(col("gs1")).as("n1"), size(col("gs2")).as("n2"))
-      .select(col("id_1"), col("id_2"),
-        (col("i") / (col("n1") + col("n2") - col("i"))).as("jaccard"))
+    val (sized, census) = Banding.capped(
+      Banding.explodeBands(enriched, Banding.minhashBands(bands, rowsPerBand), "id"),
+      maxBucketSize, "minhash LSH", "signature rows",
+      sizing = c => minHashSizingIssue(c.rows / bands, bands, rowsPerBand,
+        minBandAgreements, maxBucketSize, c.rows, c.overRows, c.keptMass))
+    val gs = enriched.select(col("id"), col("__gs").as("gs"))
+    val verifiedPlan = jaccardFromGramSets(
+        Banding.candidates(sized, minBandAgreements), gs, gs)
       .filter(col("jaccard") >= threshold)
     // the registry-level Bench --explain sees only Scan ExistingRDD past the
     // checkpoint below — this mark is the real pre-checkpoint plan
     graft.core.PlanTrace.mark("minHashNearDup_verified", verifiedPlan)
-    val verified =
-      verifiedPlan.localCheckpoint() // materialize before releasing the caches below
-    bc.unpersist()
+    val verified = verifiedPlan.localCheckpoint() // materialize before releasing the cache
     enriched.unpersist()
-    (verified, stats)
-  }
-
-  /** Exact Jaccard for candidate pairs against a DISTINCT (id, s)
-    * unit table. Each candidate doc's unit set is aggregated once into
-    * a sorted long array; pairs join to their two arrays and the
-    * native SortedIntersectCount merge computes |A∩B| in codegen. The
-    * earlier formulation re-exploded every pair into (pair, gram) rows
-    * and counted matches with a second join — ~|pairs| x |grams/doc|
-    * intermediate rows (240M at sf0.1); here the shuffle is bounded by
-    * the candidate-doc count and the per-pair work is one O(|A|+|B|)
-    * merge. Array size is bounded by document length, not corpus size,
-    * so rows stay small at any scale. */
-  /** (id, band, bsig) rows of the banded MinHash signature over a
-    * hashed unit table (id, s) — the shared front half of the LSH
-    * pipeline and the persisted band index.
-    *
-    * One-pass signature: min over units of each seeded hash.
-    * Deliberately bands·rowsPerBand INDEPENDENT xxhash64 evaluations —
-    * the cheaper Kirsch-Mitzenmacher double-hashing derivation
-    * (h1 + j*h2) was tried and reverted: h_j linear in j makes the
-    * per-band argmin follow the lower envelope of lines across j, so
-    * band collisions correlate and banding recall collapses (a
-    * planted J=1/3 pair missed all 16 r=1 bands in spec). */
-  private[graft] def bandedSignatures(sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val hashAggs = (0 until numHashes).map(j => min(xxhash64(lit(j), col("s"))).as(s"h$j"))
-    val sig = sh.groupBy("id").agg(hashAggs.head, hashAggs.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), xxhash64(hs: _*).as("bsig"))
-    }
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("id"), col("bs.band"), col("bs.bsig"))
+    (verified, Banding.dropStats(docGrams.sparkSession, census))
   }
 
   /** Persist a MinHash band index for INCREMENTAL dedup — the
@@ -516,8 +321,6 @@ object Dedup {
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
       path: String, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 2): Unit = {
-    // scan-local per-doc arrays + signatures (the minHashOverGramsCore
-    // shape) — same rows written, no corpus-scale explode/re-aggregation
     val g = enrichedGrams(
       shingleArrays(df, idCol, textCol, shingleK), bands * rowsPerBand)
       .cache()
@@ -529,16 +332,14 @@ object Dedup {
     // deterministic bsig hash so file sizing follows the session's
     // shuffle parallelism instead of collapsing each band to a single
     // task at cluster scale.
-    val spark0 = df.sparkSession
-    val shuffleParts = spark0.conf.get("spark.sql.shuffle.partitions").toInt
-    val splits = math.max(1, shuffleParts / bands)
-    bandedFromSig(g, bands, rowsPerBand)
+    val spark = df.sparkSession
+    val splits = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt / bands)
+    Banding.explodeBands(g, Banding.minhashBands(bands, rowsPerBand), "id")
       .repartition(bands * splits, col("band"),
         pmod(xxhash64(col("bsig")), lit(splits)))
       .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
     g.select(col("id"), col("__gs").as("gs"))
       .write.mode("overwrite").parquet(s"$path/grams")
-    val spark = df.sparkSession
     import spark.implicits._
     Seq((shingleK, bands, rowsPerBand))
       .toDF("shingle_k", "bands", "rows_per_band")
@@ -547,48 +348,36 @@ object Dedup {
   }
 
   /** Verified near-dup pairs between a NEW batch and a persisted band
-    * index (id_1 = indexed doc, id_2 = new doc; ids must be disjoint
-    * from the indexed set). Only the new batch is shingled/hashed; the
-    * candidate join moves |new bands| + matching index buckets, and
-    * exact verification joins the stored gram arrays — incremental
-    * cost is proportional to the batch, not the corpus. The same
-    * `maxBucketSize` skew guard caps pathological buckets, counted
-    * over the combined (indexed + new) bucket population exactly like
-    * the batch pipeline — and the same plan-time sizing rule
-    * ([[minHashSizingIssue]]) runs on every call: fail-fast when the
+    * index (id_1 = indexed doc, id_2 = new doc). Only the new batch is
+    * shingled/hashed; the candidate join moves |new bands| + matching
+    * index buckets, and exact verification joins id_1 to the stored
+    * index gram arrays and id_2 to the new batch's — an id present on
+    * both sides still verifies each side against its own text.
+    * Incremental cost is proportional to the batch, not the corpus.
+    * The [[Banding]] census runs over the combined (indexed + new)
+    * bucket population, with kept candidate mass n_old·n_new per
+    * bucket, and feeds the same sizing rule as the batch path
+    * ([[minHashSizingIssue]], per NEW doc): fail-fast when the
     * over-cap buckets hold the majority of the combined index (the
     * low-diversity corpus-drift case, where the cap would silently
-    * discard most of the search space), warn at candidate saturation
-    * (measured as kept old×new pairs per new doc), and drop counts
-    * log unconditionally. */
+    * discard most of the search space), warn at candidate saturation,
+    * and drop counts log unconditionally. */
   def nearDupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, idCol: String, textCol: String, path: String,
       threshold: Double = 0.5, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 2, maxBucketSize: Int = 10000): DataFrame =
-    nearDupAgainstIndexCore(spark, newDocs, idCol, textCol, path,
-      threshold, shingleK, bands, rowsPerBand, maxBucketSize,
-      wantStats = false)._1
+    nearDupAgainstIndexWithStats(spark, newDocs, idCol, textCol, path,
+      threshold, shingleK, bands, rowsPerBand, maxBucketSize)._1
 
   /** [[nearDupAgainstIndex]] plus the `maxBucketSize` guard's one-row
     * (n_groups_dropped, n_rows_dropped) stats over the COMBINED
-    * (indexed + new) bucket population — collected eagerly from the
-    * banded frames (cheap: index bands are read, only the new batch is
-    * hashed) and logged when nonzero, same contract as
+    * (indexed + new) bucket population, same contract as
     * [[minHashNearDupWithStats]]. */
   def nearDupAgainstIndexWithStats(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, idCol: String, textCol: String, path: String,
       threshold: Double = 0.5, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 2,
-      maxBucketSize: Int = 10000): (DataFrame, DataFrame) =
-    nearDupAgainstIndexCore(spark, newDocs, idCol, textCol, path,
-      threshold, shingleK, bands, rowsPerBand, maxBucketSize,
-      wantStats = true) match { case (p, s) => (p, s.get) }
-
-  private def nearDupAgainstIndexCore(spark: org.apache.spark.sql.SparkSession,
-      newDocs: DataFrame, idCol: String, textCol: String, path: String,
-      threshold: Double, shingleK: Int, bands: Int,
-      rowsPerBand: Int, maxBucketSize: Int,
-      wantStats: Boolean): (DataFrame, Option[DataFrame]) = {
+      maxBucketSize: Int = 10000): (DataFrame, DataFrame) = {
     // validate the banding config against the index manifest: a
     // mismatched probe makes every bsig miss and silently returns
     // (almost) nothing. Pre-manifest indexes (no manifest/ dir) skip
@@ -605,128 +394,56 @@ object Dedup {
           s"rowsPerBand=$mr) but probed with ($shingleK, $bands, " +
           s"$rowsPerBand) — a mismatched probe finds no candidates")
     }
-    // scan-local per-doc arrays + signatures for the NEW batch (the
-    // minHashOverGramsCore shape — no explode/re-aggregation)
     val gNew = enrichedGrams(
       shingleArrays(newDocs, idCol, textCol, shingleK), bands * rowsPerBand)
       .cache()
-    val bNew = bandedFromSig(gNew, bands, rowsPerBand)
-    val bOld = spark.read.parquet(s"$path/bands")
     // cache the THIN combined banded frame (3 longs + flag per row):
-    // the sizing aggregate below and the bucket-size window both read
-    // it, so the new batch's signature aggregation and the index
-    // parquet scan each run exactly once.
-    val combined = bOld.withColumn("__new", lit(false))
-      .unionByName(bNew.withColumn("__new", lit(true)))
+    // the census and the candidate join both read it, so the new
+    // batch's signatures and the index parquet scan each run once
+    val combined = spark.read.parquet(s"$path/bands")
+      .withColumn("__new", lit(false))
+      .unionByName(Banding.explodeBands(gNew,
+        Banding.minhashBands(bands, rowsPerBand), "id").withColumn("__new", lit(true)))
       .cache()
-    // Plan-time sizing enforcement over the COMBINED (indexed + new)
-    // bucket population — the batch path's discipline on the
-    // corpus-growth path, where it matters MOST: a drifting corpus
-    // going low-diversity is exactly when the persisted index's
-    // buckets blow past the cap, and silently filtering them would
-    // drop the majority of the index from the candidate search. One
-    // bucket-count aggregate (filling the cache every later stage
-    // reads) yields the sizing-rule inputs AND the skew-guard drop
-    // stats; kept candidate mass is the true incremental form
-    // n_old·n_new per kept bucket (old-old pairs are never searched
-    // here), measured per NEW doc.
-    val bc = combined.groupBy("band", "bsig").agg(
-        count(lit(1)).as("__n"),
-        coalesce(sum(when(col("__new"), 1L)), lit(0L)).as("__nn"))
-      .cache() // sizing aggregate + the skew-guard anti-join list below
-    val m = bc
-      .agg(
-        coalesce(sum(col("__n")), lit(0L)).as("rows"),
-        coalesce(sum(when(col("__n") > maxBucketSize, col("__n"))), lit(0L))
-          .as("over_rows"),
-        coalesce(sum(when(col("__n") > maxBucketSize, 1L)), lit(0L))
-          .as("over_groups"),
-        coalesce(sum(when(col("__n") <= maxBucketSize,
-          (col("__n") - col("__nn")) * col("__nn"))), lit(0L))
-          .as("kept_mass"),
-        coalesce(sum(col("__nn")), lit(0L)).as("new_rows"))
-      .head()
-    val (totalRows, overRows, overGroups, keptMass, newRows) =
-      (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3), m.getLong(4))
-    minHashSizingIssue(newRows / bands, bands, rowsPerBand,
-        minBandAgreements = 1, maxBucketSize, totalRows, overRows, keptMass)
-      .foreach {
-        case (true, msg)  => throw new IllegalArgumentException(
-          s"[band-index probe at $path] $msg")
-        case (false, msg) => log.warn(s"[band-index probe at $path] $msg")
-      }
-    // skew-guard drops are loud on EVERY path (no-silent-caps rule);
-    // the WithStats variant additionally surfaces them as a frame
-    if (overGroups > 0) log.warn(
-      s"band-index probe maxBucketSize=$maxBucketSize dropped $overGroups " +
-        s"bucket(s) spanning $overRows signature rows (indexed + new " +
-        "combined); near-dups colliding only there are not searched")
-    val stats = if (!wantStats) None else
-      Some(spark.range(1).select(lit(overGroups).as("n_groups_dropped"),
-        lit(overRows).as("n_rows_dropped")))
-    // skew-guard filter as an anti-join against the over-cap bucket
-    // list measured above (identical keep-set to the per-bucket window
-    // count it replaces, minus its sort — the batch-path change,
-    // round 17). The explicit join-key repartition matters here: the
-    // old↔new join's two sides differ only by the __new filter ABOVE
-    // this point, so one shared exchange (ReuseExchange) feeds both —
-    // without it each side pays its own (band, bsig) shuffle. Explicit
-    // partition count opts out of AQE coalescing (the banded frame is
-    // doc-count-thin pre-join — the spread() lesson).
-    // When the sizing aggregate counted ZERO over-cap buckets (the
-    // common healthy-corpus case) the anti-join is provably the
-    // identity and is skipped outright — one exchange + join stage
-    // fewer per probe call (guide §2.4).
-    val capped =
-      if (overGroups == 0L) combined
-      else combined.join(
-        bc.filter(col("__n") > maxBucketSize).select("band", "bsig"),
-        Seq("band", "bsig"), "left_anti")
-    val sized = capped.repartition(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      col("band"), col("bsig"))
-    val cand = sized.filter(!col("__new")).as("a")
-      .join(sized.filter(col("__new")).as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2")).distinct()
-      .cache()
-    // the new batch's sorted-distinct gram arrays already exist in the
-    // enriched cache; the indexed side still semi-joins down to
-    // candidate ids before its (heavy-array) parquet read joins. No
-    // .distinct() on the key sides: left_semi already has at-most-once
-    // semantics, so the pre-aggregation bought nothing but a shuffle
-    // each (guide §2.4 — a distinct on data whose duplicates cannot
-    // affect the result).
-    val gsNew = gNew.select(col("id"), col("__gs").as("gs"))
-      .join(cand.select(col("id_2").as("id")), Seq("id"), "left_semi")
+    val where = s"[band-index probe at $path]"
+    val (sized, census) = Banding.capped(combined, maxBucketSize, where,
+      "signature rows (indexed + new combined)", newFlag = Some("__new"),
+      sizing = c => minHashSizingIssue(c.probeRows / bands, bands,
+          rowsPerBand, minBandAgreements = 1, maxBucketSize, c.rows,
+          c.overRows, c.keptMass)
+        .map { case (fatal, msg) => (fatal, s"$where $msg") })
+    val cand = Banding.candidates(sized, newFlag = Some("__new")).cache()
+    // both gram stores semi-join down to candidate ids before the
+    // pair joins (left_semi is at-most-once, no distinct needed)
     val gsOld = spark.read.parquet(s"$path/grams")
       .join(cand.select(col("id_1").as("id")), Seq("id"), "left_semi")
-    val verifiedPlan = jaccardFromGramSets(cand, gsOld.unionByName(gsNew))
+    val gsNew = gNew.select(col("id"), col("__gs").as("gs"))
+      .join(cand.select(col("id_2").as("id")), Seq("id"), "left_semi")
+    val verifiedPlan = jaccardFromGramSets(cand, gsOld, gsNew)
       .filter(col("jaccard") >= threshold)
     graft.core.PlanTrace.mark("nearDupAgainstIndex_verified", verifiedPlan)
-    val verified = verifiedPlan.localCheckpoint()
-    cand.unpersist()
-    bc.unpersist()
-    combined.unpersist()
-    gNew.unpersist()
-    (verified, stats)
+    val verified = verifiedPlan.localCheckpoint() // materialize before releasing the caches
+    Seq(cand, combined, gNew).foreach(_.unpersist())
+    (verified, Banding.dropStats(spark, census))
   }
 
-  private[graft] def exactJaccardOnPairs(pairs: DataFrame, sh: DataFrame): DataFrame =
-    jaccardFromGramSets(pairs, sh.groupBy("id")
-      .agg(sort_array(collect_list(col("s"))).as("gs")))
+  private[graft] def exactJaccardOnPairs(pairs: DataFrame, sh: DataFrame): DataFrame = {
+    val gs = sh.groupBy("id").agg(sort_array(collect_list(col("s"))).as("gs"))
+    jaccardFromGramSets(pairs, gs, gs)
+  }
 
-  /** The pair-join + merge-count over pre-aggregated (id, gs sorted
-    * array) gram sets — shared by the in-corpus verification path and
-    * the persisted-index incremental path (whose indexed side stores
-    * the arrays directly). */
-  private[graft] def jaccardFromGramSets(pairs: DataFrame, gramSets: DataFrame): DataFrame = {
-    val spark = gramSets.sparkSession
+  /** Exact Jaccard for (id_1, id_2) pairs: each side joins its (id, gs
+    * sorted-distinct array) gram set — `gs1` for id_1, `gs2` for id_2
+    * (the same frame for a self-join) — and the native
+    * SortedIntersectCount merge computes |A∩B| in codegen, one
+    * O(|A|+|B|) pass per pair with no per-gram rows. */
+  private[graft] def jaccardFromGramSets(pairs: DataFrame, gs1: DataFrame,
+      gs2: DataFrame): DataFrame = {
     val inter = graft.functions.GraftFunctions
-      .sortedIntersectCount(spark, col("gs1"), col("gs2"))
+      .sortedIntersectCount(pairs.sparkSession, col("gs1"), col("gs2"))
     pairs
-      .join(gramSets.select(col("id").as("id_1"), col("gs").as("gs1")), Seq("id_1"))
-      .join(gramSets.select(col("id").as("id_2"), col("gs").as("gs2")), Seq("id_2"))
+      .join(gs1.select(col("id").as("id_1"), col("gs").as("gs1")), Seq("id_1"))
+      .join(gs2.select(col("id").as("id_2"), col("gs").as("gs2")), Seq("id_2"))
       .select(col("id_1"), col("id_2"),
         inter.as("i"), size(col("gs1")).as("n1"), size(col("gs2")).as("n2"))
       .select(col("id_1"), col("id_2"),
@@ -789,9 +506,9 @@ object Dedup {
     * verified pairs, 283 s). Per-band expected bucket size is
     * corpus / 2^(bits/(maxHamming+1)) — keep it answer-scale.
     *
-    * The rule is ENFORCED at plan time from a cheap corpus count (one
-    * pass over the signature frame, which populates the cache banding
-    * reads anyway): when even the UNIFORM candidate mass
+    * The rule is ENFORCED at plan time from the bucket census (one
+    * aggregate over the signature frame, which populates the cache
+    * banding reads anyway): when even the UNIFORM candidate mass
     * nBands * n² / 2^(bandBits+1) exceeds 100·n — i.e. the average
     * doc would meet 100+ banding candidates before skew — a warning
     * names the width that fits; when the EXPECTED bucket
@@ -802,17 +519,43 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bits: Int = 32,
       maxBucketSize: Int = 10000): DataFrame =
-    simHashNearDupCore(df, idCol, textCol, maxHamming, bits,
+    simHashNearDupWithStats(df, idCol, textCol, maxHamming, bits,
       maxBucketSize)._1
 
   /** [[simHashNearDup]] plus the band-bucket guard's one-row
-    * (n_groups_dropped, n_rows_dropped) stats frame (lazy; evaluating
-    * it re-runs only the signature + bucket-size aggregate). */
+    * (n_groups_dropped, n_rows_dropped) stats frame, read off the
+    * bucket census. */
   def simHashNearDupWithStats(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bits: Int = 32,
-      maxBucketSize: Int = 10000): (DataFrame, DataFrame) =
-    simHashNearDupCore(df, idCol, textCol, maxHamming, bits, maxBucketSize)
+      maxBucketSize: Int = 10000): (DataFrame, DataFrame) = {
+    val nBands = maxHamming + 1
+    val bandBits = bits / nBands
+    val sig = simHash(df, idCol, textCol, bits).cache()
+    val bandKeys = array((0 until nBands).map { b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(col("simhash"), b * bandBits)
+          .mod(1L << bandBits).as("bsig"))
+    }: _*)
+    // the census fills the cache every later stage reads, and the
+    // sizing rule (n = rows / nBands) fires BEFORE the quadratic
+    // candidate join is paid
+    val (sized, census) = Banding.capped(
+      Banding.explodeBands(sig, bandKeys, "id", "simhash"), maxBucketSize,
+      "simhash LSH", "signature rows",
+      sizing = c => simHashSizingIssue(c.rows / nBands, maxHamming, bits,
+        maxBucketSize))
+    // verify-then-dedup: the signatures ride the candidate join, so a
+    // pair's hamming is one xor+popcount per shared band and the
+    // distinct runs on survivors only
+    val out = Banding.pairs(sized, carry = Seq("simhash"))
+      .select(col("id_1"), col("id_2"),
+        hamming(col("simhash_1"), col("simhash_2")).as("hamming"))
+      .filter(col("hamming") <= maxHamming).distinct()
+      .localCheckpoint()
+    sig.unpersist()
+    (out, Banding.dropStats(df.sparkSession, census))
+  }
 
   /** The sizing-rule check, factored pure for spec-ability. None = the
     * width fits. Some((fatal, msg)): fatal when the EXPECTED band
@@ -849,56 +592,6 @@ object Dedup {
         s"undersized for this corpus; bits=$fitBits fits " +
         s"(rule: corpus / 2^(bits/(maxHamming+1)) answer-scale)"))
     else None
-  }
-
-  private def simHashNearDupCore(
-      df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, bits: Int,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
-    val nBands = maxHamming + 1
-    val bandBits = bits / nBands
-    val sig = simHash(df, idCol, textCol, bits).cache()
-    // Plan-time sizing enforcement (scaladoc rule; sf10-measured). The
-    // count is one pass that fills the cache every later stage reads,
-    // so the check is effectively free — and it fires BEFORE the
-    // quadratic candidate join is paid.
-    simHashSizingIssue(sig.count(), maxHamming, bits, maxBucketSize)
-      .foreach {
-        case (true, msg)  => throw new IllegalArgumentException(msg)
-        case (false, msg) => log.warn(msg)
-      }
-    val bandCols = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("simhash"), b * bandBits)
-          .mod(1L << bandBits).as("bsig"))
-    }
-    val banded = sig.select(col("id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("id"), col("bs.band"), col("bs.bsig"))
-    // band-bucket skew guard: anti-join against the over-cap bucket
-    // list (the minHashOverGramsCore shape since round 17 — identical
-    // keep-set to the per-bucket window count it replaces, minus its
-    // sort; over-cap keys number at most rows / maxBucketSize). The
-    // `spread` pin matters here: the banded frame is doc-count-thin, so
-    // AQE would coalesce its exchange to one task and the whole
-    // quadratic candidate join + hamming verify would serialize (the
-    // fuzzy-join lesson at sized-join sites, PLANS round-11).
-    val over = banded.groupBy("band", "bsig").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketSize).select("band", "bsig")
-    val sized = spread(banded.join(over, Seq("band", "bsig"), "left_anti"), "id")
-    val cand = sized.as("a").join(sized.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2")).distinct()
-    val s1 = sig.select(col("id").as("id_1"), col("simhash").as("h1"))
-    val s2 = sig.select(col("id").as("id_2"), col("simhash").as("h2"))
-    val out = cand.join(s1, Seq("id_1")).join(s2, Seq("id_2"))
-      .select(col("id_1"), col("id_2"), hamming(col("h1"), col("h2")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .localCheckpoint()
-    sig.unpersist()
-    (out, dropStats(
-      banded.groupBy("band", "bsig").agg(count(lit(1)).as("__sz")),
-      "__sz", maxBucketSize))
   }
 
   /** Duplicate clusters from near-dup pairs: connected components via
@@ -985,25 +678,19 @@ object Dedup {
   def embeddingNearDup(
       df: DataFrame, idCol: String, vecCol: String, blockCol: String,
       threshold: Double, maxBlockSize: Int = 10000): DataFrame =
-    embeddingNearDupCore(df, idCol, vecCol, blockCol, threshold,
+    embeddingNearDupWithStats(df, idCol, vecCol, blockCol, threshold,
       maxBlockSize)._1
 
   /** [[embeddingNearDup]] plus the block guard's one-row
     * (n_groups_dropped, n_rows_dropped) stats frame (lazy). */
   def embeddingNearDupWithStats(
       df: DataFrame, idCol: String, vecCol: String, blockCol: String,
-      threshold: Double, maxBlockSize: Int = 10000): (DataFrame, DataFrame) =
-    embeddingNearDupCore(df, idCol, vecCol, blockCol, threshold,
-      maxBlockSize)
-
-  private def embeddingNearDupCore(
-      df: DataFrame, idCol: String, vecCol: String, blockCol: String,
-      threshold: Double, maxBlockSize: Int): (DataFrame, DataFrame) = {
+      threshold: Double, maxBlockSize: Int = 10000): (DataFrame, DataFrame) = {
     val keyed = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
       col(vecCol).as("vec"))
     // block skew guard (the fuzzyJoinBlocked contract): one dominant
     // block value would send the self-join quadratic — cap it, drops
-    // surfaced through the WithStats variant
+    // surfaced through the stats frame
     val v = spread(keyed.withColumn("__n",
         count(lit(1)).over(Window.partitionBy("blk")))
       .filter(col("__n") <= maxBlockSize).drop("__n"), "id")
@@ -1026,64 +713,40 @@ object Dedup {
     * (miss probability (1-(1-theta/pi)^planes)^tables for angle theta),
     * exact in precision — the scale path when no natural blocking key
     * exists. Buckets over `maxBucketSize` are dropped (the LSH skew
-    * guard the minhash pipelines already carry — a degenerate bucket,
-    * e.g. a mass of identical or zero vectors landing one SRP cell,
-    * must not go quadratic); [[embeddingNearDupLshWithStats]] surfaces
-    * the drop counts. */
+    * guard — a degenerate bucket, e.g. a mass of identical or zero
+    * vectors landing one SRP cell, must not go quadratic); there is no
+    * fatal sizing rule. [[embeddingNearDupLshWithStats]] surfaces the
+    * drop counts. */
   def embeddingNearDupLsh(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
       planes: Int = 12, tables: Int = 4, seed: Long = 7919L,
       maxBucketSize: Int = 10000): DataFrame =
-    embeddingNearDupLshCore(df, idCol, vecCol, threshold, planes,
+    embeddingNearDupLshWithStats(df, idCol, vecCol, threshold, planes,
       tables, seed, maxBucketSize)._1
 
   /** [[embeddingNearDupLsh]] plus the guard's one-row
     * (n_groups_dropped, n_rows_dropped) stats frame — dropped
-    * (table, bucket) cells and the id × table memberships inside them
-    * (lazy; evaluating it re-runs only the projection + bucket-size
-    * aggregate). */
+    * (table, bucket) cells and the id × table memberships inside them. */
   def embeddingNearDupLshWithStats(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
       planes: Int = 12, tables: Int = 4, seed: Long = 7919L,
-      maxBucketSize: Int = 10000): (DataFrame, DataFrame) =
-    embeddingNearDupLshCore(df, idCol, vecCol, threshold, planes,
-      tables, seed, maxBucketSize)
-
-  private def embeddingNearDupLshCore(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      planes: Int, tables: Int, seed: Long,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
+      maxBucketSize: Int = 10000): (DataFrame, DataFrame) = {
     val v = df.select(col(idCol).as("id"),
       transform(col(vecCol), _.cast("double")).as("vec"))
-    val tcols = (0 until tables).map(t =>
-      struct(lit(t).as("tbl"),
-        graft.sim.Similarity.srpBucket(col("vec"), planes, seed * (t + 1)).as("bkt")))
-    val bucketed0 = v.select(col("id"), col("vec"),
-        explode(array(tcols: _*)).as("tb"))
-      .select(col("id"), col("vec"), col("tb.tbl"), col("tb.bkt"))
-    // cap via a window count (the minhash guard's shape): one exchange
-    // keyed by the bucket, no join-back, and the SRP projection is
-    // evaluated once — an aggregate + re-join here would re-run the
-    // per-row hashing for the probe side and add a shuffle to the
-    // default path
-    val bucketed = spread(bucketed0.withColumn("__sz",
-        count(lit(1)).over(Window.partitionBy("tbl", "bkt")))
-      .filter(col("__sz") <= maxBucketSize).drop("__sz"), "id")
-    val cand = bucketed.as("a").join(bucketed.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"),
-        col("a.vec").as("v1"), col("b.vec").as("v2"))
-      .dropDuplicates("id_1", "id_2")
-    // stats are a separate lazy aggregate (evaluating it re-runs only
-    // the projection + bucket-size count, per the WithStats contract)
-    val bucketSizes = bucketed0.groupBy("tbl", "bkt")
-      .agg(count(lit(1)).as("__sz"))
-    (cand.select(col("id_1"), col("id_2"),
+    val bandKeys = array((0 until tables).map(t =>
+      struct(lit(t).as("band"),
+        graft.sim.Similarity.srpBucket(col("vec"), planes, seed * (t + 1)).as("bsig"))): _*)
+    // lazily checkpointed: the census evaluates the SRP projection once
+    // and the candidate join reads the stored rows
+    val banded = Banding.explodeBands(v, bandKeys, "id", "vec").localCheckpoint(false)
+    val (sized, census) = Banding.capped(banded, maxBucketSize,
+      "embedding SRP-LSH", "table memberships")
+    (Banding.pairs(sized, carry = Seq("vec")).dropDuplicates("id_1", "id_2")
+      .select(col("id_1"), col("id_2"),
         graft.functions.GraftFunctions.cosineSim(df.sparkSession,
-          col("v1"), col("v2")).as("cosine"))
+          col("vec_1"), col("vec_2")).as("cosine"))
       .filter(col("cosine") >= threshold),
-      dropStats(bucketSizes, "__sz", maxBucketSize))
+      Banding.dropStats(df.sparkSession, census))
   }
 
   /** Canonical-member selection: each cluster keeps its best-scoring
@@ -1127,7 +790,7 @@ object Dedup {
     // expensive upstream (e.g. an image-decode dHash) computes once
     val h = hashedProjection(df, idCol, hashCol, hashBits)
       .localCheckpoint(false)
-    expandPairsCore(h,
+    expandPairs(h,
       hammingHashPairs(h, "__h", maxDistance, bands, hashBits,
         maxBucketSize))
   }
@@ -1150,85 +813,60 @@ object Dedup {
   def hammingHashPairs(df: DataFrame, hashCol: String,
       maxDistance: Int, bands: Int = 8, hashBits: Int = 64,
       maxBucketSize: Int = 10000): DataFrame =
-    hammingHashPairsCore(df, hashCol, maxDistance, bands, hashBits,
+    hammingHashPairsWithStats(df, hashCol, maxDistance, bands, hashBits,
       maxBucketSize)._1
 
   /** [[hammingHashPairs]] plus the `maxBucketSize` guard's drop stats:
     * a one-row (n_groups_dropped, n_rows_dropped) frame counting
     * dropped (band, value) buckets and the DISTINCT-HASH band
-    * memberships inside them. Lazy, and derived from the same
-    * checkpointed distinct-hash projection as the pair result, so
-    * evaluating it re-runs only the banding aggregate — identical-hash
-    * (distance-0) pairs are never affected by the cap (see above). */
+    * memberships inside them, read off the bucket census —
+    * identical-hash (distance-0) pairs are never affected by the cap
+    * (see above). There is no fatal sizing rule. */
   def hammingHashPairsWithStats(df: DataFrame, hashCol: String,
       maxDistance: Int, bands: Int = 8, hashBits: Int = 64,
-      maxBucketSize: Int = 10000): (DataFrame, DataFrame) =
-    hammingHashPairsCore(df, hashCol, maxDistance, bands, hashBits,
-      maxBucketSize)
-
-  private def hammingHashPairsCore(df: DataFrame, hashCol: String,
-      maxDistance: Int, bands: Int, hashBits: Int,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
+      maxBucketSize: Int = 10000): (DataFrame, DataFrame) = {
     require(bands > maxDistance,
       s"pigeonhole needs bands > maxDistance ($bands <= $maxDistance)")
     require(hashBits == 64 && hashBits % bands == 0,
       s"64-bit hashes only (two conv halves), split evenly into $bands bands")
     val bandLen = hashBits / bands
-    val h = df.select(col(hashCol).as("__h"))
-      .filter(col("__h").isNotNull && length(col("__h")) === hashBits)
     // Canonicalize BEFORE banding (the exact-dedup-before-MinHash
     // trick): perceptual hashes collapse heavily — identical images
     // share a hash — so the candidate join runs over DISTINCT hashes
-    // only and the result expands back through group membership.
-    // Bucket cost drops from Σ(docs-per-bucket)² to Σ(hashes-per-
-    // bucket)², which on near-dup-heavy corpora is orders of
-    // magnitude; the expansion back to ids ([[hammingExpandPairs]])
-    // is output-bound, never larger than the answer itself.
+    // only (the hash is the banding id) and the result expands back
+    // through group membership. Bucket cost drops from
+    // Σ(docs-per-bucket)² to Σ(hashes-per-bucket)², which on
+    // near-dup-heavy corpora is orders of magnitude; the expansion
+    // back to ids ([[hammingExpandPairs]]) is output-bound.
     // Parse each DISTINCT hash's two 32-bit halves to longs ONCE,
     // before banding: the candidate join's verify is then two long
     // xor+popcounts per pair instead of four conv(substring(...))
-    // string parses — at band-bucket saturation (the 8-bit band space
-    // holds only 256 values, so candidate pairs grow ~N²/256 per
-    // band) the per-pair constant is the whole cost. Measured at the
-    // sf1 rehearsal: the string-parse verify ran ~8 min/pass; the
-    // long form with verify-before-dedup is ~10× cheaper (see
-    // PLANS.md round-11 sf1 section).
-    val reps = spread(h.select("__h").distinct()
-      .withColumn("__p1", conv(substring(col("__h"), 1, 32), 2, 10)
-        .cast("long"))
-      .withColumn("__p2", conv(substring(col("__h"), 33, 32), 2, 10)
-        .cast("long")), "__h")
+    // string parses — at band-bucket saturation the per-pair constant
+    // is the whole cost (the sf1 rehearsal measured the string-parse
+    // verify ~10× slower; PLANS.md round-11 sf1 section).
+    val reps = hashedProjection(df, hashCol, hashCol, hashBits).select("id").distinct()
+      .withColumn("hi", conv(substring(col("id"), 1, 32), 2, 10).cast("long"))
+      .withColumn("lo", conv(substring(col("id"), 33, 32), 2, 10).cast("long"))
       .localCheckpoint(false)
-    val banded = reps.select(col("__h"), col("__p1"), col("__p2"),
-        explode(array((0 until bands).map(i =>
-          struct(lit(i).as("b"),
-            substring(col("__h"), i * bandLen + 1, bandLen).as("v"))): _*))
-          .as("__bv"))
-      .select(col("__h"), col("__p1"), col("__p2"),
-        col("__bv.b"), col("__bv.v"))
-    val bucketSizes = banded.groupBy("b", "v")
-      .agg(count(lit(1)).as("__sz"))
-    val sized = banded.join(
-      bucketSizes.filter(col("__sz") <= maxBucketSize).select("b", "v"),
-      Seq("b", "v"))
+    val bandKeys = array((0 until bands).map(i =>
+      struct(lit(i).as("band"),
+        substring(col("id"), i * bandLen + 1, bandLen).as("bsig"))): _*)
+    val (sized, census) = Banding.capped(
+      Banding.explodeBands(reps, bandKeys, "id", "hi", "lo"), maxBucketSize,
+      "hamming LSH", "distinct-hash rows")
     // near pairs among distinct hashes (distance >= 1 by construction).
-    // Verify-then-dedup, not dedup-then-verify: a pair surfaces once
-    // per shared band (≤ bands duplicates), and the long-xor verify is
-    // far cheaper per row than a hash-aggregate over the full
-    // candidate stream — so the dedup runs on the near-pair SURVIVORS
-    // (output-scale), never the candidate volume.
-    val hashPairs = sized.as("x").join(sized.as("y"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.__h") < col("y.__h"))
-      .select(col("x.__h").as("__ha"), col("y.__h").as("__hb"),
-        (bit_count(col("x.__p1").bitwiseXOR(col("y.__p1"))) +
-          bit_count(col("x.__p2").bitwiseXOR(col("y.__p2"))))
+    // Verify-then-dedup: a pair surfaces once per shared band (≤ bands
+    // duplicates), and the long-xor verify is far cheaper per row than
+    // a hash-aggregate over the full candidate stream — so the dedup
+    // runs on the near-pair SURVIVORS (output-scale).
+    (Banding.pairs(sized, carry = Seq("hi", "lo"))
+      .select(col("id_1").as("hash_1"), col("id_2").as("hash_2"),
+        (bit_count(col("hi_1").bitwiseXOR(col("hi_2"))) +
+          bit_count(col("lo_1").bitwiseXOR(col("lo_2"))))
           .cast("int").as("hamming"))
       .filter(col("hamming") <= maxDistance)
-      .dropDuplicates("__ha", "__hb")
-    (hashPairs.select(col("__ha").as("hash_1"), col("__hb").as("hash_2"),
-      col("hamming")),
-      dropStats(bucketSizes, "__sz", maxBucketSize))
+      .dropDuplicates("hash_1", "hash_2"),
+      Banding.dropStats(df.sparkSession, census))
   }
 
   /** Expand distinct-hash near pairs (from [[hammingHashPairs]]) into
@@ -1237,13 +875,13 @@ object Dedup {
     * Emits (id_1, id_2, hamming) with id_1 < id_2. */
   def hammingExpandPairs(df: DataFrame, idCol: String, hashCol: String,
       hashPairs: DataFrame, hashBits: Int = 64): DataFrame =
-    expandPairsCore(
+    expandPairs(
       hashedProjection(df, idCol, hashCol, hashBits)
         .localCheckpoint(false), // read by the two expansions below
       hashPairs)
 
   /** Expansion over an already-checkpointed (id, __h) projection. */
-  private def expandPairsCore(h: DataFrame,
+  private def expandPairs(h: DataFrame,
       hashPairs: DataFrame): DataFrame = {
     val cross = hashPairs
       .join(h.select(col("__h").as("hash_1"), col("id").as("__ia")),
@@ -1276,8 +914,7 @@ object Dedup {
   def hammingClusters(df: DataFrame, idCol: String, hashCol: String,
       hashPairs: DataFrame, hashBits: Int = 64,
       maxIter: Int = 20): DataFrame = {
-    val h = df.select(col(idCol).as("id"), col(hashCol).as("__h"))
-      .filter(col("__h").isNotNull && length(col("__h")) === hashBits)
+    val h = hashedProjection(df, idCol, hashCol, hashBits)
       .localCheckpoint(false) // read by membership counts and mapping
     val hashCC = duplicateClusters(
         hashPairs.select(col("hash_1").as("id_1"), col("hash_2").as("id_2")),

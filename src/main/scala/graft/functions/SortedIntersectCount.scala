@@ -59,24 +59,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     case _ => false
   })
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements(); val ny = y.numElements()
-    var i = 0; var j = 0; var c = 0L
-    val checkNulls = mayBeNull
-    while (i < nx && j < ny) {
-      if (checkNulls && x.isNullAt(i)) i += 1
-      else if (checkNulls && y.isNullAt(j)) j += 1
-      else {
-        val xi = x.getLong(i); val yj = y.getLong(j)
-        if (xi < yj) i += 1
-        else if (xi > yj) j += 1
-        else { c += 1; i += 1; j += 1 }
-      }
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.count(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], mayBeNull)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -108,4 +93,25 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "sorted_intersect_count"
+}
+
+object SortedIntersectCount {
+  /** The interpreted merge pass: |x ∩ y| for sorted arrays, skipping
+    * null elements when `checkNulls`. Also the streaming verifier's
+    * kernel (over `ArrayData.toArrayData` of its state arrays). */
+  def count(x: ArrayData, y: ArrayData, checkNulls: Boolean): Long = {
+    val nx = x.numElements(); val ny = y.numElements()
+    var i = 0; var j = 0; var c = 0L
+    while (i < nx && j < ny) {
+      if (checkNulls && x.isNullAt(i)) i += 1
+      else if (checkNulls && y.isNullAt(j)) j += 1
+      else {
+        val xi = x.getLong(i); val yj = y.getLong(j)
+        if (xi < yj) i += 1
+        else if (xi > yj) j += 1
+        else { c += 1; i += 1; j += 1 }
+      }
+    }
+    c
+  }
 }

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.dedup.Banding
 
 /** Streaming MinHash near-duplicate detection: the LSH banding stage
   * of Dedup.minHashNearDup as an incremental operator. Each arriving
@@ -17,18 +20,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * closes the loop: its bucket state additionally carries each
   * document's sorted distinct gram array — exactly the inputs the
   * batch verifier joins for — so the exact Jaccard is computed AT
-  * EMISSION with a local sorted-merge (the same kernel as the native
-  * sorted_intersect_count), and only pairs at or above the threshold
-  * leave the operator. No second stateful join, no cross-query race
+  * EMISSION with the sorted_intersect_count merge, and only pairs at
+  * or above the threshold leave the operator. No second stateful join, no cross-query race
   * against a gram store. The state cost is the gram arrays themselves,
   * bounded per bucket by maxBucketSize × document length; a deployment
   * with huge documents would trade this for a foreachBatch join
   * against an external gram table.
   *
-  * Bucket cap (stop-shingle skew guard): the batch path DROPS any
-  * bucket that exceeds `maxBucketSize` outright. Mirrored here: a
-  * bucket that grows past the cap clears its state, emits nothing
-  * further, retracts any pairs buffered within the same group
+  * Both operators run ONE bucket-state machine, differing only in the
+  * per-pair emit. Bucket cap (stop-shingle skew guard): the batch path
+  * DROPS any bucket that exceeds `maxBucketSize` outright. Mirrored
+  * here: a bucket that grows past the cap clears its state, emits
+  * nothing further, retracts any pairs buffered within the same group
   * call, and WARNS once at the crossing (the batch path's loud-drop
   * contract; a streaming deployment watches the log rate as its
   * recall-health signal) — so a static (batch-mode) run of this
@@ -39,113 +42,103 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * runs on a static frame (state starts empty per group), which the
   * spec uses to assert stream == batch parity.
   *
+  * Ids must be integral (byte/short/int/long): the state compares ids
+  * as longs, so a cast from a fractional or string id would merge
+  * distinct documents and silently drop their pairs.
+  *
   * A production deployment would add a GroupStateTimeout tied to the
   * ingestion watermark to age buckets out.
   */
 object StreamingDedup {
 
-  // executor-side (inside the state functions): resolved lazily per
+  // executor-side (inside the state function): resolved lazily per
   // JVM so the object serializes without dragging a logger along
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger("graft.streaming.dedup")
 
-  final case class BandRow(band: Int, bsig: Long, id: Long)
   final case class CandPair(id_1: Long, id_2: Long, band: Int)
-  /** Bucket state: `saturated` buckets have crossed maxBucketSize and
-    * stay permanently dropped (ids cleared — bounded memory). */
-  final case class Bucket(saturated: Boolean, ids: List[Long])
-
-  final case class BandDoc(band: Int, bsig: Long, id: Long, gs: Array[Long])
   final case class VerifiedPair(id_1: Long, id_2: Long, band: Int, jaccard: Double)
+  final case class BandDoc(band: Int, bsig: Long, id: Long, gs: Array[Long])
   final case class DocEntry(id: Long, gs: Array[Long])
-  final case class VBucket(saturated: Boolean, docs: List[DocEntry])
+  /** Bucket state: `saturated` buckets have crossed maxBucketSize and
+    * stay permanently dropped (docs cleared — bounded memory). */
+  final case class Bucket(saturated: Boolean, docs: List[DocEntry])
 
-  /** |A ∩ B| for sorted long arrays — the sorted_intersect_count merge,
-    * driver/executor-local flavor for use inside the state function. */
-  private def sortedIntersect(a: Array[Long], b: Array[Long]): Long = {
-    var i = 0; var j = 0; var c = 0L
-    while (i < a.length && j < b.length) {
-      if (a(i) < b(j)) i += 1
-      else if (a(i) > b(j)) j += 1
-      else { c += 1; i += 1; j += 1 }
-    }
-    c
+  /** One (band, bsig, id, gs) row per doc × band: the batch pipeline's
+    * per-row signature and band keys ([[Banding.minhashBands]], so the
+    * same bsig values), with the doc's sorted distinct gram array when
+    * `withGrams` (empty otherwise — the candidate operator never
+    * verifies). The signature is materialized in its own projection:
+    * the band structs reference it bands×rowsPerBand times, and
+    * CollapseProject refuses to inline a non-cheap multi-referenced
+    * expression, so it computes once per row. */
+  private def banded(spark: SparkSession, docs: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, bands: Int, rowsPerBand: Int,
+      withGrams: Boolean): Dataset[BandDoc] = {
+    import spark.implicits._
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"StreamingDedup: id column '$idCol' must be an integral type, got " +
+        s"${idType.simpleString} (a cast to long would merge distinct ids)")
+    val g = docs.select(col(idCol).cast("long").as("id"),
+        graft.functions.GraftFunctions.hashedShingles(spark, col(textCol),
+          shingleK).as("__g"))
+      .filter(size(col("__g")) > 0)
+      .select(col("id"),
+        (if (withGrams) array_sort(array_distinct(col("__g"))) // set semantics, like the batch verifier
+          else typedLit(Array.empty[Long])).as("gs"),
+        graft.functions.GraftFunctions.minhashSignature(spark, col("__g"),
+          bands * rowsPerBand).as("__sig"))
+    Banding.explodeBands(g, Banding.minhashBands(bands, rowsPerBand), "id", "gs").as[BandDoc]
   }
 
-  /** Per-row banded signature columns, identical to the batch
-    * pipeline's seeded hashes (same seeds, same band hash). The
-    * signature rides the native minhash_signature expression since
-    * round 17 — bit-identical to the interpreted
-    * `array_min(transform(__g, g -> xxhash64(lit(j), g)))` per-row form
-    * it replaced (the FunctionsSpec parity pin), one array pass per doc
-    * instead of bands×rowsPerBand interpreted lambda walks. */
-  private def bandStructs(bands: Int,
-      rowsPerBand: Int): Seq[org.apache.spark.sql.Column] =
-    (0 until bands).map { b =>
-      val hs = (0 until rowsPerBand).map(r =>
-        element_at(col("__sig"), b * rowsPerBand + r + 1))
-      struct(lit(b).as("band"), xxhash64(hs: _*).as("bsig"))
-    }
-
-  /** The per-row signature column, materialized in its OWN projection
-    * at every call site: the band structs reference it
-    * bands×rowsPerBand times, and CollapseProject refuses to inline a
-    * non-cheap multi-referenced expression — so the signature computes
-    * once per row, never once per element_at. */
-  private def sigCol(spark: SparkSession, bands: Int, rowsPerBand: Int) =
-    graft.functions.GraftFunctions
-      .minhashSignature(spark, col("__g"), bands * rowsPerBand)
+  /** The bucket-state machine: per (band, bsig) the docs seen so far;
+    * each new doc meets every earlier one through `emit`. A bucket that
+    * grows past the cap clears its state, retracts this call's
+    * buffered pairs and warns once, at the saturation crossing. */
+  private def bucketPairs[O: Encoder](spark: SparkSession,
+      rows: Dataset[BandDoc], maxBucketSize: Int, what: String)(
+      emit: (Int, DocEntry, DocEntry) => Option[O]): Dataset[O] = {
+    import spark.implicits._
+    rows.groupByKey(r => (r.band, r.bsig))
+      .flatMapGroupsWithState[Bucket, O](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        case ((band, _), docs, state: GroupState[Bucket]) =>
+          var bucket = state.getOption.getOrElse(Bucket(saturated = false, Nil))
+          var nSeen = bucket.docs.size
+          val out = scala.collection.mutable.ListBuffer.empty[O]
+          docs.foreach { r =>
+            if (!bucket.saturated && !bucket.docs.exists(_.id == r.id)) {
+              if (nSeen + 1 > maxBucketSize) {
+                log.warn(s"$what bucket (band=$band) crossed " +
+                  s"maxBucketSize=$maxBucketSize and is permanently " +
+                  "dropped; near-dups colliding only there are not " +
+                  "searched - raise the cap or re-band " +
+                  "(graft.ProbeBanding prices the shapes)")
+                bucket = Bucket(saturated = true, Nil)
+                out.clear()
+              } else {
+                val d = DocEntry(r.id, r.gs)
+                bucket.docs.foreach(p => out ++= emit(band, p, d))
+                bucket = Bucket(saturated = false, d :: bucket.docs)
+                nSeen += 1
+              }
+            }
+          }
+          state.update(bucket)
+          out.iterator
+      }
+  }
 
   def nearDupCandidates(spark: SparkSession, docs: DataFrame,
       idCol: String, textCol: String, shingleK: Int = 3,
       bands: Int = 16, rowsPerBand: Int = 2,
       maxBucketSize: Int = 10000): Dataset[CandPair] = {
     import spark.implicits._
-    val grams = graft.functions.GraftFunctions
-      .hashedShingles(spark, col(textCol), shingleK)
-    val banded = docs
-      .select(col(idCol).cast("long").as("id"), grams.as("__g"))
-      .filter(size(col("__g")) > 0)
-      .select(col("id"), sigCol(spark, bands, rowsPerBand).as("__sig"))
-      .select(col("id"), explode(array(bandStructs(bands, rowsPerBand): _*)).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.bsig").as("bsig"), col("id"))
-      .as[BandRow]
-    banded
-      .groupByKey(r => (r.band, r.bsig))
-      .flatMapGroupsWithState[Bucket, CandPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((band, _), rows, state: GroupState[Bucket]) =>
-          var bucket = state.getOption.getOrElse(Bucket(saturated = false, Nil))
-          var seen = bucket.ids
-          var nSeen = seen.size
-          val out = scala.collection.mutable.ListBuffer.empty[CandPair]
-          rows.foreach { r =>
-            if (!bucket.saturated && !seen.contains(r.id)) {
-              if (nSeen + 1 > maxBucketSize) {
-                // mirror the batch drop: the whole bucket is void —
-                // clear state, retract this call's buffered pairs.
-                // Loud like every other cap (no-silent-caps rule):
-                // fires once per bucket, at the saturation crossing.
-                log.warn(s"streaming minhash bucket (band=$band) " +
-                  s"crossed maxBucketSize=$maxBucketSize and is " +
-                  "permanently dropped; near-dups colliding only " +
-                  "there are not searched — raise the cap or re-band " +
-                  "(graft.ProbeBanding prices the shapes)")
-                bucket = Bucket(saturated = true, Nil)
-                seen = Nil; nSeen = 0
-                out.clear()
-              } else {
-                seen.foreach { p =>
-                  out += CandPair(math.min(p, r.id), math.max(p, r.id), band)
-                }
-                seen = r.id :: seen
-                nSeen += 1
-              }
-            }
-          }
-          state.update(if (bucket.saturated) bucket else Bucket(saturated = false, seen))
-          out.iterator
-      }
+    bucketPairs(spark, banded(spark, docs, idCol, textCol, shingleK, bands,
+        rowsPerBand, withGrams = false), maxBucketSize, "streaming minhash") {
+      (band, p, d) => Some(CandPair(math.min(p.id, d.id), math.max(p.id, d.id), band))
+    }
   }
 
   /** Streaming near-dup with EXACT verification: band-bucket candidate
@@ -161,55 +154,16 @@ object StreamingDedup {
       threshold: Double = 0.5,
       maxBucketSize: Int = 10000): Dataset[VerifiedPair] = {
     import spark.implicits._
-    val grams = graft.functions.GraftFunctions
-      .hashedShingles(spark, col(textCol), shingleK)
-    val banded = docs
-      .select(col(idCol).cast("long").as("id"), grams.as("__g"))
-      .filter(size(col("__g")) > 0)
-      .select(col("id"),
-        array_sort(array_distinct(col("__g"))).as("gs"), // set semantics, like the batch verifier
-        sigCol(spark, bands, rowsPerBand).as("__sig"))
-      .select(col("id"), col("gs"),
-        explode(array(bandStructs(bands, rowsPerBand): _*)).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.bsig").as("bsig"),
-        col("id"), col("gs"))
-      .as[BandDoc]
-    banded
-      .groupByKey(r => (r.band, r.bsig))
-      .flatMapGroupsWithState[VBucket, VerifiedPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((band, _), rows, state: GroupState[VBucket]) =>
-          var bucket = state.getOption.getOrElse(VBucket(saturated = false, Nil))
-          var docsSeen = bucket.docs
-          var nSeen = docsSeen.size
-          val out = scala.collection.mutable.ListBuffer.empty[VerifiedPair]
-          rows.foreach { r =>
-            if (!bucket.saturated && !docsSeen.exists(_.id == r.id)) {
-              if (nSeen + 1 > maxBucketSize) {
-                // loud like the candidate path: once per bucket
-                log.warn(s"streaming verified-minhash bucket " +
-                  s"(band=$band) crossed maxBucketSize=$maxBucketSize " +
-                  "and is permanently dropped; near-dups colliding " +
-                  "only there are not searched — raise the cap or " +
-                  "re-band (graft.ProbeBanding prices the shapes)")
-                bucket = VBucket(saturated = true, Nil)
-                docsSeen = Nil; nSeen = 0
-                out.clear()
-              } else {
-                docsSeen.foreach { p =>
-                  val inter = sortedIntersect(p.gs, r.gs).toDouble
-                  val j = inter / (p.gs.length + r.gs.length - inter)
-                  if (j >= threshold)
-                    out += VerifiedPair(
-                      math.min(p.id, r.id), math.max(p.id, r.id), band, j)
-                }
-                docsSeen = DocEntry(r.id, r.gs) :: docsSeen
-                nSeen += 1
-              }
-            }
-          }
-          state.update(if (bucket.saturated) bucket else VBucket(saturated = false, docsSeen))
-          out.iterator
-      }
+    bucketPairs(spark, banded(spark, docs, idCol, textCol, shingleK, bands,
+        rowsPerBand, withGrams = true), maxBucketSize,
+        "streaming verified-minhash") { (band, p, d) =>
+      val inter = graft.functions.SortedIntersectCount.count(
+        ArrayData.toArrayData(p.gs), ArrayData.toArrayData(d.gs),
+        checkNulls = false).toDouble
+      val j = inter / (p.gs.length + d.gs.length - inter)
+      if (j >= threshold)
+        Some(VerifiedPair(math.min(p.id, d.id), math.max(p.id, d.id), band, j))
+      else None
+    }
   }
 }

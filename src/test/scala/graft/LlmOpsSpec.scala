@@ -79,6 +79,63 @@ class LlmOpsSpec extends SparkSpec {
       s"wrong guard message: ${e.getMessage}")
   }
 
+  test("band-index probe: an id on both sides verifies each side against its own grams") {
+    import spark.implicits._
+    // index doc 1 and batch doc 1 are different texts sharing an id;
+    // each pair side must read its own gram store, never both
+    def words(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
+    val base = words("w", 30)
+    val indexed = Seq((1L, base), (2L, words("x", 30)), (4L, words("y", 30)))
+    val batch = Seq((1L, base + " tail1"), (3L, base + " tail3 more"),
+      (5L, words("z", 30)))
+    val idx = java.nio.file.Files.createTempDirectory("graft_idx_ids").toString
+    Dedup.writeBandIndex(indexed.toDF("doc_id", "text"), "doc_id", "text", idx)
+    val got = Dedup.nearDupAgainstIndex(spark, batch.toDF("doc_id", "text"),
+        "doc_id", "text", idx, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        math.rint(r.getDouble(2) * 1e6) / 1e6)
+    assert(got.map(_._1).distinct.length == got.length,
+      s"duplicate (id_1, id_2) rows: ${got.toSeq}")
+    // brute force over old × new word 3-shingle sets, computed locally
+    def shingles(t: String) = t.split("\\s+").sliding(3).map(_.mkString(" ")).toSet
+    val want = (for ((o, ot) <- indexed; (n, nt) <- batch) yield {
+      val (a, b) = (shingles(ot), shingles(nt))
+      (o, n) -> math.rint((a & b).size.toDouble / (a | b).size * 1e6) / 1e6
+    }).filter(_._2 >= 0.5).toMap
+    assert(got.toMap == want, s"got ${got.toSeq} want $want")
+    assert(want.keySet == Set((1L, 1L), (1L, 3L)))
+  }
+
+  test("ProbeBanding census equals a brute-force sum of C(n,2) over collected bucket counts") {
+    import spark.implicits._
+    // 150 clones put one bucket per band above the 100 cap; a 12-doc
+    // near-dup family stays under it; fillers are singletons
+    val rows = (1L to 150L).map(i => (i, "the same boilerplate text on every page")) ++
+      (0 until 12).map(i => (1000L + i, s"a shared family body with many words, variant $i")) ++
+      (2000L until 2040L).map(i => (i, (0 until 10).map(j => s"f${i}_$j").mkString(" ")))
+    val df = rows.toDF("doc_id", "text")
+    val grams = Dedup.charNgramArrays(df, "doc_id", "text", 5).cache()
+    Seq((8, 4), (4, 2)).foreach { case (b, r) =>
+      val got = ProbeBanding.shapeCensus(grams, b, r)
+      // reference bucket counts from the aggregate-form signature:
+      // min over every gram of each seeded xxhash64, then the band hash
+      val aggs = (0 until b * r).map(j => min(xxhash64(lit(j), col("s"))).as(s"h$j"))
+      val bandKeys = (0 until b).map(band => struct(lit(band).as("band"),
+        xxhash64((0 until r).map(k => col(s"h${band * r + k}")): _*).as("bsig")))
+      val sizes = Dedup.hashedCharNgrams(df, "doc_id", "text", 5)
+        .groupBy("id").agg(aggs.head, aggs.tail: _*)
+        .select(explode(array(bandKeys: _*)).as("bs"))
+        .select("bs.band", "bs.bsig").collect()
+        .groupBy(k => (k.getInt(0), k.getLong(1))).values.map(_.length.toLong).toSeq
+      def mass(cap: Long) = sizes.filter(_ <= cap).map(n => n * (n - 1) / 2).sum
+      assert(got == ProbeBanding.Shape(mass(Long.MaxValue), mass(10000L),
+        mass(1000L), mass(100L), sizes.max, sizes.size.toLong), s"($b, $r)")
+      assert(got.cap100 < got.cap1k && got.maxBucket >= 150L,
+        s"the clone buckets must exceed the 100 cap: $got")
+    }
+    grams.unpersist()
+  }
+
   test("minhash near-dup: pairs are symmetric-free, above threshold, and real") {
     val pairs = Dedup.minHashNearDup(docs, "doc_id", "text", threshold = 0.5).cache()
     val rows = pairs.collect()

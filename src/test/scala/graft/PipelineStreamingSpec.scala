@@ -1189,6 +1189,30 @@ class PipelineStreamingSpec extends SparkSpec {
     assert(uncapped > 0, "the fixture must contain real near-dup pairs")
   }
 
+  test("streaming near-dup rejects non-integral ids instead of merging them") {
+    import spark.implicits._
+    // as doubles 1.5 and 1.7 are distinct docs; a cast to long makes
+    // both id 1, and the bucket state would then drop the second doc
+    // and every pair it has
+    val text = "the quick brown fox jumps over the lazy dog and keeps going on"
+    val dbl = Seq((1.5, text), (1.7, text + " again")).toDF("doc_id", "text")
+    val str = Seq(("1.0", text), ("2", text)).toDF("doc_id", "text")
+    for ((df, typ) <- Seq(dbl -> "double", str -> "string")) {
+      val c = intercept[IllegalArgumentException](graft.streaming.StreamingDedup
+        .nearDupCandidates(spark, df, "doc_id", "text"))
+      assert(c.getMessage.contains(typ), c.getMessage)
+      val v = intercept[IllegalArgumentException](graft.streaming.StreamingDedup
+        .verifiedNearDup(spark, df, "doc_id", "text"))
+      assert(v.getMessage.contains(typ), v.getMessage)
+    }
+    // integral ids of any width still run
+    val ints = Seq((1, text), (2, text + " again")).toDF("doc_id", "text")
+    assert(graft.streaming.StreamingDedup
+      .nearDupCandidates(spark, ints, "doc_id", "text").toDF()
+      .select("id_1", "id_2").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+  }
+
   test("streaming daily ohlc: closed bars equal the batch operator's") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -5,11 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard: the session config and the bench checksum each live in
-  * exactly one place, so every main, the benchmark and the test suite
-  * run the same settings and force queries the same way: a copy-pasted
-  * session builder drifts from the shipped config. No SparkSession
-  * needed — this is a pure source scan.
+/** Source guard: the session config, the bench checksum and the LSH
+  * banding core each live in exactly one place, so every main, the
+  * benchmark and the test suite run the same settings and force queries
+  * the same way, and every near-dup family buckets and caps the same
+  * way: a copy-pasted session setup drifts from the shipped config,
+  * a copied band hash or census drifts from its siblings. No
+  * SparkSession needed — this is a pure source scan.
   */
 class SingleSourceSpec extends AnyFunSuite {
 
@@ -20,9 +22,10 @@ class SingleSourceSpec extends AnyFunSuite {
     finally stream.close()
   }
 
-  private def hits(pattern: String): Seq[Path] = {
+  private def hits(pattern: String, under: String = "src"): Seq[Path] = {
     val re = pattern.r
-    sources.flatMap { case (p, txt) => Seq.fill(re.findAllMatchIn(txt).size)(p) }
+    sources.filter(_._1.startsWith(under))
+      .flatMap { case (p, txt) => Seq.fill(re.findAllMatchIn(txt).size)(p) }
   }
 
   test("SparkSession is built only by core.Sessions") {
@@ -34,5 +37,21 @@ class SingleSourceSpec extends AnyFunSuite {
   test("the bench checksum aggregate is written once") {
     val found = hits("""bit_xor\(\s*xxhash64\(""")
     assert(found.size == 1, s"checksum copies: ${found.mkString(", ")}")
+  }
+
+  test("the MinHash band-struct hash is written once") {
+    // struct(band, xxhash64(<the band's signature slots>)) — batch,
+    // index and streaming bsig values must come from one place
+    val found = hits("""\.as\("band"\),\s*xxhash64\(""", "src/main")
+    assert(found.map(_.toString) == Seq("src/main/scala/graft/dedup/Banding.scala"),
+      s"band-struct hash copies: ${found.mkString(", ")}")
+  }
+
+  test("the over-cap bucket census aggregate is written once") {
+    val found = hits(
+      """sum\(when\(col\("__n"\) > maxBucketSize, col\("__n"\)\)\)""",
+      "src/main")
+    assert(found.map(_.toString) == Seq("src/main/scala/graft/dedup/Banding.scala"),
+      s"over-cap census copies: ${found.mkString(", ")}")
   }
 }
