@@ -60,7 +60,7 @@ object Par {
         Future {
           depth.set(java.lang.Integer.valueOf(d + 1))
           try f(x)
-          finally depth.set(java.lang.Integer.valueOf(0))
+          finally depth.set(java.lang.Integer.valueOf(d))
         }(ec)
       }
       fs.map(Await.result(_, Duration.Inf))

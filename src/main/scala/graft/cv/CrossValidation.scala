@@ -62,7 +62,11 @@ object CrossValidation {
       cvResults: DataFrame,
       cvScore: Double,
       cvStd: Double,
-      importances: Option[DataFrame])
+      importances: Option[DataFrame]) {
+    /** Releases the frames this result caches (`oof`, `oofBagged`,
+      * `testBagged`); call it once they are written. */
+    def unpersist(): Unit = (oof +: oofBagged +: testBagged.toSeq).foreach(_.unpersist())
+  }
 
   private def round6(x: Double, d: Int): Double =
     BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -101,30 +101,13 @@ object FeatureSelection {
       .withColumn("importance_split", col("importance_gain"))
   }
 
-  /** A15: the null-importance distribution — nbRuns explorer fits on
-    * shuffled targets, tagged by run (feature_selection.py:183-198).
-    * Permutations come from `shuffleColumnRuns`, so the feature side is
-    * indexed once across all runs. */
-  def nullImportances(
-      train: DataFrame, features: Seq[String], target: String,
-      model: ModelWrapper, seed: Long, nbRuns: Int): DataFrame = {
-    val frames = shuffleColumnRuns(train, target, (1 to nbRuns).map(seed + _))
-    // Independent explorer fits run concurrently (graft.core.Par);
-    // each run's permutation frame is already built, so only the
-    // blocking fit overlaps. Output order is preserved.
-    graft.core.Par.mapPar(frames.zipWithIndex) { case (frame, i) =>
-      importancesOnce(frame, features, target, model, seed, shuffleSeed = None)
-        .withColumn("run", lit(i + 1))
-    }.reduce(_ unionByName _)
-  }
-
-  /** The actual-importance fit (run 0) and the A15 null runs (1..nbRuns)
-    * in ONE concurrent fan-out: the actual fit is independent of every
-    * null fit, so running it first serialized one fit-duration behind
-    * the pool for no reason (round-18; the per-fit fixed overhead is
-    * the measured cost of this family). Row-for-row identical to
-    * `importancesOnce(...).withColumn("run", 0) unionByName
-    * nullImportances(...)`. */
+  /** The actual-importance fit (run 0) and the A15 null-importance
+    * distribution — nbRuns explorer fits on shuffled targets, runs
+    * 1..nbRuns (feature_selection.py:124-198) — in ONE concurrent
+    * fan-out: every fit is independent, and the per-fit fixed overhead
+    * is the measured cost of this family. Permutations come from
+    * `shuffleColumnRuns`, so the feature side is indexed once across
+    * all runs. */
   def importancesWithNulls(
       train: DataFrame, features: Seq[String], target: String,
       model: ModelWrapper, seed: Long, nbRuns: Int): DataFrame = {
@@ -170,11 +153,25 @@ object FeatureSelection {
       .orderBy("gain_score", "split_score", "feature")
   }
 
+  /** The reference's auto threshold grid (feature_selection.py:279-285):
+    * the integer range from the rounded min to the rounded max gain score in
+    * 5 steps; a degenerate spread gives one all-features threshold. */
+  def autoThresholds(scores: DataFrame): Seq[Double] = {
+    val mm = scores.agg(min("gain_score"), max("gain_score")).head()
+    val (lo, hi) = (math.round(mm.getDouble(0)), math.round(mm.getDouble(1)))
+    val step = math.max(1L, (hi - lo) / 5)
+    val range = (lo until hi by step).map(_.toDouble)
+    if (range.nonEmpty) range else Seq(lo.toDouble - 1)
+  }
+
   /** A17: CV score per score-threshold: for each threshold keep
     * features scoring >= t, run k-fold CV, record (threshold,
-    * cv_bst_score, cv_std_bst_score, n_features)
-    * (feature_selection.py:235-312, with our CV engine in the role of
-    * lgbm.cv). */
+    * cv_bst_score, cv_std_bst_score, n_features), one row per threshold
+    * in input order (feature_selection.py:235-312, with our CV engine in
+    * the role of lgbm.cv). Thresholds that keep the same features share
+    * one CV: its seeded fits would repeat exactly, and the auto grid
+    * often repeats a set (a zero-importance feature scores log(1e-10),
+    * stretching the grid across an empty gap). */
   def thresholdSweep(
       train: DataFrame, target: String, idCol: String,
       scores: DataFrame, thresholds: Seq[Double],
@@ -184,19 +181,25 @@ object FeatureSelection {
     import spark.implicits._
     val scored = scores.select("feature", scoreCol).collect()
       .map(r => r.getString(0) -> r.getDouble(1))
-    // per-threshold CVs are independent seeded fits — run them from
-    // the bounded driver pool so the fixed multi-job overhead of each
-    // fit overlaps (the round-7 Par pattern; the inner fold loop
-    // detects the nesting and runs sequentially on the worker thread,
-    // results return in input order, output bit-identical)
-    val rows = graft.core.Par.mapPar(thresholds) { t =>
+    val kept = thresholds.map { t =>
       val feats = scored.filter(_._2 >= t).map(_._1).toSeq.sorted
       require(feats.nonEmpty, s"threshold $t leaves no features")
+      feats
+    }
+    // the distinct sets' CVs are independent seeded fits — run them
+    // from the bounded driver pool so the fixed multi-job overhead of
+    // each fit overlaps (the inner fold loop runs on the nested pool)
+    val sets = kept.distinct
+    val cv = sets.zip(graft.core.Par.mapPar(sets) { feats =>
       val r = CrossValidation.runCvOneSeed(
         train, None, feats, target, idCol, model, cvCfg, seed)
-      (t, r.cvScore, r.cvStd, feats.size)
-    }
-    rows.toDF("threshold", "cv_bst_score", "cv_std_bst_score", "n_features")
+      r.oof.unpersist()
+      (r.cvScore, r.cvStd)
+    }).toMap
+    thresholds.zip(kept).map { case (t, feats) =>
+      val (cvScore, cvStd) = cv(feats)
+      (t, cvScore, cvStd, feats.size)
+    }.toDF("threshold", "cv_bst_score", "cv_std_bst_score", "n_features")
   }
 
   /** W1: rank thresholds by (cv score asc-rank) + (cv std desc-rank),
@@ -223,15 +226,16 @@ object FeatureSelection {
   }
 
   /** End-to-end M10: returns (selected features, scores table, sweep
-    * rank table) — feature list ready for the S4 JSON sink. */
+    * rank table) — feature list ready for the S4 JSON sink. Empty
+    * `thresholds` sweeps the `autoThresholds` grid. */
   def selectFeatures(
       train: DataFrame, features: Seq[String], target: String, idCol: String,
       explorer: ModelWrapper, cvModel: ModelWrapper, cvCfg: CvConfig,
-      seed: Long, nbRuns: Int, thresholds: Seq[Double]): (Seq[String], DataFrame, DataFrame) = {
-    val actual = importancesOnce(train, features, target, explorer, seed, None)
-    val nulls = nullImportances(train, features, target, explorer, seed, nbRuns)
-    val scores = scoreFeatures(actual, nulls).cache()
-    val sweep = thresholdSweep(train, target, idCol, scores, thresholds, cvModel, cvCfg, seed)
+      seed: Long, nbRuns: Int, thresholds: Seq[Double] = Nil): (Seq[String], DataFrame, DataFrame) = {
+    val imps = importancesWithNulls(train, features, target, explorer, seed, nbRuns)
+    val scores = scoreFeatures(imps.filter(col("run") === 0), imps.filter(col("run") > 0)).cache()
+    val ts = if (thresholds.nonEmpty) thresholds else autoThresholds(scores)
+    val sweep = thresholdSweep(train, target, idCol, scores, ts, cvModel, cvCfg, seed)
     val ranked = rankThresholds(sweep)
     val best = bestThreshold(ranked)
     val feats = scores.filter(col("gain_score") >= best)

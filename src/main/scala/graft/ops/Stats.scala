@@ -186,15 +186,14 @@ object Stats {
       .filter(col("__v").isNotNull)
     val counts = stacked.groupBy("__c", "__v").agg(count(lit(1)).as("__n"))
       .localCheckpoint(false) // moment sums and the quartile CDF both read it
+    counts.count() // materialize before the concurrent readers below
     // multiply in decimal: a micro-unit value of 1e11 squares past the
     // long range; NULLs are already excluded (matches pandas describe)
     val vi = graft.core.ExactSum.quantLong(col("__v"))
     val vid = vi.cast("decimal(38,0)")
     // the quartile CDF (a chain of small prefix-sum jobs) and the moment
     // aggregate are independent reads of the checkpointed counts frame —
-    // overlap them on the Par pool (round-18; concurrent first readers
-    // of a lazy checkpoint are safe: persist is per-partition, one
-    // compute wins)
+    // overlap them on the Par pool
     val evals = graft.core.Par.mapPar(Seq(true, false)) {
       case true =>
         Left(Percentiles.exactPerColumnFromCounts(counts, cols,

@@ -23,7 +23,11 @@ object Pipeline {
       outputs: Seq[String],
       deps: Seq[Task] = Seq.empty)(val run: () => Unit)
 
-  final case class Report(ran: Seq[String], skipped: Seq[String])
+  /** `seconds`: wall seconds of each task that ran, its own `run` only
+    * (dependencies are timed separately) — the reference's `@timing`
+    * log line per stage (generic_tools/utils.py:20-45). */
+  final case class Report(ran: Seq[String], skipped: Seq[String],
+      seconds: Map[String, Double] = Map.empty)
 
   def complete(t: Task): Boolean =
     t.outputs.nonEmpty && t.outputs.forall { o =>
@@ -35,6 +39,7 @@ object Pipeline {
   def execute(roots: Task*): Report = {
     val ran = scala.collection.mutable.ListBuffer.empty[String]
     val skipped = scala.collection.mutable.ListBuffer.empty[String]
+    val seconds = scala.collection.mutable.Map.empty[String, Double]
     val visited = scala.collection.mutable.Set.empty[String]
     def go(t: Task): Unit = {
       if (visited.contains(t.name)) return
@@ -42,12 +47,14 @@ object Pipeline {
       if (complete(t)) { skipped += t.name; return }
       t.deps.foreach(go)
       t.outputs.foreach(o => Option(Paths.get(o).getParent).foreach(Files.createDirectories(_)))
+      val t0 = System.nanoTime()
       t.run()
+      seconds(t.name) = (System.nanoTime() - t0) / 1e9
       require(complete(t),
         s"task ${t.name} ran but did not produce its declared outputs: ${t.outputs}")
       ran += t.name
     }
     roots.foreach(go)
-    Report(ran.toSeq, skipped.toSeq)
+    Report(ran.toSeq, skipped.toSeq, seconds.toMap)
   }
 }

@@ -173,6 +173,7 @@ object Solution {
               concat_ws(",", col("cv_score_per_each_fold"))),
             s"$outDir/cv_results.csv",
             floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
+          r.unpersist()
         })
         val report = Pipeline.execute(task) // must run before reading `score`
         ModelRun(meta, outDir, score._1, score._2, report)
@@ -330,29 +331,11 @@ object Solution {
           val nbRuns = cfg.getInt(
             "features_selection.target_permutation.nb_target_permutation_runs")
           val seed = cfg.getLong("modeling_settings.fs_seed_value")
-          val explorer = Models.RfClassifier(numTrees = 20, maxDepth = 6)
-          val actual = graft.fs.FeatureSelection.importancesOnce(
-            train, features, target, explorer, seed, None)
-          val nulls = graft.fs.FeatureSelection.nullImportances(
-            train, features, target, explorer, seed, nbRuns)
-          val scores = graft.fs.FeatureSelection.scoreFeatures(actual, nulls).cache()
-          // auto thresholds: integer range min..max in 5 steps
-          // (feature_selection.py:279-285)
-          val mm = scores.agg(min("gain_score"), max("gain_score")).head()
-          val (lo, hi) = (math.round(mm.getDouble(0)), math.round(mm.getDouble(1)))
-          val step = math.max(1L, (hi - lo) / 5)
-          val range = (lo until hi by step).map(_.toDouble)
-          // degenerate score spread -> single all-features threshold
-          val thresholds = if (range.nonEmpty) range else Seq(lo.toDouble - 1)
-          val sweep = graft.fs.FeatureSelection.thresholdSweep(
-            train, target, idCol, scores, thresholds,
-            modelFor(model, nClasses), cvConfigFor(nClasses), seed)
-          val best = graft.fs.FeatureSelection.bestThreshold(
-            graft.fs.FeatureSelection.rankThresholds(sweep))
-          val keep = scores.filter(col("gain_score") >= best)
-            .select("feature").collect().map(_.getString(0)).toSeq.sorted
+          val (keep, _, _) = graft.fs.FeatureSelection.selectFeatures(
+            train, features, target, idCol, Models.RfClassifier(numTrees = 20, maxDepth = 6),
+            modelFor(model, nClasses), cvConfigFor(nClasses), seed, nbRuns)
           Sources.writeJsonList(s"$fsOut/optimal_features.txt", keep)
-          scores.unpersist(); train.unpersist()
+          train.unpersist()
         }))
 
       // Stage RunSingleModelHPO (create_solution.py:257-298, when run_hpo)
@@ -453,7 +436,7 @@ object Solution {
         Sources.writeJsonManifest(s"$outDir/${model}_oof_data_info.txt",
           Map("model" -> model, "path" -> solDir,
             "files" -> "train_OOF.csv,test.csv,cv_results.csv"))
-        train.unpersist()
+        r.unpersist(); train.unpersist()
       })
 
       val report = Pipeline.execute(predict)

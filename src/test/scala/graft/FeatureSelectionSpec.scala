@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.cv.CrossValidation
 import graft.cv.CrossValidation.CvConfig
 import graft.fs.FeatureSelection
-import graft.ml.Models
+import graft.ml.{Models, ModelWrapper}
 
 /** M10 end-to-end on sf0.001 plus shuffle/scoring invariants. */
 class FeatureSelectionSpec extends SparkSpec {
@@ -47,6 +49,35 @@ class FeatureSelectionSpec extends SparkSpec {
     assert(scores.columns.toSet == Set("feature", "gain_score", "split_score"))
     assert(ranked.count() == 3)
     assert(ranked.columns.contains("total_rank"))
+  }
+
+  test("thresholdSweep runs one CV per distinct feature set") {
+    import spark.implicits._
+    val model = Models.LogReg(maxIter = 10)
+    val counting = new ModelWrapper {
+      val fits = new java.util.concurrent.atomic.AtomicInteger()
+      val name = model.name
+      val isClassifier = model.isClassifier
+      def fit(train: DataFrame, valid: Option[DataFrame], features: Seq[String],
+          labelCol: String, seed: Long) = {
+        fits.incrementAndGet(); model.fit(train, valid, features, labelCol, seed)
+      }
+    }
+    val cfg = CvConfig(numFolds = 3, stratified = true, metricName = "roc_auc_score")
+    // -25 and -20 keep the same three features; -2.5 drops o_epoch
+    val scored = Seq("o_totalprice" -> -1.0, "o_custkey" -> -2.0, "o_epoch" -> -3.0,
+      "noise" -> -30.0)
+    val thresholds = Seq(-25.0, -20.0, -2.5)
+    val sweep = FeatureSelection.thresholdSweep(frame, "target", "row_id",
+      scored.toDF("feature", "gain_score"), thresholds, counting, cfg, seed = 27L)
+    assert(counting.fits.get == 2 * cfg.numFolds, "one CV per distinct feature set")
+    val expected = thresholds.map { t =>
+      val fs = scored.filter(_._2 >= t).map(_._1).sorted
+      val r = CrossValidation.runCvOneSeed(frame, None, fs, "target", "row_id", model, cfg, 27L)
+      r.oof.unpersist()
+      (t, r.cvScore, r.cvStd, fs.size)
+    }
+    assert(sweep.as[(Double, Double, Double, Int)].collect().toSeq == expected)
   }
 
   test("scoreByNullCount is a rate in [0,1]") {

@@ -32,6 +32,22 @@ class PipelineStreamingSpec extends SparkSpec {
     assert(runs == Map("a" -> 1, "b" -> 2))
   }
 
+  test("pipeline: the report times each task that ran, excluding its deps") {
+    val dir = Files.createTempDirectory("graft_pipe_time")
+    val a = Pipeline.Task("a", Seq(s"$dir/a.out"))(() => {
+      Thread.sleep(300); Files.writeString(Paths.get(s"$dir/a.out"), "x")
+    })
+    val b = Pipeline.Task("b", Seq(s"$dir/b.out"), deps = Seq(a))(() => {
+      Files.writeString(Paths.get(s"$dir/b.out"), "y")
+    })
+    val r1 = Pipeline.execute(b)
+    assert(r1.seconds.keySet == Set("a", "b"))
+    assert(r1.seconds("a") >= 0.3 && r1.seconds("b") < 0.3, r1.seconds)
+    Files.delete(Paths.get(s"$dir/b.out"))
+    val r2 = Pipeline.execute(b)
+    assert(r2.seconds.keySet == Set("b"), "a skipped task has no time")
+  }
+
   test("pipeline: a task that crashed mid-write re-runs on resume") {
     import spark.implicits._
     val rows = (1 to 60).map(i => (i, i * i)).toDF("id", "sq")
@@ -184,7 +200,15 @@ class PipelineStreamingSpec extends SparkSpec {
         StandardCopyOption.REPLACE_EXISTING)
     }
 
+    // every frame a task caches is released once its outputs are written
+    // (CacheManager.numCachedEntries is private[spark], public in bytecode)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cachedEntries(): Int =
+      cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val cachedBefore = cachedEntries()
     val result = Solution.buildSolution(spark, proj, "configs", "solution.conf")
+    assert(cachedEntries() == cachedBefore, "the build left cached frames behind")
     val runs = result.models
     assert(runs.map(_.model) == Seq("lightgbm", "xgboost", "et", "logistic_regression"))
     runs.foreach { r =>
