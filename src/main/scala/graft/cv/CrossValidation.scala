@@ -81,6 +81,24 @@ object CrossValidation {
     Metrics.registry.getOrElse(cfg.metricName,
       throw new IllegalArgumentException(s"unknown metric ${cfg.metricName}"))
 
+  /** Per-fold scores and the total score of a cached OOF frame. The
+    * per-fold evaluation (one grouped pass) and the total-score
+    * evaluation are INDEPENDENT blocking reads of the cached frame —
+    * overlapped on the Par pool (each is a short chain of small jobs,
+    * so the driver round-trips are the cost). */
+  private def scores(oof: DataFrame, target: String, scoreCol: String,
+      cfg: CvConfig): (Seq[Double], Double) = {
+    val m = metric(cfg)
+    val evals = graft.core.Par.mapPar(Seq(true, false)) {
+      case true =>
+        val byFold = Metrics.byGroup(cfg.metricName)(oof, "fold", target, scoreCol)
+        (0 until cfg.numFolds).map(k => round6(byFold(k), cfg.metricsDecimals))
+      case false =>
+        Seq(round6(m(oof, target, scoreCol), cfg.metricsDecimals))
+    }
+    (evals(0), evals(1).head)
+  }
+
   /** One seed's k-fold CV. `train` must carry `idCol` (unique row key),
     * the features, and `target`. `preFolded` lets the bagging loop
     * reuse one fold assignment across seeds — fold membership depends
@@ -102,8 +120,6 @@ object CrossValidation {
       cfg.numFolds, cfg.dataSplitSeed,
       if (cfg.stratified) Some(target) else None).cache())
 
-    val testCached = test.map(_.cache())
-
     // Independent per-fold fits run concurrently (graft.core.Par):
     // the blocking MLlib fit dominates and its fixed multi-job
     // overhead overlaps across folds; scored frames are lazy plans.
@@ -118,7 +134,7 @@ object CrossValidation {
         .select(col(idCol), col(target), col("fold"),
           col("__score").as("oof_score"))
 
-      val subK = testCached.map { t =>
+      val subK = test.map { t =>
         fitted.scoreTest(t, cfg.predictProbability, cfg.classLabel)
           .select(col(idCol), col("__score").as("sub_score"))
       }
@@ -135,34 +151,12 @@ object CrossValidation {
     val oof = oofParts.reduce(_ unionByName _).cache()
     oof.count() // materialize before computing k + 1 metrics over it
 
-    val m = metric(cfg)
-    val scoreCol = "oof_score"
-    // The per-fold evaluation (one grouped pass where the metric
-    // supports it, else per-fold filters) and the total-score
-    // evaluation are INDEPENDENT blocking reads of the cached OOF
-    // frame — overlap them on the Par pool (round-18; each is a short
-    // chain of small jobs, so the driver round-trips are the cost).
-    val evals = graft.core.Par.mapPar(Seq(true, false)) {
-      case true =>
-        Left(Metrics.byGroup(cfg.metricName) match {
-          case Some(f) =>
-            val byFold = f(oof, "fold", target, scoreCol)
-            (0 until cfg.numFolds).map(k => round6(byFold(k), cfg.metricsDecimals))
-          case None =>
-            (0 until cfg.numFolds).map { k =>
-              round6(m(oof.filter(col("fold") === k), target, scoreCol), cfg.metricsDecimals)
-            }
-        })
-      case false =>
-        Right(round6(m(oof, target, scoreCol), cfg.metricsDecimals))
-    }
-    val foldScores = evals.collectFirst { case Left(s) => s }.get
-    val cvScore = evals.collectFirst { case Right(s) => s }.get
+    val (foldScores, cvScore) = scores(oof, target, "oof_score", cfg)
     val cvStd = round6(stdPop(foldScores), cfg.metricsDecimals)
 
     // Test reduction over folds: mean of probabilities, else majority
     // vote (ties -> smallest value, scipy.stats.mode; prediction.py:414).
-    val sub = testCached.map { _ =>
+    val sub = test.map { _ =>
       val all = subParts.reduce(_ unionByName _)
       if (cfg.predictProbability)
         all.groupBy(idCol).agg(avg("sub_score").as(target))
@@ -184,7 +178,6 @@ object CrossValidation {
       } else None
 
     if (preFolded.isEmpty) folded.unpersist()
-    testCached.foreach(_.unpersist())
     SeedResult(oof, sub, foldScores, cvScore, cvStd, importances)
   }
 
@@ -218,13 +211,12 @@ object CrossValidation {
       train.select((idCol +: target +: features).map(col): _*),
       cfg.numFolds, cfg.dataSplitSeed,
       if (cfg.stratified) Some(target) else None).cache()
-    val testCached = test.map(_.cache())
 
     val perFold = graft.core.Par.mapPar(0 until cfg.numFolds) { k =>
       val fitted = model.fit(folded.filter(col("fold") =!= k), None, features, target, seedVal)
       val oofK = fitted.scoreAll(folded.filter(col("fold") === k))
         .select(col(idCol), col(target), col("fold"), col("__probs").as("oof_probs"))
-      val subK = testCached.map { t =>
+      val subK = test.map { t =>
         fitted.scoreAll(t)
           .select(col(idCol), col("__probs").as("sub_probs"))
       }
@@ -234,18 +226,11 @@ object CrossValidation {
     val subParts = perFold.flatMap(_._2)
     val oof = oofParts.reduce(_ unionByName _).cache()
     oof.count()
-    val m: (DataFrame, String, String) => Double =
-      if (cfg.metricName == "multi_logloss") Metrics.multiclassLogLoss
-      else Metrics.registry(cfg.metricName)
-    val foldScores = (0 until cfg.numFolds).map { k =>
-      round6(m(oof.filter(col("fold") === k), target, "oof_probs"), cfg.metricsDecimals)
-    }
-    val cvScore = round6(m(oof, target, "oof_probs"), cfg.metricsDecimals)
-    val sub = testCached.map { _ =>
+    val (foldScores, cvScore) = scores(oof, target, "oof_probs", cfg)
+    val sub = test.map { _ =>
       elementwiseMean(subParts.reduce(_ unionByName _), idCol, "sub_probs", "probs")
     }
     folded.unpersist()
-    testCached.foreach(_.unpersist())
     SeedResult(oof, sub, foldScores, cvScore,
       round6(stdPop(foldScores), cfg.metricsDecimals), None)
   }

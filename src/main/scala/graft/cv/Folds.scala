@@ -9,20 +9,13 @@ import org.apache.spark.sql.functions._
   *
   * Design for scale (SURVEY §7.4.2): a naive
   * `row_number().over(Window.orderBy(rand))` collapses the frame into a
-  * single partition. Instead the frame is range-partition-sorted by
-  * (stratum, content hash) and the per-stratum row index is a
-  * distributed prefix sum: after the sort each row's partition-local
-  * position is already carried by `monotonically_increasing_id` (pid in
-  * the high bits, a per-partition counter in the low bits), so the
-  * index is that counter minus the (partition, stratum) block's first
-  * counter plus the block's start offset within its stratum — both from
-  * one bounded (numPartitions × strata)-row collected aggregate. The
-  * range exchange is the ONLY full-data shuffle; no window (an earlier
-  * row_number formulation forced a second hash exchange the layout
-  * already satisfied, and the original zipWithIndex formulation paid an
-  * RDD round-trip that broke codegen). Fold id = per-stratum row index
-  * mod k — exact balance per stratum (sizes differ by at most 1), like
-  * sklearn.
+  * single partition. Instead the per-stratum row index is
+  * `core.PrefixSum.rowIndex` over (stratum, content hash): one range
+  * exchange, the ONLY full-data shuffle, and no window (a row_number
+  * window forces a second hash exchange the layout already satisfies;
+  * zipWithIndex pays an RDD round-trip that leaves codegen). Fold id =
+  * per-stratum row index mod k — exact balance per stratum (sizes
+  * differ by at most 1), like sklearn.
   *
   * The output is coalesced toward `rowsPerPartition` rows per partition
   * (narrow, no shuffle): at bench scale the downstream MLlib fit loop
@@ -56,57 +49,21 @@ object Folds {
   def assign(df: DataFrame, k: Int, seed: Long,
       stratifyBy: Option[String] = None): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val strat = stratifyBy.map(col).getOrElse(lit(0))
     // Shuffle key = content hash seeded by `seed`: deterministic for a
     // given dataset regardless of physical partitioning (rand() is not —
     // it depends on partition index), so fold membership is reproducible
     // across runs and cluster sizes.
     val shuffleKey = xxhash64(lit(seed) +: df.columns.map(col): _*)
-    // __mid: partition-local row position (after the sort) in the low
-    // bits, pid in the high bits — captured INTO the checkpoint so both
-    // consumers below read one consistent materialization.
-    val parts = df.withColumn("__strat", strat.cast("string"))
-      .withColumn("__h", shuffleKey)
-      .repartitionByRange(col("__strat"), col("__h"))
-      .sortWithinPartitions(col("__strat"), col("__h"))
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      // lazy: the counts collect below is the action that materializes
-      // it (one job instead of eager-checkpoint + collect; blocks are
-      // pinned, never recomputed, so __mid stays consistent for both
-      // consumers — round-18, the Evaluation.scala r17 pattern)
-      .localCheckpoint(false)
-
-    // Per (partition, stratum) block: its first __mid and its start
-    // offset WITHIN its stratum (range partitioning puts a stratum's
-    // blocks in ascending pid order, so the offset is the count of
-    // same-stratum rows in lower pids). Bounded: numPartitions × strata.
-    val counts = parts.groupBy("__pid", "__strat")
-      .agg(count(lit(1)).as("__n"), min("__mid").as("__minmid"))
-      .collect()
-      .map(r => (r.getInt(0), Option(r.getString(1)), r.getLong(2), r.getLong(3)))
-    val offsets = counts.groupBy(_._2).iterator.flatMap { case (s0, rows) =>
-      var acc = 0L
-      rows.sortBy(_._1).map { case (pid, _, n, minMid) =>
-        val o = acc; acc += n; (pid, s0.orNull, o - minMid)
-      }
-    }.toSeq
-    val offDf = offsets.toDF("__opid", "__ostrat", "__adj")
-
-    // Per-stratum index = __mid + (__off - __minmid) — a pure
-    // projection over the checkpointed blocks, no window, no exchange.
-    val n = counts.map(_._3).sum
+    val (indexed, n) = graft.core.PrefixSum.rowIndex(
+      df.withColumn("__h", shuffleKey), Seq(col("__h")),
+      stratifyBy.map(col))
     val rowsPerPartition = 131072L
     // coalesce never increases the partition count, so at cluster scale
     // (natural partitions already bigger than the target) it's a no-op
     val target = math.max(1L, (n + rowsPerPartition - 1) / rowsPerPartition).toInt
-    parts
-      .join(broadcast(offDf),
-        col("__pid") === col("__opid") && col("__strat") <=> col("__ostrat"))
-      .withColumn("fold", ((col("__mid") + col("__adj")) % k).cast("int"))
-      .drop("__strat", "__h", "__pid", "__mid", "__opid", "__ostrat", "__adj")
+    indexed
+      .withColumn("fold", (col("__idx") % k).cast("int"))
+      .drop("__h", "__idx")
       .coalesce(target)
   }
 }

@@ -25,21 +25,11 @@ import graft.ml.ModelWrapper
 object FeatureSelection {
 
   /** R1: random permutation of one column's values across rows,
-    * seeded and partition-safe: both sides get a dense index from a
-    * range-partitioned sort (no single-partition window), then re-join
-    * on the index. The index is the `monotonically_increasing_id`
-    * partition-local counter plus a broadcast per-partition offset from
-    * a bounded collected count — the same no-window, no-RDD prefix-sum
-    * idiom as `Folds.assign` (the earlier zipWithIndex formulation paid
-    * an RDD round-trip that broke codegen). */
-  def shuffleColumn(df: DataFrame, c: String, seed: Long): DataFrame = {
-    val others = df.drop(c)
-    val rest = indexed(others,
-      xxhash64((lit(seed) +: lit("rows") +: others.columns.map(col)): _*))
-    val vals = indexed(df.select(c), xxhash64(lit(seed), lit("vals"), col(c)))
-    rest.join(vals, Seq("__idx")).drop("__idx")
-      .select(df.columns.map(col).toIndexedSeq: _*)
-  }
+    * seeded and partition-safe: both sides get a dense index from
+    * `core.PrefixSum.rowIndex` (a range-partitioned sort, no
+    * single-partition window, no RDD hop), then re-join on the index. */
+  def shuffleColumn(df: DataFrame, c: String, seed: Long): DataFrame =
+    permuted(df, c, Seq(lit(seed), lit("rows")), Seq(seed)).head
 
   /** Repeated permutations of the same column (the A15 null-importance
     * loop): the row side is indexed ONCE with a seed-independent key
@@ -47,42 +37,23 @@ object FeatureSelection {
     * rowOrder ∘ valsOrder(seed)⁻¹ is (re-)randomized entirely by the
     * per-seed value side, so each run pays one range shuffle of ONE
     * column instead of two of the whole frame. */
-  def shuffleColumnRuns(df: DataFrame, c: String, seeds: Seq[Long]): Seq[DataFrame] = {
+  def shuffleColumnRuns(df: DataFrame, c: String, seeds: Seq[Long]): Seq[DataFrame] =
+    permuted(df, c, Seq(lit("rows")), seeds)
+
+  /** One permutation of `c` per seed: the other columns indexed once in
+    * the order of their hash salted by `rowSalt`, each seed's values in
+    * the order of their seeded hash, joined on the index. */
+  private def permuted(df: DataFrame, c: String, rowSalt: Seq[Column],
+      seeds: Seq[Long]): Seq[DataFrame] = {
+    def index(in: DataFrame, key: Column): DataFrame =
+      graft.core.PrefixSum.rowIndex(in, Seq(key), None)._1
     val others = df.drop(c)
-    val rest = indexed(others,
-      xxhash64((lit("rows") +: others.columns.map(col)): _*))
+    val rest = index(others, xxhash64(rowSalt ++ others.columns.map(col): _*))
     seeds.map { s =>
-      val vals = indexed(df.select(c), xxhash64(lit(s), lit("vals"), col(c)))
+      val vals = index(df.select(c), xxhash64(lit(s), lit("vals"), col(c)))
       rest.join(vals, Seq("__idx")).drop("__idx")
         .select(df.columns.map(col).toIndexedSeq: _*)
     }
-  }
-
-  /** Dense 0..n-1 index in `orderKey` order: range-partitioned sort,
-    * partition-local position from `monotonically_increasing_id`'s low
-    * bits, broadcast per-partition offsets from a bounded collected
-    * count — no RDD hop, no window (same idiom as Folds.assign). */
-  private def indexed(in: DataFrame, orderKey: Column): DataFrame = {
-    val spark = in.sparkSession
-    import spark.implicits._
-    val parts = in.withColumn("__k", orderKey)
-      .repartitionByRange(col("__k")).sortWithinPartitions(col("__k"))
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      // lazy: the counts collect materializes it (one job, not two);
-      // blocks are pinned so __mid is consistent for all consumers
-      .localCheckpoint(false)
-    val counts = parts.groupBy("__pid")
-      .agg(count(lit(1)).as("__n"), min("__mid").as("__m"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    var acc = 0L
-    val adj = counts.sortBy(_._1).map { case (pid, n, m) =>
-      val o = acc; acc += n; (pid, o - m)
-    }.toSeq
-    parts.join(broadcast(adj.toDF("__apid", "__adj")),
-        col("__pid") === col("__apid"))
-      .withColumn("__idx", col("__mid") + col("__adj"))
-      .drop("__k", "__pid", "__mid", "__apid", "__adj")
   }
 
   /** One explorer fit → (feature, importance_gain, importance_split)

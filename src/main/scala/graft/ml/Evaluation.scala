@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.PrefixSum
 
 /** Model-evaluation and distribution-drift operators — the standard
   * model-monitoring set a production scoring pipeline runs next to the
@@ -21,67 +22,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: everything either stays scan-local + a bounded-key
   * aggregate (calibration, PSI after the bounded breakpoint collect),
-  * or rides the repo's distributed prefix-sum idiom (range-partition,
-  * window WITHIN partition, broadcast per-partition offsets — the
-  * `Metrics.rocAuc` shape) so no row-scale frame ever collapses onto a
-  * single-partition global window.
+  * or rides the engine's distributed prefix sum (`core.PrefixSum`:
+  * range-partition, per-partition totals, broadcast offsets) so no
+  * row-scale frame ever collapses onto a single-partition global
+  * window.
   */
 object Evaluation {
-
-  /** Range-partitions `df` by `order`, then adds one running total per
-    * entry of `sums` (running over the global `order`, inclusive of the
-    * current row) as columns named by the map keys. The global
-    * cumulative is per-partition window + broadcast offsets; only a
-    * numPartitions-row frame is ever collected.
-    */
-  private[graft] def withRunningTotals(df: DataFrame, order: Seq[Column],
-      sums: Map[String, Column]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val names = sums.keys.toSeq.sorted
-    val withIns = names.foldLeft(df)((d, n) => d.withColumn(s"__in_$n", sums(n)))
-    val base = withIns
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      // LAZY checkpoint: the offsets aggregate below is the first
-      // reader and materializes the range shuffle in ITS job; the
-      // window join then reads the cached blocks. The round-16 eager
-      // form paid a separate blocking materialization job per call —
-      // one driver round-trip per prefix sum, engine-wide.
-      .localCheckpoint(false)
-    // per-partition totals of every sum input in one bounded aggregate
-    val aggCols = names.map(n => sum(col(s"__in_$n").cast("double")).as(s"__t_$n"))
-    val totals = base.groupBy("__pid").agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-      .map(r => (r.getInt(0), names.indices.map(i =>
-        if (r.isNullAt(i + 1)) 0.0 else r.getDouble(i + 1)).toSeq))
-      .sortBy(_._1)
-    val offsets = {
-      val acc = Array.fill(names.length)(0.0)
-      totals.map { case (pid, ts) =>
-        val row = (pid, acc.toSeq)
-        names.indices.foreach(i => acc(i) += ts(i))
-        row
-      }.toSeq
-    }
-    val offDf = offsets.toDF("__pid", "__offs")
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joined = base.join(broadcast(offDf), Seq("__pid"))
-    names.zipWithIndex.foldLeft(joined) { case (d, (n, i)) =>
-      d.withColumn(n,
-        sum(col(s"__in_$n").cast("double")).over(w) + col("__offs")(i))
-    }.drop("__offs" +: names.map(n => s"__in_$n"): _*)
-  }
-
-  /** Global 1-based row number over `order` via the prefix-sum idiom
-    * (exact, deterministic given a total order — pass a tie-break
-    * column). Added as `rnCol`. */
-  private[graft] def withRowNumber(df: DataFrame, order: Seq[Column],
-      rnCol: String): DataFrame =
-    withRunningTotals(df, order, Map(rnCol -> lit(1.0)))
-      .withColumn(rnCol, col(rnCol).cast("long"))
 
   /** Reliability diagram: equal-width probability bins of `scoreCol`
     * (assumed in [0,1]); per bin the count, mean score, positive rate,
@@ -113,7 +59,7 @@ object Evaluation {
     val g = df.groupBy(col(scoreCol).as("__s")).agg(
       sum(isA.cast("double")).as("__na"),
       sum(not(isA).cast("double")).as("__nb"))
-    val cum = withRunningTotals(g, Seq(col("__s")),
+    val cum = PrefixSum.runningTotals(g, Seq(col("__s")),
       Map("__ca" -> col("__na"), "__cb" -> col("__nb")))
     val tot = cum.agg(sum("__na").as("ta"), sum("__nb").as("tb")).head()
     val (ta, tb) = (tot.getDouble(0), tot.getDouble(1))
@@ -163,7 +109,7 @@ object Evaluation {
   def mannWhitney(df: DataFrame, scoreCol: String, isA: Column): DataFrame = {
     val g = df.groupBy(col(scoreCol).as("__s")).agg(
       count(lit(1)).as("__n"), sum(isA.cast("long")).as("__na"))
-    val cum = withRunningTotals(g, Seq(col("__s")), Map("__cum" -> col("__n")))
+    val cum = PrefixSum.runningTotals(g, Seq(col("__s")), Map("__cum" -> col("__n")))
       .withColumn("__before", col("__cum") - col("__n"))
       .withColumn("__avg_rank", col("__before") + (col("__n") + 1) / 2.0)
     val r = cum.agg(
@@ -225,27 +171,24 @@ object Evaluation {
   /** Cumulative gains / lift table: rows are ranked by (`scoreCol`
     * descending, `idCol` ascending — a total order, so the ranking is
     * engine-portable), split into `nTiles` rank buckets via exact
-    * integer arithmetic (tile = 1 + ((rn-1)*k) div n), and per tile the
-    * positive count, cumulative capture rate, tile lift, and cumulative
-    * lift are reported.
+    * integer arithmetic (tile = 1 + (i*k) div n for the 0-based rank
+    * i), and per tile the positive count, cumulative capture rate, tile
+    * lift, and cumulative lift are reported.
     *
-    * Scale design: the row-scale ranking is the distributed prefix-sum
-    * row number (no global single-partition window); after the
-    * nTiles-key aggregate the frame is k rows, where the cumulative
+    * Scale design: the row-scale ranking is `PrefixSum.rowIndex` (no
+    * global single-partition window; its collect also yields n); after
+    * the nTiles-key aggregate the frame is k rows, where the cumulative
     * window is bounded by construction. */
   def liftGains(df: DataFrame, idCol: String, labelCol: String,
       scoreCol: String, nTiles: Int = 10): DataFrame = {
-    val ranked = withRowNumber(
+    val (ranked, n) = PrefixSum.rowIndex(
       df.select(col(idCol), col(labelCol).cast("double").as("__y"),
         col(scoreCol).as("__s")),
-      Seq(col("__s").desc, col(idCol)), "__rn")
-      // lazy: the count below materializes it for the tile aggregate
-      .localCheckpoint(false)
-    val n = ranked.count()
+      Seq(col("__s").desc, col(idCol)), None)
     // exact integer arithmetic both here and in the oracle (DIV, not
     // float division) so tile boundaries are engine-portable
     val agg = ranked
-      .select((expr(s"(__rn - 1) * $nTiles DIV ${n}L") + 1L).as("tile"), col("__y"))
+      .select((expr(s"__idx * $nTiles DIV ${n}L") + 1L).as("tile"), col("__y"))
       .groupBy("tile").agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("n_pos"))
     val tot = agg.agg(sum("n_rows").as("n"), sum("n_pos").as("tp")).head()
     val (totN, totP) = (tot.getLong(0), tot.getDouble(1))

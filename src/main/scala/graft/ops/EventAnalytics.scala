@@ -548,9 +548,9 @@ object EventAnalytics {
     * rounded to 6 dp BEFORE ranking so float-sum ordering is
     * engine-portable), each ranked into `k` quantile scores where
     * 1 = best (most recent / most frequent / highest spend). Rank
-    * buckets use exact integer arithmetic (1 + (rn-1)*k div n) over the
-    * distributed prefix-sum row number — no single-partition window
-    * touches the key-scale frame. */
+    * buckets use exact integer arithmetic (1 + i*k div n) over the
+    * 0-based distributed row index i (`core.PrefixSum.rowIndex`) — no
+    * single-partition window touches the key-scale frame. */
   def rfm(df: DataFrame, keyCol: String, tsCol: String, valueCol: String,
       monetaryFilter: Column, k: Int = 5): DataFrame = {
     val perKey = df.groupBy(keyCol).agg(
@@ -569,10 +569,10 @@ object EventAnalytics {
     // rank each dimension on the per-key frame (already far smaller
     // than the event table, and the ranking itself is distributed)
     def rankOn(orderCols: Seq[Column], name: String): DataFrame =
-      graft.ml.Evaluation.withRowNumber(base, orderCols, "__rn")
-        .select(col(keyCol), (expr(s"(__rn - 1) * $k DIV ${n}L") + 1L).as(name))
+      graft.core.PrefixSum.rowIndex(base, orderCols, None)._1
+        .select(col(keyCol), (expr(s"__idx * $k DIV ${n}L") + 1L).as(name))
     // the three rankings are independent prefix-sum machines (each
-    // pays blocking offset collects inside withRowNumber) over the
+    // pays a blocking offset collect inside rowIndex) over the
     // same pinned base — overlap them on the Par pool (round-18)
     val Seq(r, f, m) = graft.core.Par.mapPar(Seq(
       (Seq(col("recency_us"), col(keyCol)), "r_score"),

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * join uses — one pathological basket can't go quadratic); PageRank
   * is the standard iterative join-aggregate with one key shuffle per
   * iteration and per-iteration localCheckpoints to keep lineage flat;
-  * the Gini rank rides the distributed prefix-sum row number
-  * (`Evaluation.withRowNumber`) — no single-partition window ever sees
+  * the Gini rank rides the distributed row index
+  * (`core.PrefixSum.rowIndex`) — no single-partition window ever sees
   * a key-scale frame.
   */
 object Graph {
@@ -248,13 +248,13 @@ object Graph {
       // lazy: the first consumer (percentiles / rank / aggregate)
       // materializes it — no standalone checkpoint job
       .localCheckpoint(false)
-    val ranked = graft.ml.Evaluation.withRowNumber(
-      counts, Seq(col("__c"), col("__k")), "__rn")
+    val (ranked, _) = graft.core.PrefixSum.rowIndex(
+      counts, Seq(col("__c"), col("__k")), None)
     val ps = Percentiles.exact(counts, "__c", Seq(0.5, 0.99))
     val agg = ranked.agg(
       count(lit(1)).as("n_keys"), sum("__c").as("n_rows"),
       max("__c").as("max_cnt"),
-      sum(col("__rn").cast("double") * col("__c")).as("__rc")).head()
+      sum((col("__idx") + 1).cast("double") * col("__c")).as("__rc")).head()
     val (nk, nr, mx, rc) =
       (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getDouble(3))
     val gini = 2.0 * rc / (nk.toDouble * nr) - (nk + 1.0) / nk

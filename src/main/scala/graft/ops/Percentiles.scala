@@ -1,61 +1,90 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.core.PrefixSum
 
 /** A14: exact percentiles at scale. Spark's built-in exact `percentile`
   * aggregate materializes a value->count map per partition and merges
   * them — memory-unbounded on high-cardinality doubles (the 100 TB
   * failure mode). These implementations aggregate (value, count) first
-  * and ride one range-partitioned prefix sum, then read the bracketing
-  * order statistics as conditional-min aggregates (np.percentile
-  * linear interpolation = DuckDB quantile_cont). Cost: one
-  * distinct-value-sized shuffle, O(1) driver data.
+  * and ride one `core.PrefixSum.runningTotals`, then read the
+  * bracketing order statistics as conditional-min aggregates
+  * (np.percentile linear interpolation = DuckDB quantile_cont). Cost:
+  * one distinct-value-sized shuffle, O(1) driver data.
   */
 object Percentiles {
+
+  /** Per-group CDF over a distinct-value count frame (`g`, __v, __n):
+    * the global running count over (g, __v) order minus each group's
+    * base. The base and total fall out of that one prefix sum (base =
+    * min over the group of cwg − n, total = max(cwg) − base), so one
+    * hash aggregate stands in for a second prefix sum over the group
+    * totals. Adds __cw (the per-group cumulative count) and __tot (the
+    * group's row count), both long. */
+  private def groupCdf(counts: DataFrame, g: String): DataFrame = {
+    val cum = PrefixSum.runningTotals(
+        counts, Seq(col(g), col("__v")), Map("__cwg" -> col("__n")))
+      .localCheckpoint(false) // group bases and the CDF join both read it
+    val gbase = cum.groupBy(g).agg(
+        min(col("__cwg") - col("__n")).as("__base"),
+        max(col("__cwg")).as("__top"))
+      .withColumn("__tot", (col("__top") - col("__base")).cast("long"))
+      .select(g, "__tot", "__base")
+    cum.join(gbase, Seq(g))
+      .withColumn("__cw", (col("__cwg") - col("__base")).cast("long"))
+  }
+
+  /** The two order statistics bracketing rank r = (n−1)·p for each
+    * entry i of `ps`, as conditional-min aggregates `__lo<i>` (floor r)
+    * and `__hi<i>` (ceil r) over a frame carrying __v, __cw and __tot:
+    * 0-based order statistic j lives at the smallest value whose
+    * cumulative count reaches j + 1. The in-plan floor/ceil run the
+    * same IEEE double ops as [[interpolate]], so brackets and
+    * fractions always agree. */
+  private def brackets(ps: Seq[Double]): Seq[Column] =
+    ps.zipWithIndex.flatMap { case (p, i) =>
+      val r = (col("__tot") - 1).cast("double") * lit(p)
+      Seq(min(when(col("__cw") >= floor(r).cast("long") + 1, col("__v")))
+          .as(s"__lo$i"),
+        min(when(col("__cw") >= ceil(r).cast("long") + 1, col("__v")))
+          .as(s"__hi$i"))
+    }
+
+  /** (1−f)·a + f·b between the [[brackets]] of entry i in `row` — the
+    * np.percentile / DuckDB quantile_cont form, the documented contract
+    * of [[exact]] (callers comparing data against the result use the
+    * tie-exact grouped variants). */
+  private def interpolate(row: Row, i: Int, n: Long, p: Double): Double = {
+    val r = (n - 1) * p
+    val frac = r - math.floor(r)
+    row.getDouble(row.fieldIndex(s"__lo$i")) * (1 - frac) +
+      row.getDouble(row.fieldIndex(s"__hi$i")) * frac
+  }
 
   /** Returns (percentile -> value) for non-null values of `c`.
     *
     * Shape: one (value, count) aggregate (map-side combinable, shuffle
     * is distinct-value-sized), the partition-bounded prefix sum of
-    * `Evaluation.withRunningTotals`, then every bracketing order
-    * statistic as a conditional-min against its integer rank — one
-    * DataFrame plan, no RDD hop / zipWithIndex / row-scale cache (the
-    * earlier sort-based form paid all three). The in-plan floor/ceil
-    * of r = (n−1)·p runs the same IEEE double ops as the driver-side
-    * interpolation below, so brackets and fractions always agree. */
+    * `PrefixSum.runningTotals`, then every bracketing order statistic
+    * as a conditional-min against its integer rank ([[brackets]]) — one
+    * DataFrame plan, no RDD hop / zipWithIndex / row-scale cache. */
   def exact(df: DataFrame, c: String, ps: Seq[Double]): Map[Double, Double] = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1))
     val dist = ps.distinct
     val counts = df.select(col(c).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
       .groupBy("__v").agg(count(lit(1)).as("__n"))
-    val cum = graft.ml.Evaluation.withRunningTotals(
+    val cum = PrefixSum.runningTotals(
         counts, Seq(col("__v")), Map("__cw" -> col("__n")))
       .withColumn("__cw", col("__cw").cast("long"))
     val tot = cum.agg(max(col("__cw")).as("__tot"))
-    val joined = cum.crossJoin(broadcast(tot))
-    // 0-based order statistic i lives at the smallest value whose
-    // cumulative count reaches i + 1
-    val aggCols = dist.zipWithIndex.flatMap { case (p, i) =>
-      val r = (col("__tot") - 1).cast("double") * lit(p)
-      Seq(min(when(col("__cw") >= floor(r).cast("long") + 1, col("__v")))
-          .as(s"__lo$i"),
-        min(when(col("__cw") >= ceil(r).cast("long") + 1, col("__v")))
-          .as(s"__hi$i"))
-    } :+ max(col("__tot")).as("n")
-    val row = joined.agg(aggCols.head, aggCols.tail: _*).head()
+    val aggCols = brackets(dist) :+ max(col("__tot")).as("n")
+    val row = cum.crossJoin(broadcast(tot))
+      .agg(aggCols.head, aggCols.tail: _*).head()
     require(!row.isNullAt(row.fieldIndex("n")), s"no non-null values in $c")
     val n = row.getLong(row.fieldIndex("n"))
-    dist.zipWithIndex.map { case (p, i) =>
-      val r = (n - 1) * p
-      val frac = r - math.floor(r)
-      // (1−f)·a + f·b — np.percentile / DuckDB quantile_cont parity,
-      // the documented contract of THIS function (callers comparing
-      // data against the result use the tie-exact grouped variants)
-      p -> (row.getDouble(row.fieldIndex(s"__lo$i")) * (1 - frac) +
-        row.getDouble(row.fieldIndex(s"__hi$i")) * frac)
-    }.toMap
+    dist.zipWithIndex.map { case (p, i) => p -> interpolate(row, i, n, p) }.toMap
   }
 
   /** [[exact]] for SEVERAL columns in ONE distributed plan — the
@@ -91,38 +120,13 @@ object Percentiles {
       cols: Seq[String], ps: Seq[Double]): Map[(String, Double), Double] = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1))
     val dist = ps.distinct
-    val cum = graft.ml.Evaluation.withRunningTotals(
-        counts, Seq(col("__c"), col("__v")), Map("__cwg" -> col("__n")))
-      .localCheckpoint(false) // group bases and the CDF join both read it
-    // each group's base offset (global running count just before the
-    // group starts) and total fall straight out of the FIRST prefix
-    // sum: base = min over the group of (cwg − n), total = max(cwg) −
-    // base — one hash aggregate instead of the second range-partition
-    // prefix-sum machine the round-16 form ran over the group totals
-    val gbase = cum.groupBy("__c").agg(
-        min(col("__cwg") - col("__n")).as("__base"),
-        max(col("__cwg")).as("__top"))
-      .withColumn("__tot", (col("__top") - col("__base")).cast("long"))
-      .select("__c", "__tot", "__base")
-    val joined = cum.join(gbase, Seq("__c"))
-      .withColumn("__cw", (col("__cwg") - col("__base")).cast("long"))
-    val aggCols = dist.zipWithIndex.flatMap { case (p, i) =>
-      val r = (col("__tot") - 1).cast("double") * lit(p)
-      Seq(min(when(col("__cw") >= floor(r).cast("long") + 1, col("__v")))
-          .as(s"__lo$i"),
-        min(when(col("__cw") >= ceil(r).cast("long") + 1, col("__v")))
-          .as(s"__hi$i"))
-    } :+ max(col("__tot")).cast("long").as("__nv")
-    val out = joined.groupBy("__c").agg(aggCols.head, aggCols.tail: _*)
+    val aggCols = brackets(dist) :+ max(col("__tot")).cast("long").as("__nv")
+    val out = groupCdf(counts, "__c").groupBy("__c")
+      .agg(aggCols.head, aggCols.tail: _*)
       .collect().iterator.flatMap { row =>
         val c = row.getString(0)
         val n = row.getLong(row.fieldIndex("__nv"))
-        dist.zipWithIndex.map { case (p, i) =>
-          val r = (n - 1) * p
-          val frac = r - math.floor(r)
-          (c, p) -> (row.getDouble(row.fieldIndex(s"__lo$i")) * (1 - frac) +
-            row.getDouble(row.fieldIndex(s"__hi$i")) * frac)
-        }
+        dist.zipWithIndex.map { case (p, i) => (c, p) -> interpolate(row, i, n, p) }
       }.toMap
     // A column with zero non-null values simply vanishes from the
     // grouped result; fail with exact()'s explicit message instead of
@@ -170,11 +174,11 @@ object Percentiles {
     * bracketing order statistics) delivered for every group in one
     * plan. Construction: one (group, value) count aggregate (map-side
     * combinable, keys as fine as the data), then the global prefix sum
-    * over (group, value) order via `Evaluation.withRunningTotals` (the
-    * __pid idiom — every window partition-bounded), minus each group's
-    * base offset (a second, group-cardinality-sized running total), so
-    * the per-group cumulative count never rides a per-group window
-    * whose frame is the group's distinct-value cardinality. The
+    * over (group, value) order minus each group's base offset
+    * ([[groupCdf]] on `PrefixSum.runningTotals` — every window
+    * partition-bounded), so the per-group cumulative count never rides
+    * a per-group window whose frame is the group's distinct-value
+    * cardinality. The
     * bracketing order statistics resolve as conditional-min aggregates
     * against integer thresholds.
     *
@@ -192,21 +196,6 @@ object Percentiles {
       .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && col("__g").isNotNull)
       .groupBy("__g", "__v").agg(count(lit(1)).as("__n"))
-    // global running count over (g, v); per-group cw = global − the
-    // group's base. The base and total fall out of the FIRST prefix
-    // sum (base = min over the group of cwg − n, total = max(cwg) −
-    // base): one hash aggregate replaces the second range-partition
-    // prefix-sum machine the round-16 form ran over the group totals.
-    val cum = graft.ml.Evaluation.withRunningTotals(
-        counts, Seq(col("__g"), col("__v")), Map("__cwg" -> col("__n")))
-      .localCheckpoint(false) // group bases and the CDF join both read it
-    val gbase = cum.groupBy("__g").agg(
-        min(col("__cwg") - col("__n")).as("__base"),
-        max(col("__cwg")).as("__top"))
-      .withColumn("__tot", (col("__top") - col("__base")).cast("long"))
-      .select("__g", "__tot", "__base")
-    val joined = cum.join(gbase, Seq("__g"))
-      .withColumn("__cw", (col("__cwg") - col("__base")).cast("long"))
     // conditional-min order statistics: 0-based index i lives at the
     // smallest v whose cumulative count reaches i+1. All thresholds
     // are exact long arithmetic; m/100 truncation is safe for
@@ -219,7 +208,7 @@ object Percentiles {
       Seq(min(when(col("__cw") >= loIdx + 1, col("__v"))).as(s"__lo$k"),
         min(when(col("__cw") >= hiIdx + 1, col("__v"))).as(s"__hi$k"))
     } :+ max(col("__tot")).cast("long").as("n")
-    val agged = joined.groupBy(col("__g").as(groupCol))
+    val agged = groupCdf(counts, "__g").groupBy(col("__g").as(groupCol))
       .agg(aggCols.head, aggCols.tail: _*)
     val pcols = percents.map { k =>
       val rem = ((col("n") - 1) * lit(k.toLong)) % lit(100L)
@@ -270,29 +259,9 @@ object Percentiles {
     require(names.size == ps.size && names.distinct.size == names.size,
       "names must be distinct and pair 1:1 with ps")
     val dist = ps.distinct
-    // group base/total from the FIRST prefix sum (one hash aggregate;
-    // see groupedInterpolated — the second prefix-sum machine over the
-    // group totals is gone, round 17)
-    val cum = graft.ml.Evaluation.withRunningTotals(
-        counts, Seq(col("__g"), col("__v")), Map("__cwg" -> col("__n")))
-      .localCheckpoint(false) // group bases and the CDF join both read it
-    val gbase = cum.groupBy("__g").agg(
-        min(col("__cwg") - col("__n")).as("__base"),
-        max(col("__cwg")).as("__top"))
-      .withColumn("__tot", (col("__top") - col("__base")).cast("long"))
-      .select("__g", "__tot", "__base")
-    val joined = cum.join(gbase, Seq("__g"))
-      .withColumn("__cw", (col("__cwg") - col("__base")).cast("long"))
-    // 0-based order statistic i lives at the smallest value whose
-    // cumulative count reaches i + 1 — exact()'s thresholds verbatim
-    val aggCols = dist.zipWithIndex.flatMap { case (p, i) =>
-      val r = (col("__tot") - 1).cast("double") * lit(p)
-      Seq(min(when(col("__cw") >= floor(r).cast("long") + 1, col("__v")))
-          .as(s"__lo$i"),
-        min(when(col("__cw") >= ceil(r).cast("long") + 1, col("__v")))
-          .as(s"__hi$i"))
-    } :+ max(col("__tot")).cast("long").as("n")
-    val agged = joined.groupBy(col("__g"))
+    // exact()'s brackets verbatim, per group
+    val aggCols = brackets(dist) :+ max(col("__tot")).cast("long").as("n")
+    val agged = groupCdf(counts, "__g").groupBy(col("__g"))
       .agg(aggCols.head, aggCols.tail: _*)
     val pcols = names.zip(ps).map { case (name, p) =>
       val i = dist.indexOf(p)
@@ -309,7 +278,7 @@ object Percentiles {
   /** Exact WEIGHTED percentile (lower weighted quantile: the smallest
     * value whose cumulative weight reaches p·W). Aggregates weight per
     * distinct value first, then one distributed prefix sum over the
-    * value order (`Evaluation.withRunningTotals` — no single-partition
+    * value order (`PrefixSum.runningTotals` — no single-partition
     * window), then a bounded selection of the crossing value. Weights
     * must be non-negative; integer weights make the threshold
     * comparison exact. */
@@ -320,7 +289,7 @@ object Percentiles {
         col(weightCol).cast("double").as("__w"))
       .filter(col("__v").isNotNull)
       .groupBy("__v").agg(sum(col("__w")).as("__w"))
-    val cum = graft.ml.Evaluation.withRunningTotals(
+    val cum = PrefixSum.runningTotals(
       g, Seq(col("__v")), Map("__cw" -> col("__w"))).localCheckpoint(false)
     val total = cum.agg(max(col("__cw"))).head().getDouble(0)
     // every crossing value in ONE conditional-min aggregate (the

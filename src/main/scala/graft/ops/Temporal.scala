@@ -314,7 +314,7 @@ object Temporal {
     * intervals). Deltas aggregate per distinct µs FIRST (so the
     * running value after each instant is well-defined regardless of
     * row order), then the global running sum rides the distributed
-    * prefix-sum helper (`Evaluation.withRunningTotals` — range
+    * prefix sum (`core.PrefixSum.runningTotals` — range
     * partition + per-partition window + broadcast offsets, never a
     * single-partition window), and the per-day max is a day-keyed
     * aggregate. "Peak" is evaluated at session-boundary instants PLUS
@@ -343,7 +343,7 @@ object Temporal {
         (unix_micros(col("session_end")) + 1L).as("__t"), lit(-1L).as("__d")))
       .unionByName(midnights)
       .groupBy("__t").agg(sum(col("__d")).as("__d"))
-    graft.ml.Evaluation.withRunningTotals(
+    graft.core.PrefixSum.runningTotals(
         deltas, Seq(col("__t")), Map("__c" -> col("__d")))
       .groupBy(to_date(timestamp_micros(col("__t"))).as("__day"))
       .agg(max(col("__c")).cast("long").as("peak_concurrency"))

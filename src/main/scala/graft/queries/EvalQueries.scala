@@ -117,7 +117,8 @@ object EvalQueries {
 
   // -------------------------------------------------------------------
   // q158: cumulative gains / lift by quality decile against the
-  // en-label. Spark ranks via the distributed prefix-sum row number;
+  // en-label. Spark ranks via the distributed row index
+  // (`core.PrefixSum.rowIndex`);
   // the oracle uses the naive global row_number with the identical
   // (quality DESC, doc_id) total order and identical integer tile
   // arithmetic.

@@ -837,31 +837,17 @@ object Curation {
     * separated by end-of-text tokens — offsets here are the pure-token
     * variant).
     *
-    * Scale design: the cumulative token count is a distributed prefix
-    * sum — range-partition by id, window WITHIN each partition, add
-    * per-partition offsets from a numPartitions-row collected total —
-    * the same idiom as Metrics.rocAuc's rank prefix sum. A naive
+    * Scale design: the cumulative token count is the distributed
+    * prefix sum `core.PrefixSum.runningTotals` over id order. A naive
     * `Window.orderBy(id)` would collapse the corpus onto one partition.
     */
   def packOffsets(df: DataFrame, idCol: String, textCol: String,
       window: Int = 512): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val tok = df.select(col(idCol),
       size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"))
-    val parts = tok.repartitionByRange(col(idCol)).sortWithinPartitions(idCol)
-      .withColumn("__pid", spark_partition_id())
-      // lazy: the totals collect below materializes it (one job)
-      .localCheckpoint(false)
-    val totals = parts.groupBy("__pid").agg(sum("n_tokens").as("__t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = totals.map { case (pid, t) => val o = acc; acc += t; (pid, o) }
-    val offDf = offsets.toSeq.toDF("__pid", "__off")
-    val w = Window.partitionBy("__pid").orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parts.join(broadcast(offDf), Seq("__pid"))
-      .withColumn("__cum", sum(col("n_tokens")).over(w) + col("__off"))
+    graft.core.PrefixSum.runningTotals(tok, Seq(col(idCol)),
+        Map("__cum" -> col("n_tokens")))
+      .withColumn("__cum", col("__cum").cast("long"))
       .select(
         col(idCol),
         col("n_tokens"),

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cv.CrossValidation
 import graft.cv.CrossValidation.CvConfig
-import graft.ml.{Metrics, Models}
+import graft.ml.{Metrics, Models, ModelWrapper}
 
 /** A12/A13 invariants on sf0.001 (prediction.py:288-530 semantics):
   * OOF covers every train row exactly once, fold metrics are finite,
@@ -94,25 +95,58 @@ class CrossValidationSpec extends SparkSpec {
     // deterministic pseudo-predictions with ties (97 distinct scores)
     // over 3 groups — exercises the grouped rank prefix sum against the
     // single-group plan, and the scalar byGroup forms against filters
+    // (multi_logloss reads the two-class probability vector `probs`)
     val preds = core.Tables.orders(spark, sf).select(
       (col("o_orderkey") % 3).cast("int").as("fold"),
       (((col("o_orderkey") * 2654435761L) % 97) / lit(96.0)).as("prob"),
       ((col("o_orderkey") + col("o_custkey")) % 3 === 0).cast("int").as("label"))
+      .withColumn("probs", array(lit(1.0) - col("prob"), col("prob")))
     val byFold = Metrics.rocAucByGroup(preds, "fold", "label", "prob")
     (0 until 3).foreach { f =>
       val single = Metrics.rocAuc(preds.filter(col("fold") === f), "label", "prob")
       assert(math.abs(byFold(f) - single) < 1e-12,
         s"grouped AUC must match the single-group plan for fold $f")
     }
-    for (name <- Seq("accuracy_score", "mean_absolute_error", "rmse", "log_loss")) {
-      val grouped = Metrics.byGroup(name).get(preds, "fold", "label", "prob")
+    for ((name, score) <- Seq("accuracy_score", "mean_absolute_error", "rmse",
+        "log_loss").map(_ -> "prob") :+ ("multi_logloss" -> "probs")) {
+      val grouped = Metrics.byGroup(name)(preds, "fold", "label", score)
       (0 until 3).foreach { f =>
         val single = Metrics.registry(name)(
-          preds.filter(col("fold") === f), "label", "prob")
+          preds.filter(col("fold") === f), "label", score)
         assert(math.abs(grouped(f) - single) < 1e-12,
           s"$name byGroup must match filtered evaluation for fold $f")
       }
     }
+  }
+
+  test("the test side is not cached while a seed bag fits") {
+    // Test scoring is lazy and first runs after the CV returns, so a
+    // test-side cache never serves a read; under seed bagging the seeds
+    // would also register and drop one shared entry from Par threads.
+    val Array(tr, te) = frame.randomSplit(Array(0.8, 0.2), seed = 1)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val testPlan = te.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val cachedAtFit = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val model = Models.LogReg(maxIter = 5)
+    val probe = new ModelWrapper {
+      val name = model.name
+      val isClassifier = model.isClassifier
+      def fit(train: DataFrame, valid: Option[DataFrame], features: Seq[String],
+          labelCol: String, seed: Long) = {
+        cachedAtFit.add(cacheManager.lookupCachedData(testPlan).nonEmpty)
+        model.fit(train, valid, features, labelCol, seed)
+      }
+    }
+    val r = CrossValidation.runCvAndPrediction(tr, Some(te), feats, "target",
+      "row_id", probe, cfg, seeds = Seq(1L, 2L, 3L))
+    assert(cachedAtFit.size == 9, "3 seeds x 3 folds")
+    assert(!cachedAtFit.contains(true), "a fit ran while the test frame was cached")
+    val bagged = r.testBagged.get
+    assert(bagged.count() == te.count())
+    assert(bagged.filter(col("seed_1").isNull || col("seed_2").isNull ||
+      col("seed_3").isNull).isEmpty, "every seed scored every test row")
+    r.unpersist()
   }
 
   test("metric registry orientation") {

@@ -50,36 +50,6 @@ class EvaluationSpec extends SparkSpec {
     assert(r.getDouble(0) == 0.0)
   }
 
-  test("withRunningTotals matches a single-partition global window") {
-    val rnd = new scala.util.Random(7)
-    val df = (1 to 500).map(i => (rnd.nextInt(50).toDouble, i.toLong, 1.0))
-      .toDF("v", "id", "one")
-    val got = Evaluation.withRunningTotals(df, Seq(col("v"), col("id")),
-        Map("cum" -> col("one")))
-      .select(col("id"), col("cum")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val w = Window.orderBy(col("v"), col("id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val want = df.withColumn("cum", sum(col("one")).over(w))
-      .select(col("id"), col("cum")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == want)
-  }
-
-  test("withRowNumber under a DESC total order matches row_number()") {
-    val rnd = new scala.util.Random(11)
-    val df = (1 to 300).map(i => (rnd.nextInt(40).toDouble, i.toLong))
-      .toDF("v", "id")
-    val got = Evaluation.withRowNumber(df, Seq(col("v").desc, col("id")), "rn")
-      .select(col("id"), col("rn")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = df.withColumn("rn",
-        row_number().over(Window.orderBy(col("v").desc, col("id"))).cast("long"))
-      .select(col("id"), col("rn")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-  }
-
   // -----------------------------------------------------------------
   // PSI
   // -----------------------------------------------------------------
@@ -982,12 +952,16 @@ class EvaluationSpec extends SparkSpec {
   test("distributed ranking plans: row-scale windows partition by __pid") {
     val rnd = new scala.util.Random(3)
     val df = (1 to 200).map(i => (rnd.nextDouble(), i.toLong)).toDF("v", "id")
-    val ranked = Evaluation.withRowNumber(df, Seq(col("v").desc, col("id")), "rn")
+    val ranked = core.PrefixSum.runningTotals(df, Seq(col("v").desc, col("id")),
+      Map("rn" -> lit(1.0)))
     val plan = ranked.queryExecution.explainString(ExplainMode.fromString("simple"))
     val windows = plan.linesIterator.filter(_.contains("Window")).toSeq
     assert(windows.nonEmpty)
     windows.foreach(l => assert(l.contains("__pid"),
       s"row-scale window must partition by __pid:\n$l"))
+    val indexed = core.PrefixSum.rowIndex(df, Seq(col("v").desc, col("id")), None)._1
+    assert(!indexed.queryExecution.explainString(ExplainMode.fromString("simple"))
+      .contains("Window"), "rowIndex ranks from the partition counter, with no window")
   }
 
   // -----------------------------------------------------------------

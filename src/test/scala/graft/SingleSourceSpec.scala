@@ -5,12 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard: the session config, the bench checksum and the LSH
-  * banding core each live in exactly one place, so every main, the
-  * benchmark and the test suite run the same settings and force queries
-  * the same way, and every near-dup family buckets and caps the same
-  * way: a copy-pasted session setup drifts from the shipped config,
-  * a copied band hash or census drifts from its siblings. No
+/** Source guard: the session config, the bench checksum, the LSH
+  * banding core and the distributed prefix sum each live in exactly one
+  * place, so every main, the benchmark and the test suite run the same
+  * settings and force queries the same way, and every near-dup family
+  * buckets and caps the same way: a copy-pasted session setup drifts
+  * from the shipped config, a copied band hash or census drifts from
+  * its siblings. No
   * SparkSession needed — this is a pure source scan.
   */
 class SingleSourceSpec extends AnyFunSuite {
@@ -45,6 +46,14 @@ class SingleSourceSpec extends AnyFunSuite {
     val found = hits("""\.as\("band"\),\s*xxhash64\(""", "src/main")
     assert(found.map(_.toString) == Seq("src/main/scala/graft/dedup/Banding.scala"),
       s"band-struct hash copies: ${found.mkString(", ")}")
+  }
+
+  test("the distributed prefix sum is written once, in core.PrefixSum") {
+    for (fn <- Seq("spark_partition_id", "monotonically_increasing_id")) {
+      val found = hits(fn + """\(\)""", "src/main").distinct
+      assert(found.map(_.toString) == Seq("src/main/scala/graft/core/PrefixSum.scala"),
+        s"$fn() outside core/PrefixSum.scala: ${found.mkString(", ")}")
+    }
   }
 
   test("the over-cap bucket census aggregate is written once") {
