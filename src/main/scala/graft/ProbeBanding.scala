@@ -39,13 +39,11 @@ object ProbeBanding {
   /** The census of one (bands, rowsPerBand) shape over per-doc gram
     * arrays (id, __gs). */
   def shapeCensus(grams: DataFrame, bands: Int, rowsPerBand: Int): Shape = {
-    val banded = Banding.explodeBands(
+    val Seq(all, c10k, c1k, c100) = graft.core.Materialize.scoped(Banding.explodeBands(
         Dedup.enrichedGrams(grams, bands * rowsPerBand),
-        Banding.minhashBands(bands, rowsPerBand), "id")
-      .cache()
-    val Seq(all, c10k, c1k, c100) =
+        Banding.minhashBands(bands, rowsPerBand), "id")) { banded =>
       Seq(Int.MaxValue, 10000, 1000, 100).map(Banding.census(banded, _))
-    banded.unpersist()
+    }
     Shape(all.keptMass, c10k.keptMass, c1k.keptMass, c100.keptMass,
       all.maxBucket, all.buckets)
   }
@@ -62,18 +60,19 @@ object ProbeBanding {
       else Seq((8, 4), (16, 4), (8, 6), (12, 6), (16, 6), (8, 8))
     val spark = graft.core.Sessions.local()
     val docs = graft.core.Tables.documents(spark, dir)
-    val grams = Dedup.charNgramArrays(docs, "doc_id", "text", ngram).cache()
-    grams.count()
-    shapes.foreach { case (b, r) =>
-      val t0 = System.nanoTime()
-      val s = shapeCensus(grams, b, r)
-      // an EMPTY corpus (no doc as long as the n-gram width) censuses
-      // to all zeros
-      println(f"[probebanding] ngram=$ngram b=$b%2d r=$r%d " +
-        f"candAll=${s.candAll.toDouble}%.3g cap10k=${s.cap10k.toDouble}%.3g " +
-        f"cap1k=${s.cap1k.toDouble}%.3g cap100=${s.cap100.toDouble}%.3g " +
-        f"maxBucket=${s.maxBucket}%d buckets=${s.buckets}%d " +
-        f"wall=${(System.nanoTime() - t0) / 1e9}%.0fs")
+    graft.core.Materialize.scoped(
+        Dedup.charNgramArrays(docs, "doc_id", "text", ngram), eager = true) { grams =>
+      shapes.foreach { case (b, r) =>
+        val t0 = System.nanoTime()
+        val s = shapeCensus(grams, b, r)
+        // an EMPTY corpus (no doc as long as the n-gram width) censuses
+        // to all zeros
+        println(f"[probebanding] ngram=$ngram b=$b%2d r=$r%d " +
+          f"candAll=${s.candAll.toDouble}%.3g cap10k=${s.cap10k.toDouble}%.3g " +
+          f"cap1k=${s.cap1k.toDouble}%.3g cap100=${s.cap100.toDouble}%.3g " +
+          f"maxBucket=${s.maxBucket}%d buckets=${s.buckets}%d " +
+          f"wall=${(System.nanoTime() - t0) / 1e9}%.0fs")
+      }
     }
     spark.stop()
   }

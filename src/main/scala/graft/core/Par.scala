@@ -28,6 +28,11 @@ import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorServic
   * thread. Results always return in input order, and every fit is
   * seeded-deterministic, so output is identical to the sequential
   * loop.
+  *
+  * A frame that every task of a fan-out reads is materialized BEFORE
+  * the fan-out — `Materialize.scoped(df, eager = true)` inside one
+  * function, an eager `localCheckpoint` for a frame that escapes —
+  * or the concurrent first readers each compute it.
   */
 object Par {
 

@@ -3,6 +3,7 @@ package graft.cv
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.{Materialize, Par}
 import graft.ml.{FittedModel, Metrics, ModelWrapper}
 
 /** A12/A13: the CV / out-of-fold prediction engine — the heart of the
@@ -22,9 +23,12 @@ import graft.ml.{FittedModel, Metrics, ModelWrapper}
   *  - bagging over seeds (prediction.py:418-530) loops CV per seed and
   *    reduces per-seed OOF/test columns the same way (J1+A8/A10).
   *
-  * The folded training frame is cached once and reused by every
-  * (seed x fold) fit — the reference re-slices pandas frames instead
-  * (SURVEY §4 physical-execution note).
+  * The folded training frame is a scoped cache (`core.Materialize`)
+  * that every (seed x fold) fit of one call reads and the call releases
+  * — the reference re-slices pandas frames instead (SURVEY §4
+  * physical-execution note). The OOF and bagged frames a call returns
+  * are local checkpoints: the caller owns them, and their blocks go
+  * with the caller's last reference.
   */
 object CrossValidation {
 
@@ -62,17 +66,15 @@ object CrossValidation {
       cvResults: DataFrame,
       cvScore: Double,
       cvStd: Double,
-      importances: Option[DataFrame]) {
-    /** Releases the frames this result caches (`oof`, `oofBagged`,
-      * `testBagged`); call it once they are written. */
-    def unpersist(): Unit = (oof +: oofBagged +: testBagged.toSeq).foreach(_.unpersist())
-  }
+      importances: Option[DataFrame])
 
-  private def round6(x: Double, d: Int): Double =
+  /** `x` rounded half-up to `d` decimals (the reference's metric
+    * rounding). */
+  private[graft] def round6(x: Double, d: Int): Double =
     BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Population std (numpy default ddof=0, prediction.py:405). */
-  private def stdPop(xs: Seq[Double]): Double = {
+  private[graft] def stdPop(xs: Seq[Double]): Double = {
     val m = xs.sum / xs.size
     math.sqrt(xs.map(x => (x - m) * (x - m)).sum / xs.size)
   }
@@ -81,15 +83,16 @@ object CrossValidation {
     Metrics.registry.getOrElse(cfg.metricName,
       throw new IllegalArgumentException(s"unknown metric ${cfg.metricName}"))
 
-  /** Per-fold scores and the total score of a cached OOF frame. The
-    * per-fold evaluation (one grouped pass) and the total-score
-    * evaluation are INDEPENDENT blocking reads of the cached frame —
-    * overlapped on the Par pool (each is a short chain of small jobs,
-    * so the driver round-trips are the cost). */
-  private def scores(oof: DataFrame, target: String, scoreCol: String,
+  /** Per-fold scores and the total score of a pinned OOF frame with a
+    * `fold` column in [0, cfg.numFolds), each rounded to
+    * cfg.metricsDecimals. The per-fold evaluation (one grouped pass)
+    * and the total-score evaluation are INDEPENDENT blocking reads of
+    * the pinned frame — overlapped on the Par pool (each is a short
+    * chain of small jobs, so the driver round-trips are the cost). */
+  private[graft] def scores(oof: DataFrame, target: String, scoreCol: String,
       cfg: CvConfig): (Seq[Double], Double) = {
     val m = metric(cfg)
-    val evals = graft.core.Par.mapPar(Seq(true, false)) {
+    val evals = Par.mapPar(Seq(true, false)) {
       case true =>
         val byFold = Metrics.byGroup(cfg.metricName)(oof, "fold", target, scoreCol)
         (0 until cfg.numFolds).map(k => round6(byFold(k), cfg.metricsDecimals))
@@ -98,6 +101,17 @@ object CrossValidation {
     }
     (evals(0), evals(1).head)
   }
+
+  /** Runs `body` on `train`'s (id, target, features) projection with a
+    * `fold` column, held in a scoped cache: every fit of the body reads
+    * the same assignment, and MLlib's random-forest bagging depends on
+    * its partitioning. */
+  private def withFolds[T](train: DataFrame, features: Seq[String], target: String,
+      idCol: String, cfg: CvConfig)(body: DataFrame => T): T =
+    Materialize.scoped(Folds.assign(
+      train.select((idCol +: target +: features).map(col): _*),
+      cfg.numFolds, cfg.dataSplitSeed,
+      if (cfg.stratified) Some(target) else None))(body)
 
   /** One seed's k-fold CV. `train` must carry `idCol` (unique row key),
     * the features, and `target`. `preFolded` lets the bagging loop
@@ -114,71 +128,67 @@ object CrossValidation {
       cfg: CvConfig,
       seedVal: Long,
       preFolded: Option[DataFrame] = None): SeedResult = {
+    def run(folded: DataFrame): SeedResult = {
+      // Independent per-fold fits run concurrently (graft.core.Par):
+      // the blocking MLlib fit dominates and its fixed multi-job
+      // overhead overlaps across folds; scored frames are lazy plans.
+      val perFold = Par.mapPar(0 until cfg.numFolds) { k =>
+        val trainK = folded.filter(col("fold") =!= k)
+        val validK = folded.filter(col("fold") === k)
+        val fitted: FittedModel =
+          model.fit(trainK, Some(validK), features, target, seedVal)
 
-    val folded = preFolded.getOrElse(Folds.assign(
-      train.select((idCol +: target +: features).map(col): _*),
-      cfg.numFolds, cfg.dataSplitSeed,
-      if (cfg.stratified) Some(target) else None).cache())
+        val oofK = fitted
+          .score(validK, cfg.predictProbability, cfg.classLabel)
+          .select(col(idCol), col(target), col("fold"),
+            col("__score").as("oof_score"))
 
-    // Independent per-fold fits run concurrently (graft.core.Par):
-    // the blocking MLlib fit dominates and its fixed multi-job
-    // overhead overlaps across folds; scored frames are lazy plans.
-    val perFold = graft.core.Par.mapPar(0 until cfg.numFolds) { k =>
-      val trainK = folded.filter(col("fold") =!= k)
-      val validK = folded.filter(col("fold") === k)
-      val fitted: FittedModel =
-        model.fit(trainK, Some(validK), features, target, seedVal)
+        val subK = test.map { t =>
+          fitted.scoreTest(t, cfg.predictProbability, cfg.classLabel)
+            .select(col(idCol), col("__score").as("sub_score"))
+        }
 
-      val oofK = fitted
-        .score(validK, cfg.predictProbability, cfg.classLabel)
-        .select(col(idCol), col(target), col("fold"),
-          col("__score").as("oof_score"))
+        val impsK = fitted.featureImportances.toList.flatMap { imps =>
+          imps.map { case (f, v) => (f, v, k + 1) }
+        }
+        (oofK, subK, impsK)
+      }
+      val oofParts = perFold.map(_._1)
+      val subParts = perFold.flatMap(_._2)
+      val impRows = perFold.toList.flatMap(_._3)
 
-      val subK = test.map { t =>
-        fitted.scoreTest(t, cfg.predictProbability, cfg.classLabel)
-          .select(col(idCol), col("__score").as("sub_score"))
+      // the k + 1 metrics below read it, and so does the caller
+      val oof = Materialize.checkpoint(oofParts.reduce(_ unionByName _))
+
+      val (foldScores, cvScore) = scores(oof, target, "oof_score", cfg)
+      val cvStd = round6(stdPop(foldScores), cfg.metricsDecimals)
+
+      // Test reduction over folds: mean of probabilities, else majority
+      // vote (ties -> smallest value, scipy.stats.mode; prediction.py:414).
+      val sub = test.map { _ =>
+        val all = subParts.reduce(_ unionByName _)
+        if (cfg.predictProbability)
+          all.groupBy(idCol).agg(avg("sub_score").as(target))
+        else {
+          val counts = all.groupBy(col(idCol), col("sub_score")).count()
+          val w = Window.partitionBy(idCol)
+            .orderBy(col("count").desc, col("sub_score").asc)
+          counts.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1)
+            .select(col(idCol), col("sub_score").as(target))
+        }
       }
 
-      val impsK = fitted.featureImportances.toList.flatMap { imps =>
-        imps.map { case (f, v) => (f, v, k + 1) }
-      }
-      (oofK, subK, impsK)
+      val importances =
+        if (impRows.nonEmpty) {
+          val spark = train.sparkSession
+          import spark.implicits._
+          Some(impRows.toDF("feature", "importance", "fold"))
+        } else None
+
+      SeedResult(oof, sub, foldScores, cvScore, cvStd, importances)
     }
-    val oofParts = perFold.map(_._1)
-    val subParts = perFold.flatMap(_._2)
-    val impRows = perFold.toList.flatMap(_._3)
-
-    val oof = oofParts.reduce(_ unionByName _).cache()
-    oof.count() // materialize before computing k + 1 metrics over it
-
-    val (foldScores, cvScore) = scores(oof, target, "oof_score", cfg)
-    val cvStd = round6(stdPop(foldScores), cfg.metricsDecimals)
-
-    // Test reduction over folds: mean of probabilities, else majority
-    // vote (ties -> smallest value, scipy.stats.mode; prediction.py:414).
-    val sub = test.map { _ =>
-      val all = subParts.reduce(_ unionByName _)
-      if (cfg.predictProbability)
-        all.groupBy(idCol).agg(avg("sub_score").as(target))
-      else {
-        val counts = all.groupBy(col(idCol), col("sub_score")).count()
-        val w = Window.partitionBy(idCol)
-          .orderBy(col("count").desc, col("sub_score").asc)
-        counts.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col(idCol), col("sub_score").as(target))
-      }
-    }
-
-    val importances =
-      if (impRows.nonEmpty) {
-        val spark = train.sparkSession
-        import spark.implicits._
-        Some(impRows.toDF("feature", "importance", "fold"))
-      } else None
-
-    if (preFolded.isEmpty) folded.unpersist()
-    SeedResult(oof, sub, foldScores, cvScore, cvStd, importances)
+    preFolded.fold(withFolds(train, features, target, idCol, cfg)(run))(run)
   }
 
   /** Element-wise mean of an array column per key: posexplode →
@@ -207,32 +217,27 @@ object CrossValidation {
       cfg: CvConfig,
       seedVal: Long): SeedResult = {
     require(model.isClassifier, "probability matrix requires a classifier")
-    val folded = Folds.assign(
-      train.select((idCol +: target +: features).map(col): _*),
-      cfg.numFolds, cfg.dataSplitSeed,
-      if (cfg.stratified) Some(target) else None).cache()
-
-    val perFold = graft.core.Par.mapPar(0 until cfg.numFolds) { k =>
-      val fitted = model.fit(folded.filter(col("fold") =!= k), None, features, target, seedVal)
-      val oofK = fitted.scoreAll(folded.filter(col("fold") === k))
-        .select(col(idCol), col(target), col("fold"), col("__probs").as("oof_probs"))
-      val subK = test.map { t =>
-        fitted.scoreAll(t)
-          .select(col(idCol), col("__probs").as("sub_probs"))
+    withFolds(train, features, target, idCol, cfg) { folded =>
+      val perFold = Par.mapPar(0 until cfg.numFolds) { k =>
+        val fitted = model.fit(folded.filter(col("fold") =!= k), None, features, target, seedVal)
+        val oofK = fitted.scoreAll(folded.filter(col("fold") === k))
+          .select(col(idCol), col(target), col("fold"), col("__probs").as("oof_probs"))
+        val subK = test.map { t =>
+          fitted.scoreAll(t)
+            .select(col(idCol), col("__probs").as("sub_probs"))
+        }
+        (oofK, subK)
       }
-      (oofK, subK)
+      val oofParts = perFold.map(_._1)
+      val subParts = perFold.flatMap(_._2)
+      val oof = Materialize.checkpoint(oofParts.reduce(_ unionByName _))
+      val (foldScores, cvScore) = scores(oof, target, "oof_probs", cfg)
+      val sub = test.map { _ =>
+        elementwiseMean(subParts.reduce(_ unionByName _), idCol, "sub_probs", "probs")
+      }
+      SeedResult(oof, sub, foldScores, cvScore,
+        round6(stdPop(foldScores), cfg.metricsDecimals), None)
     }
-    val oofParts = perFold.map(_._1)
-    val subParts = perFold.flatMap(_._2)
-    val oof = oofParts.reduce(_ unionByName _).cache()
-    oof.count()
-    val (foldScores, cvScore) = scores(oof, target, "oof_probs", cfg)
-    val sub = test.map { _ =>
-      elementwiseMean(subParts.reduce(_ unionByName _), idCol, "sub_probs", "probs")
-    }
-    folded.unpersist()
-    SeedResult(oof, sub, foldScores, cvScore,
-      round6(stdPop(foldScores), cfg.metricsDecimals), None)
   }
 
   /** Bagging over seeds (A13): run CV per seed, bind per-seed OOF/test
@@ -255,34 +260,29 @@ object CrossValidation {
     val spark = train.sparkSession
     import spark.implicits._
 
-    // One fold assignment serves every fresh seed (membership is a
-    // function of dataSplitSeed only); skipped entirely when every
-    // needed fit is already supplied via preSeeded — callers that
-    // memoize a single-seed run (q31 -> q32) hand it in so the bagged
-    // query refits nothing.
-    lazy val folded = Folds.assign(
-      train.select((idCol +: target +: features).map(col): _*),
-      cfg.numFolds, cfg.dataSplitSeed,
-      if (cfg.stratified) Some(target) else None).cache()
-    var foldedUsed = false
-    def fitSeed(s: Long): SeedResult = preSeeded.getOrElse(s, {
-      foldedUsed = true
-      runCvOneSeed(train, test, features, target, idCol, model, cfg, s,
-        preFolded = Some(folded))
-    })
     // Seedless models (hasSeedParam=false, model_wrappers.py:242-258
     // sklearn adapters without random_state) fit identically for every
     // seed — the reference still refits per seed; we run one CV and
     // reuse its result, which is observationally equivalent and k times
     // cheaper for a k-seed bag. A preSeeded entry for ANY seed serves
     // all of them in that case.
-    val perSeed =
-      if (model.hasSeedParam) graft.core.Par.mapPar(seeds)(s => s -> fitSeed(s))
-      else {
-        val one = preSeeded.values.headOption.getOrElse(fitSeed(seeds.head))
-        seeds.map(s => s -> one)
+    val fresh =
+      if (model.hasSeedParam) seeds.filterNot(preSeeded.contains)
+      else if (preSeeded.isEmpty) seeds.take(1)
+      else Nil
+    // One fold assignment serves every fresh seed (membership is a
+    // function of dataSplitSeed only); none is built when every needed
+    // fit is already supplied via preSeeded — callers that memoize a
+    // single-seed run (q31 -> q32) hand it in so the bagged query
+    // refits nothing.
+    val fitted = if (fresh.isEmpty) preSeeded else preSeeded ++
+      withFolds(train, features, target, idCol, cfg) { folded =>
+        Par.mapPar(fresh)(s => s -> runCvOneSeed(train, test, features, target,
+          idCol, model, cfg, s, preFolded = Some(folded)))
       }
-    if (foldedUsed) folded.unpersist()
+    val perSeed =
+      if (model.hasSeedParam) seeds.map(s => s -> fitted(s))
+      else seeds.map(_ -> fitted.values.head)
 
     val cvResults = perSeed.map { case (s, r) =>
       (s, r.cvScore, r.cvStd, r.foldScores)
@@ -329,14 +329,18 @@ object CrossValidation {
       bagged.select(col(idCol), finalV.as(outCol))
     }
 
+    // lazy checkpoints, owned by the caller: the metric below is the
+    // first reader of oofBag (and of oofBagged under it), the caller's
+    // writes read the pinned blocks
     val targetSide = perSeed.head._2.oof.select(col(idCol), col(target))
     val oofBagged = bagSeeds(perSeed.map { case (s, r) => s -> r.oof }, "oof_score")
-      .join(targetSide, Seq(idCol)).cache()
+      .join(targetSide, Seq(idCol)).localCheckpoint(false)
     val oofBag = reduceSeedCols(oofBagged, oofCol)
-      .join(targetSide, Seq(idCol)).cache()
+      .join(targetSide, Seq(idCol)).localCheckpoint(false)
 
     val subBagged = test.map { _ =>
-      bagSeeds(perSeed.map { case (s, r) => s -> r.testPreds.get }, target).cache()
+      bagSeeds(perSeed.map { case (s, r) => s -> r.testPreds.get }, target)
+        .localCheckpoint(false)
     }
     val subBag = subBagged.map(b => reduceSeedCols(b, target))
 
@@ -350,11 +354,6 @@ object CrossValidation {
       }
       if (imps.nonEmpty) Some(imps.reduce(_ unionByName _)) else None
     }
-
-    // Only release OOF caches this call created — preSeeded results are
-    // owned (and possibly still served) by the caller's memo.
-    val supplied = preSeeded.values.toSet
-    perSeed.map(_._2).distinct.filterNot(supplied).foreach(_.oof.unpersist())
     BaggedResult(oofBag, subBag, oofBagged, subBagged, cvResults, cvScore, cvStd, importances)
   }
 }

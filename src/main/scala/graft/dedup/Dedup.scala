@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Deduplication operators for large-scale training-data pipelines —
   * the LLM-data extension family required beyond the reference's
@@ -288,22 +289,22 @@ object Dedup {
       s"minBandAgreements must be in [1, $bands], got $minBandAgreements")
     // ONE corpus-scale cache; the census fills it and every later
     // stage reads it
-    val enriched = enrichedGrams(docGrams, bands * rowsPerBand).cache()
-    val (sized, census) = Banding.capped(
-      Banding.explodeBands(enriched, Banding.minhashBands(bands, rowsPerBand), "id"),
-      maxBucketSize, "minhash LSH", "signature rows",
-      sizing = c => minHashSizingIssue(c.rows / bands, bands, rowsPerBand,
-        minBandAgreements, maxBucketSize, c.rows, c.overRows, c.keptMass))
-    val gs = enriched.select(col("id"), col("__gs").as("gs"))
-    val verifiedPlan = jaccardFromGramSets(
-        Banding.candidates(sized, minBandAgreements), gs, gs)
-      .filter(col("jaccard") >= threshold)
-    // the registry-level Bench --explain sees only Scan ExistingRDD past the
-    // checkpoint below — this mark is the real pre-checkpoint plan
-    graft.core.PlanTrace.mark("minHashNearDup_verified", verifiedPlan)
-    val verified = verifiedPlan.localCheckpoint() // materialize before releasing the cache
-    enriched.unpersist()
-    (verified, Banding.dropStats(docGrams.sparkSession, census))
+    Materialize.scoped(enrichedGrams(docGrams, bands * rowsPerBand)) { enriched =>
+      val (sized, census) = Banding.capped(
+        Banding.explodeBands(enriched, Banding.minhashBands(bands, rowsPerBand), "id"),
+        maxBucketSize, "minhash LSH", "signature rows",
+        sizing = c => minHashSizingIssue(c.rows / bands, bands, rowsPerBand,
+          minBandAgreements, maxBucketSize, c.rows, c.overRows, c.keptMass))
+      val gs = enriched.select(col("id"), col("__gs").as("gs"))
+      val verifiedPlan = jaccardFromGramSets(
+          Banding.candidates(sized, minBandAgreements), gs, gs)
+        .filter(col("jaccard") >= threshold)
+      // the registry-level Bench --explain sees only Scan ExistingRDD past the
+      // checkpoint below — this mark is the real pre-checkpoint plan
+      graft.core.PlanTrace.mark("minHashNearDup_verified", verifiedPlan)
+      val verified = verifiedPlan.localCheckpoint() // materialize before releasing the cache
+      (verified, Banding.dropStats(docGrams.sparkSession, census))
+    }
   }
 
   /** Persist a MinHash band index for INCREMENTAL dedup — the
@@ -321,30 +322,29 @@ object Dedup {
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
       path: String, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 2): Unit = {
-    val g = enrichedGrams(
-      shingleArrays(df, idCol, textCol, shingleK), bands * rowsPerBand)
-      .cache()
-    // cluster by the partition column before the partitionBy write:
-    // without it every write task holds every band and emits one file
-    // per (task, band) — 512 tiny files at 32 tasks × 16 bands, whose
-    // per-file open cost then dominates every probe's bands scan
-    // (guide's small-files rule). `splits` sub-buckets each band by a
-    // deterministic bsig hash so file sizing follows the session's
-    // shuffle parallelism instead of collapsing each band to a single
-    // task at cluster scale.
-    val spark = df.sparkSession
-    val splits = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt / bands)
-    Banding.explodeBands(g, Banding.minhashBands(bands, rowsPerBand), "id")
-      .repartition(bands * splits, col("band"),
-        pmod(xxhash64(col("bsig")), lit(splits)))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
-    g.select(col("id"), col("__gs").as("gs"))
-      .write.mode("overwrite").parquet(s"$path/grams")
-    import spark.implicits._
-    Seq((shingleK, bands, rowsPerBand))
-      .toDF("shingle_k", "bands", "rows_per_band")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
-    g.unpersist()
+    Materialize.scoped(enrichedGrams(
+        shingleArrays(df, idCol, textCol, shingleK), bands * rowsPerBand)) { g =>
+      // cluster by the partition column before the partitionBy write:
+      // without it every write task holds every band and emits one file
+      // per (task, band) — 512 tiny files at 32 tasks × 16 bands, whose
+      // per-file open cost then dominates every probe's bands scan
+      // (guide's small-files rule). `splits` sub-buckets each band by a
+      // deterministic bsig hash so file sizing follows the session's
+      // shuffle parallelism instead of collapsing each band to a single
+      // task at cluster scale.
+      val spark = df.sparkSession
+      val splits = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt / bands)
+      Banding.explodeBands(g, Banding.minhashBands(bands, rowsPerBand), "id")
+        .repartition(bands * splits, col("band"),
+          pmod(xxhash64(col("bsig")), lit(splits)))
+        .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
+      g.select(col("id"), col("__gs").as("gs"))
+        .write.mode("overwrite").parquet(s"$path/grams")
+      import spark.implicits._
+      Seq((shingleK, bands, rowsPerBand))
+        .toDF("shingle_k", "bands", "rows_per_band")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
+    }
   }
 
   /** Verified near-dup pairs between a NEW batch and a persisted band
@@ -394,37 +394,38 @@ object Dedup {
           s"rowsPerBand=$mr) but probed with ($shingleK, $bands, " +
           s"$rowsPerBand) — a mismatched probe finds no candidates")
     }
-    val gNew = enrichedGrams(
-      shingleArrays(newDocs, idCol, textCol, shingleK), bands * rowsPerBand)
-      .cache()
-    // cache the THIN combined banded frame (3 longs + flag per row):
-    // the census and the candidate join both read it, so the new
-    // batch's signatures and the index parquet scan each run once
-    val combined = spark.read.parquet(s"$path/bands")
-      .withColumn("__new", lit(false))
-      .unionByName(Banding.explodeBands(gNew,
-        Banding.minhashBands(bands, rowsPerBand), "id").withColumn("__new", lit(true)))
-      .cache()
-    val where = s"[band-index probe at $path]"
-    val (sized, census) = Banding.capped(combined, maxBucketSize, where,
-      "signature rows (indexed + new combined)", newFlag = Some("__new"),
-      sizing = c => minHashSizingIssue(c.probeRows / bands, bands,
-          rowsPerBand, minBandAgreements = 1, maxBucketSize, c.rows,
-          c.overRows, c.keptMass)
-        .map { case (fatal, msg) => (fatal, s"$where $msg") })
-    val cand = Banding.candidates(sized, newFlag = Some("__new")).cache()
-    // both gram stores semi-join down to candidate ids before the
-    // pair joins (left_semi is at-most-once, no distinct needed)
-    val gsOld = spark.read.parquet(s"$path/grams")
-      .join(cand.select(col("id_1").as("id")), Seq("id"), "left_semi")
-    val gsNew = gNew.select(col("id"), col("__gs").as("gs"))
-      .join(cand.select(col("id_2").as("id")), Seq("id"), "left_semi")
-    val verifiedPlan = jaccardFromGramSets(cand, gsOld, gsNew)
-      .filter(col("jaccard") >= threshold)
-    graft.core.PlanTrace.mark("nearDupAgainstIndex_verified", verifiedPlan)
-    val verified = verifiedPlan.localCheckpoint() // materialize before releasing the caches
-    Seq(cand, combined, gNew).foreach(_.unpersist())
-    (verified, Banding.dropStats(spark, census))
+    Materialize.scoped(enrichedGrams(
+        shingleArrays(newDocs, idCol, textCol, shingleK), bands * rowsPerBand)) { gNew =>
+      // cache the THIN combined banded frame (3 longs + flag per row):
+      // the census and the candidate join both read it, so the new
+      // batch's signatures and the index parquet scan each run once
+      val banded = spark.read.parquet(s"$path/bands")
+        .withColumn("__new", lit(false))
+        .unionByName(Banding.explodeBands(gNew,
+          Banding.minhashBands(bands, rowsPerBand), "id").withColumn("__new", lit(true)))
+      Materialize.scoped(banded) { combined =>
+        val where = s"[band-index probe at $path]"
+        val (sized, census) = Banding.capped(combined, maxBucketSize, where,
+          "signature rows (indexed + new combined)", newFlag = Some("__new"),
+          sizing = c => minHashSizingIssue(c.probeRows / bands, bands,
+              rowsPerBand, minBandAgreements = 1, maxBucketSize, c.rows,
+              c.overRows, c.keptMass)
+            .map { case (fatal, msg) => (fatal, s"$where $msg") })
+        Materialize.scoped(Banding.candidates(sized, newFlag = Some("__new"))) { cand =>
+          // both gram stores semi-join down to candidate ids before the
+          // pair joins (left_semi is at-most-once, no distinct needed)
+          val gsOld = spark.read.parquet(s"$path/grams")
+            .join(cand.select(col("id_1").as("id")), Seq("id"), "left_semi")
+          val gsNew = gNew.select(col("id"), col("__gs").as("gs"))
+            .join(cand.select(col("id_2").as("id")), Seq("id"), "left_semi")
+          val verifiedPlan = jaccardFromGramSets(cand, gsOld, gsNew)
+            .filter(col("jaccard") >= threshold)
+          graft.core.PlanTrace.mark("nearDupAgainstIndex_verified", verifiedPlan)
+          val verified = verifiedPlan.localCheckpoint() // materialize before releasing the caches
+          (verified, Banding.dropStats(spark, census))
+        }
+      }
+    }
   }
 
   private[graft] def exactJaccardOnPairs(pairs: DataFrame, sh: DataFrame): DataFrame = {
@@ -531,30 +532,30 @@ object Dedup {
       maxBucketSize: Int = 10000): (DataFrame, DataFrame) = {
     val nBands = maxHamming + 1
     val bandBits = bits / nBands
-    val sig = simHash(df, idCol, textCol, bits).cache()
-    val bandKeys = array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("simhash"), b * bandBits)
-          .mod(1L << bandBits).as("bsig"))
-    }: _*)
-    // the census fills the cache every later stage reads, and the
-    // sizing rule (n = rows / nBands) fires BEFORE the quadratic
-    // candidate join is paid
-    val (sized, census) = Banding.capped(
-      Banding.explodeBands(sig, bandKeys, "id", "simhash"), maxBucketSize,
-      "simhash LSH", "signature rows",
-      sizing = c => simHashSizingIssue(c.rows / nBands, maxHamming, bits,
-        maxBucketSize))
-    // verify-then-dedup: the signatures ride the candidate join, so a
-    // pair's hamming is one xor+popcount per shared band and the
-    // distinct runs on survivors only
-    val out = Banding.pairs(sized, carry = Seq("simhash"))
-      .select(col("id_1"), col("id_2"),
-        hamming(col("simhash_1"), col("simhash_2")).as("hamming"))
-      .filter(col("hamming") <= maxHamming).distinct()
-      .localCheckpoint()
-    sig.unpersist()
-    (out, Banding.dropStats(df.sparkSession, census))
+    Materialize.scoped(simHash(df, idCol, textCol, bits)) { sig =>
+      val bandKeys = array((0 until nBands).map { b =>
+        struct(lit(b).as("band"),
+          shiftrightunsigned(col("simhash"), b * bandBits)
+            .mod(1L << bandBits).as("bsig"))
+      }: _*)
+      // the census fills the cache every later stage reads, and the
+      // sizing rule (n = rows / nBands) fires BEFORE the quadratic
+      // candidate join is paid
+      val (sized, census) = Banding.capped(
+        Banding.explodeBands(sig, bandKeys, "id", "simhash"), maxBucketSize,
+        "simhash LSH", "signature rows",
+        sizing = c => simHashSizingIssue(c.rows / nBands, maxHamming, bits,
+          maxBucketSize))
+      // verify-then-dedup: the signatures ride the candidate join, so a
+      // pair's hamming is one xor+popcount per shared band and the
+      // distinct runs on survivors only
+      val out = Banding.pairs(sized, carry = Seq("simhash"))
+        .select(col("id_1"), col("id_2"),
+          hamming(col("simhash_1"), col("simhash_2")).as("hamming"))
+        .filter(col("hamming") <= maxHamming).distinct()
+        .localCheckpoint()
+      (out, Banding.dropStats(df.sparkSession, census))
+    }
   }
 
   /** The sizing-rule check, factored pure for spec-ability. None = the

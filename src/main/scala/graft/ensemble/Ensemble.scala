@@ -2,6 +2,7 @@ package graft.ensemble
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 import graft.cv.CrossValidation
 import graft.cv.CrossValidation.{BaggedResult, CvConfig}
 import graft.ml.{Metrics, ModelWrapper}
@@ -129,39 +130,28 @@ object Ensemble {
       metricName: String, numFolds: Int, dataSplitSeed: Long, blenderSeed: Long,
       nIter: Int, stratified: Boolean = false, hardVote: Boolean = false,
       metricsDecimals: Int = 6): BlendCvResult = {
-    import org.apache.spark.sql.functions.{col, round => sround}
-    val metric = Metrics.registry(metricName)
-    val folded = graft.cv.Folds.assign(oofMatrix, numFolds, dataSplitSeed,
-      if (stratified) Some(target) else None).cache()
-
-    var oofParts = List.empty[DataFrame]
-    var foldScores = List.empty[Double]
-    var weightsHist = List.empty[(Int, Map[String, Double])]
-    (0 until numFolds).foreach { k =>
-      val trainK = folded.filter(col("fold") =!= k)
-      val validK = folded.filter(col("fold") === k)
-      val r = blend(trainK, predCols, target, metricName, nIter,
-        blenderSeed, hardVote, metricsDecimals)
-      weightsHist ::= (k + 1) -> r.weights
-      val w = predCols.map(r.weights)
-      val voted = validK.withColumn("__blend",
-        if (hardVote) graft.ops.RowOps.weightedVote(predCols.map(col), w).cast("double")
-        else graft.ops.RowOps.weightedMean(predCols.map(col), w))
-      val scored = voted.select(col(idCol), col(target), col("fold"), col("__blend"))
-      oofParts ::= scored
-      foldScores ::= BigDecimal(metric(scored, target, "__blend"))
-        .setScale(metricsDecimals, BigDecimal.RoundingMode.HALF_UP).toDouble
+    import org.apache.spark.sql.functions.col
+    val folds = graft.cv.Folds.assign(oofMatrix, numFolds, dataSplitSeed,
+      if (stratified) Some(target) else None)
+    val (oof, foldWeights) = Materialize.scoped(folds) { folded =>
+      val perFold = (0 until numFolds).map { k =>
+        val r = blend(folded.filter(col("fold") =!= k), predCols, target, metricName,
+          nIter, blenderSeed, hardVote, metricsDecimals)
+        val w = predCols.map(r.weights)
+        val voted = folded.filter(col("fold") === k).withColumn("__blend",
+          if (hardVote) graft.ops.RowOps.weightedVote(predCols.map(col), w).cast("double")
+          else graft.ops.RowOps.weightedMean(predCols.map(col), w))
+        (voted.select(col(idCol), col(target), col("fold"), col("__blend")),
+          (k + 1) -> r.weights)
+      }
+      // it escapes in the result, and the scores below read it
+      (Materialize.checkpoint(perFold.map(_._1).reduce(_ unionByName _)), perFold.map(_._2))
     }
-    val oof = oofParts.reduce(_ unionByName _).cache()
-    oof.count()
-    val cvScore = BigDecimal(metric(oof, target, "__blend"))
-      .setScale(metricsDecimals, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val fs = foldScores.reverse
-    val mean = fs.sum / fs.size
-    val cvStd = BigDecimal(math.sqrt(fs.map(x => (x - mean) * (x - mean)).sum / fs.size))
-      .setScale(metricsDecimals, BigDecimal.RoundingMode.HALF_UP).toDouble
-    folded.unpersist()
-    BlendCvResult(oof, fs, cvScore, cvStd, weightsHist.reverse)
+    val cfg = CvConfig(numFolds = numFolds, metricName = metricName,
+      metricsDecimals = metricsDecimals)
+    val (foldScores, cvScore) = CrossValidation.scores(oof, target, "__blend", cfg)
+    BlendCvResult(oof, foldScores, cvScore,
+      CrossValidation.round6(CrossValidation.stdPop(foldScores), metricsDecimals), foldWeights)
   }
 
   /** M8: weighted-vote blender — GP-surrogate Bayesian search over the
@@ -185,42 +175,41 @@ object Ensemble {
     val better: (Double, Double) => Boolean =
       if (Metrics.greaterIsBetter(metricName)) _ > _ else _ < _
     val maximize = Metrics.greaterIsBetter(metricName)
-    val cached = oof.cache()
 
     def normalize(raw: Seq[Double]): Seq[Double] = {
       val s = raw.sum
       val safe = if (s <= 0) raw.map(_ => 1.0 / raw.size) else raw.map(_ / s)
-      safe.map(x => BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      safe.map(CrossValidation.round6(_, 3))
     }
-    def scoreOf(w: Seq[Double]): Double = {
-      val voted =
-        if (hardVote)
-          cached.withColumn("__blend",
-            graft.ops.RowOps.weightedVote(predCols.map(col), w).cast("double"))
-        else
-          cached.withColumn("__blend", graft.ops.RowOps.weightedMean(predCols.map(col), w))
-      BigDecimal(metric(voted, target, "__blend"))
-        .setScale(metricsDecimals, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-
-    val uniform = normalize(predCols.map(_ => 1.0))
-    val baseline = (0, scoreOf(uniform), uniform)
-    val guidedBudget = nIter - 1
-    val guidedTrials =
-      if (guidedBudget <= 0) Seq.empty
-      else {
-        val space = graft.hpo.RandomSearch.Space(
-          predCols.map(c => c -> (0.0, 1.0)).toMap, Set.empty)
-        val init = math.max(1, guidedBudget / 2)
-        // GP surrogate, like the reference's bayes_opt weight search
-        // (blender.py:119-398); Gp/Tpe share the optimizeFn contract
-        graft.hpo.Gp.optimizeFn(space,
-            p => (scoreOf(normalize(predCols.map(p))), 0.0),
-            seed, init, guidedBudget - init, maximize)
-          .map { case (it, sc, _, p) => (it, sc, normalize(predCols.map(p))) }
+    val trials = Materialize.scoped(oof) { cached =>
+      def scoreOf(w: Seq[Double]): Double = {
+        val voted =
+          if (hardVote)
+            cached.withColumn("__blend",
+              graft.ops.RowOps.weightedVote(predCols.map(col), w).cast("double"))
+          else
+            cached.withColumn("__blend", graft.ops.RowOps.weightedMean(predCols.map(col), w))
+        CrossValidation.round6(metric(voted, target, "__blend"), metricsDecimals)
       }
-    val trials = baseline +: guidedTrials
-    cached.unpersist()
+
+      val uniform = normalize(predCols.map(_ => 1.0))
+      val baseline = (0, scoreOf(uniform), uniform)
+      val guidedBudget = nIter - 1
+      val guidedTrials =
+        if (guidedBudget <= 0) Seq.empty
+        else {
+          val space = graft.hpo.RandomSearch.Space(
+            predCols.map(c => c -> (0.0, 1.0)).toMap, Set.empty)
+          val init = math.max(1, guidedBudget / 2)
+          // GP surrogate, like the reference's bayes_opt weight search
+          // (blender.py:119-398)
+          graft.hpo.Gp.optimizeFn(space,
+              p => (scoreOf(normalize(predCols.map(p))), 0.0),
+              seed, init, guidedBudget - init, maximize)
+            .map { case (it, sc, _, p) => (it, sc, normalize(predCols.map(p))) }
+        }
+      baseline +: guidedTrials
+    }
 
     val best = trials.reduce((a, b) => if (better(b._2, a._2)) b else a)
     val historyCols = col("iteration") +: col("score") +:

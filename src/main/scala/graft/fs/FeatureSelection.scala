@@ -3,6 +3,7 @@ package graft.fs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 import graft.cv.CrossValidation
 import graft.cv.CrossValidation.CvConfig
 import graft.ml.ModelWrapper
@@ -164,7 +165,6 @@ object FeatureSelection {
     val cv = sets.zip(graft.core.Par.mapPar(sets) { feats =>
       val r = CrossValidation.runCvOneSeed(
         train, None, feats, target, idCol, model, cvCfg, seed)
-      r.oof.unpersist()
       (r.cvScore, r.cvStd)
     }).toMap
     thresholds.zip(kept).map { case (t, feats) =>
@@ -204,14 +204,15 @@ object FeatureSelection {
       explorer: ModelWrapper, cvModel: ModelWrapper, cvCfg: CvConfig,
       seed: Long, nbRuns: Int, thresholds: Seq[Double] = Nil): (Seq[String], DataFrame, DataFrame) = {
     val imps = importancesWithNulls(train, features, target, explorer, seed, nbRuns)
-    val scores = scoreFeatures(imps.filter(col("run") === 0), imps.filter(col("run") > 0)).cache()
-    val ts = if (thresholds.nonEmpty) thresholds else autoThresholds(scores)
-    val sweep = thresholdSweep(train, target, idCol, scores, ts, cvModel, cvCfg, seed)
-    val ranked = rankThresholds(sweep)
-    val best = bestThreshold(ranked)
-    val feats = scores.filter(col("gain_score") >= best)
-      .select("feature").collect().map(_.getString(0)).toSeq.sorted
-    scores.unpersist()
-    (feats, scores, ranked)
+    Materialize.scoped(scoreFeatures(imps.filter(col("run") === 0),
+        imps.filter(col("run") > 0))) { scores =>
+      val ts = if (thresholds.nonEmpty) thresholds else autoThresholds(scores)
+      val sweep = thresholdSweep(train, target, idCol, scores, ts, cvModel, cvCfg, seed)
+      val ranked = rankThresholds(sweep)
+      val best = bestThreshold(ranked)
+      val feats = scores.filter(col("gain_score") >= best)
+        .select("feature").collect().map(_.getString(0)).toSeq.sorted
+      (feats, scores, ranked)
+    }
   }
 }

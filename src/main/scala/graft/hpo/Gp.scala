@@ -25,8 +25,8 @@ import graft.hpo.RandomSearch.{HpoResult, Space}
   * 10k random probes then L-BFGS-refines; with ≤25 observations the
   * sweep finds the same basin), and minimize-oriented metrics negate
   * the objective rather than flipping the acquisition. Deterministic
-  * under `seedVal`. Seeded TPE (`Tpe`) remains available as the
-  * lighter-weight alternative proposal rule.
+  * under `seedVal`. Seeded TPE (`Tpe.optimizeFn`) remains available as
+  * the lighter-weight alternative proposal rule.
   */
 object Gp {
 
@@ -207,7 +207,6 @@ object Gp {
       params => {
         val r = CrossValidation.runCvOneSeed(
           train, None, features, target, idCol, build(params), cfg, seedVal)
-        r.oof.unpersist()
         (r.cvScore, r.cvStd)
       },
       seedVal, initPoints, nIter, maximize)

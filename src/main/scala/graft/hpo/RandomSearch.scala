@@ -1,9 +1,8 @@
 package graft.hpo
 
 import org.apache.spark.sql.DataFrame
-import graft.cv.CrossValidation
 import graft.cv.CrossValidation.CvConfig
-import graft.ml.{Metrics, ModelWrapper}
+import graft.ml.ModelWrapper
 
 /** M7: hyper-parameter optimization. The reference uses
   * bayes_opt.BayesianOptimization over box bounds with per-model dtype
@@ -26,42 +25,16 @@ object RandomSearch {
       bestParams: Map[String, Double], bestScore: Double, history: DataFrame)
 
   /** Maximize (or minimize, per metric orientation) the CV score of
-    * `build(params)` over `nTrials` seeded uniform draws from the box.
-    * The objective runs the full CV engine with predictTest disabled,
-    * mirroring hp_optimizer (hyper_parameters_optimization.py:122-139).
+    * `build(params)` over `nTrials` seeded uniform draws from the box:
+    * `Gp.optimize` with every trial an initial point, so the draws,
+    * the objective (the full CV engine with predictTest disabled,
+    * mirroring hp_optimizer, hyper_parameters_optimization.py:122-139),
+    * the best pick and the history table are the GP driver's own.
     */
   def optimize(
       train: DataFrame, features: Seq[String], target: String, idCol: String,
       space: Space, build: Map[String, Double] => ModelWrapper,
-      cfg: CvConfig, seedVal: Long, nTrials: Int): HpoResult = {
-    val spark = train.sparkSession
-    import spark.implicits._
-    require(nTrials >= 1)
-    val rng = new scala.util.Random(seedVal)
-    val names = space.bounds.keys.toSeq.sorted
-    val better: (Double, Double) => Boolean =
-      if (Metrics.greaterIsBetter(cfg.metricName)) _ > _ else _ < _
-
-    val trials = (1 to nTrials).map { it =>
-      val raw = names.map { n =>
-        val (lo, hi) = space.bounds(n)
-        n -> (lo + rng.nextDouble() * (hi - lo))
-      }.toMap
-      val params = space.coerce(raw)
-      val r = CrossValidation.runCvOneSeed(
-        train, None, features, target, idCol, build(params), cfg, seedVal)
-      r.oof.unpersist()
-      (it, r.cvScore, r.cvStd, params)
-    }
-
-    val best = trials.reduce((a, b) => if (better(b._2, a._2)) b else a)
-    import org.apache.spark.sql.functions.{col, element_at}
-    val historyCols = col("iteration") +: col("cv_score") +: col("cv_std") +:
-      names.zipWithIndex.map { case (n, i) => element_at(col("params"), i + 1).as(n) }
-    val history = trials.map { case (it, sc, sd, p) =>
-      (it, sc, sd, names.map(p))
-    }.toDF("iteration", "cv_score", "cv_std", "params")
-      .select(historyCols: _*)
-    HpoResult(best._4, best._2, history)
-  }
+      cfg: CvConfig, seedVal: Long, nTrials: Int): HpoResult =
+    Gp.optimize(train, features, target, idCol, space, build, cfg, seedVal,
+      initPoints = nTrials, nIter = 0)
 }

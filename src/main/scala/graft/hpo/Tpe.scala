@@ -1,16 +1,13 @@
 package graft.hpo
 
-import org.apache.spark.sql.DataFrame
-import graft.cv.CrossValidation
-import graft.cv.CrossValidation.CvConfig
-import graft.ml.{Metrics, ModelWrapper}
-import graft.hpo.RandomSearch.{HpoResult, Space}
+import graft.hpo.RandomSearch.Space
 
-/** M7: sequential model-based HPO — the Spark-side analogue of the
-  * reference's bayes_opt.BayesianOptimization driver
-  * (hyper_parameters_optimization.py:100-170: seeded optimizer over box
-  * bounds, `init_points` warmup + `n_iter` guided proposals, history
-  * table, dtype coercion via the space).
+/** M7: sequential model-based HPO over an abstract objective — the
+  * lighter-weight alternative to `Gp`'s proposal rule, with the same
+  * `optimizeFn` contract (seeded optimizer over box bounds,
+  * `init_points` warmup + `n_iter` guided proposals, dtype coercion via
+  * the space; hyper_parameters_optimization.py:100-170). The CV-driven
+  * entry with the history table is `Gp.optimize`.
   *
   * The proposal rule is TPE (tree-structured Parzen estimator,
   * Bergstra et al., NeurIPS 2011) rather than a Gaussian process:
@@ -82,36 +79,5 @@ object Tpe {
       history :+= Trial(params, score, std)
       (it, score, std, params)
     }
-  }
-
-  /** Reference-shaped entry: maximize (or minimize, per metric
-    * orientation) the CV score of `build(params)`. Returns best params,
-    * best score, and the full history table
-    * (hpo_history CSV shape, hyper_parameters_optimization.py:165-170). */
-  def optimize(
-      train: DataFrame, features: Seq[String], target: String, idCol: String,
-      space: Space, build: Map[String, Double] => ModelWrapper,
-      cfg: CvConfig, seedVal: Long, initPoints: Int = 10, nIter: Int = 15): HpoResult = {
-    val spark = train.sparkSession
-    import spark.implicits._
-    val maximize = Metrics.greaterIsBetter(cfg.metricName)
-    val trials = optimizeFn(space,
-      params => {
-        val r = CrossValidation.runCvOneSeed(
-          train, None, features, target, idCol, build(params), cfg, seedVal)
-        r.oof.unpersist()
-        (r.cvScore, r.cvStd)
-      },
-      seedVal, initPoints, nIter, maximize)
-    val best = trials.reduce((a, b) =>
-      if (if (maximize) b._2 > a._2 else b._2 < a._2) b else a)
-    val names = space.bounds.keys.toSeq.sorted
-    import org.apache.spark.sql.functions.{col, element_at}
-    val historyCols = col("iteration") +: col("cv_score") +: col("cv_std") +:
-      names.zipWithIndex.map { case (n, i) => element_at(col("params"), i + 1).as(n) }
-    val history = trials.map { case (it, sc, sd, p) => (it, sc, sd, names.map(p)) }
-      .toDF("iteration", "cv_score", "cv_std", "params")
-      .select(historyCols: _*)
-    HpoResult(best._4, best._2, history)
   }
 }

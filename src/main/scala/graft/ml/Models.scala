@@ -200,47 +200,47 @@ object Models {
     val isClassifier = true
     def fit(train: DataFrame, valid: Option[DataFrame], features: Seq[String],
         labelCol: String, seed: Long): FittedModel = {
-      val assembled = assemble(train, features).cache()
-      // numClasses comes from the caller (Solution computes it over the
-      // FULL frame) so a CV fold whose train split lacks the top class
-      // can't silently train fewer one-vs-rest models; 0 = infer from
-      // train.
-      val seen = assembled.select(col(labelCol).cast("int")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      require(seen.nonEmpty, "ovr_gbt got an empty train split")
-      val nClasses = if (numClasses > 0) numClasses else seen.max + 1
-      require(nClasses >= 2, s"ovr_gbt needs >=2 classes, got $nClasses")
-      val outOfRange = seen.filter(k => k < 0 || k >= nClasses).toSeq.sorted
-      require(outOfRange.isEmpty,
-        s"ovr_gbt labels ${outOfRange.mkString(",")} are outside [0, $nClasses) " +
-          "— check the labels_mapper / numClasses contract")
-      // A fold whose train split lacks a class gets a constant-negative
-      // stand-in for that class (probability 0 before normalization):
-      // LightGBM trains regardless in this case (num_class objective),
-      // so a non-stratified CV with a rare class must not abort here.
-      val missing = (0 until nClasses).filterNot(seen)
-      if (missing.nonEmpty)
-        System.err.println(s"[ovr_gbt] train split is missing class(es) " +
-          s"${missing.mkString(",")} of 0 until $nClasses; fitting " +
-          "constant-negative stand-ins (reference parity: lightgbm trains regardless)")
-      // Independent one-vs-rest fits run concurrently (graft.core.Par);
-      // each is seeded `seed + k`, so output order and content are
-      // identical to the sequential loop.
-      val models = graft.core.Par.mapPar(0 until nClasses) { k =>
-        if (missing.contains(k)) None
-        else {
-          val est = new GBTClassifier().setMaxIter(maxIter).setMaxDepth(maxDepth)
-            .setStepSize(stepSize).setSeed(seed + k)
-            .setFeaturesCol("__features").setLabelCol("__ovr")
-          val m = est.fit(assembled.withColumn("__ovr", (col(labelCol) === k).cast("double")))
-          // per-class output column names so the K transforms can chain
-          m.set(m.predictionCol, s"__pr_$k")
-          m.set(m.rawPredictionCol, s"__raw_$k")
-          m.set(m.probabilityCol, s"__pb_$k")
-          Some(m)
+      val models = graft.core.Materialize.scoped(assemble(train, features)) { assembled =>
+        // numClasses comes from the caller (Solution computes it over the
+        // FULL frame) so a CV fold whose train split lacks the top class
+        // can't silently train fewer one-vs-rest models; 0 = infer from
+        // train.
+        val seen = assembled.select(col(labelCol).cast("int")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        require(seen.nonEmpty, "ovr_gbt got an empty train split")
+        val nClasses = if (numClasses > 0) numClasses else seen.max + 1
+        require(nClasses >= 2, s"ovr_gbt needs >=2 classes, got $nClasses")
+        val outOfRange = seen.filter(k => k < 0 || k >= nClasses).toSeq.sorted
+        require(outOfRange.isEmpty,
+          s"ovr_gbt labels ${outOfRange.mkString(",")} are outside [0, $nClasses) " +
+            "— check the labels_mapper / numClasses contract")
+        // A fold whose train split lacks a class gets a constant-negative
+        // stand-in for that class (probability 0 before normalization):
+        // LightGBM trains regardless in this case (num_class objective),
+        // so a non-stratified CV with a rare class must not abort here.
+        val missing = (0 until nClasses).filterNot(seen)
+        if (missing.nonEmpty)
+          System.err.println(s"[ovr_gbt] train split is missing class(es) " +
+            s"${missing.mkString(",")} of 0 until $nClasses; fitting " +
+            "constant-negative stand-ins (reference parity: lightgbm trains regardless)")
+        // Independent one-vs-rest fits run concurrently (graft.core.Par);
+        // each is seeded `seed + k`, so output order and content are
+        // identical to the sequential loop.
+        graft.core.Par.mapPar(0 until nClasses) { k =>
+          if (missing.contains(k)) None
+          else {
+            val est = new GBTClassifier().setMaxIter(maxIter).setMaxDepth(maxDepth)
+              .setStepSize(stepSize).setSeed(seed + k)
+              .setFeaturesCol("__features").setLabelCol("__ovr")
+            val m = est.fit(assembled.withColumn("__ovr", (col(labelCol) === k).cast("double")))
+            // per-class output column names so the K transforms can chain
+            m.set(m.predictionCol, s"__pr_$k")
+            m.set(m.rawPredictionCol, s"__raw_$k")
+            m.set(m.probabilityCol, s"__pb_$k")
+            Some(m)
+          }
         }
       }
-      assembled.unpersist()
       val fitted = models.flatten
       val imps = features.indices
         .map(i => fitted.map(_.featureImportances.toArray(i)).sum / fitted.size)

@@ -20,27 +20,19 @@ object Encode {
     val distinctVals = df.select(col(c)).filter(col(c).isNotNull).distinct()
     // The global-window rank collapses the distinct frame onto one
     // partition — fine for true categoricals, a scale-killer on a
-    // high-cardinality key. Above the threshold, derive codes from a
-    // distributed range-sort + zipWithIndex instead, and use a plain
+    // high-cardinality key. Above the threshold, derive codes from the
+    // distributed dense index (core.PrefixSum) instead, and use a plain
     // (non-broadcast) join.
     val n = distinctVals.count()
     val smallCardinality = 100000L
     val mapping =
       if (n <= smallCardinality)
         // cast to long so both cardinality branches agree on the output
-        // schema (zipWithIndex below emits LongType)
+        // schema (the dense index below is a long)
         distinctVals.withColumn(out,
           (dense_rank().over(Window.orderBy(col(c))) - 1).cast("long"))
-      else {
-        val spark = df.sparkSession
-        val sorted = distinctVals.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-        val schema = org.apache.spark.sql.types.StructType(sorted.schema.fields :+
-          org.apache.spark.sql.types.StructField(out, org.apache.spark.sql.types.LongType, false))
-        spark.createDataFrame(
-          sorted.rdd.zipWithIndex().map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-          }, schema)
-      }
+      else graft.core.PrefixSum.rowIndex(distinctVals, Seq(col(c)), None)
+        ._1.withColumnRenamed("__idx", out)
     val joined =
       if (n <= smallCardinality) df.join(broadcast(mapping), Seq(c), "left")
       else df.join(mapping, Seq(c), "left")

@@ -185,8 +185,9 @@ object Stats {
       .select(col("e.__c").as("__c"), col("e.__v").as("__v"))
       .filter(col("__v").isNotNull)
     val counts = stacked.groupBy("__c", "__v").agg(count(lit(1)).as("__n"))
-      .localCheckpoint(false) // moment sums and the quartile CDF both read it
-    counts.count() // materialize before the concurrent readers below
+      // eager: the moment sums and the quartile CDF below read it
+      // concurrently
+      .localCheckpoint()
     // multiply in decimal: a micro-unit value of 1e11 squares past the
     // long range; NULLs are already excluded (matches pandas describe)
     val vi = graft.core.ExactSum.quantLong(col("__v"))

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 import graft.cv.CrossValidation
 import graft.cv.CrossValidation.CvConfig
 import graft.io.{Hocon, ProjectPaths, Sources}
@@ -173,7 +174,6 @@ object Solution {
               concat_ws(",", col("cv_score_per_each_fold"))),
             s"$outDir/cv_results.csv",
             floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
-          r.unpersist()
         })
         val report = Pipeline.execute(task) // must run before reading `score`
         ModelRun(meta, outDir, score._1, score._2, report)
@@ -285,24 +285,16 @@ object Solution {
       // shared frame loading for the FS/HPO/predict stages
       val idCol = indexCol.getOrElse("__row_id")
       def withId(df: DataFrame): DataFrame = indexCol match {
-        // synthesize a stable row id when the dataset declares none
-        // (SURVEY §7.4.1): deterministic content-hash order via a
-        // range-partitioned sort + zipWithIndex — no single-partition
+        // synthesize a stable 1-based row id when the dataset declares
+        // none (SURVEY §7.4.1): the dense index of the deterministic
+        // content-hash order (core.PrefixSum) — no single-partition
         // window at any size
         case Some(_) => df
         case None =>
-          val spark = df.sparkSession
-          val sorted = df
-            .withColumn("__h", xxhash64(df.columns.map(col).toSeq: _*))
-            .repartitionByRange(col("__h")).sortWithinPartitions(col("__h"))
-            .drop("__h")
-          val schema = org.apache.spark.sql.types.StructType(
-            sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-              idCol, org.apache.spark.sql.types.LongType, false))
-          spark.createDataFrame(
-            sorted.rdd.zipWithIndex().map { case (r, i) =>
-              org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1))
-            }, schema)
+          val (indexed, _) = graft.core.PrefixSum.rowIndex(
+            df.withColumn("__h", xxhash64(df.columns.map(col).toSeq: _*)),
+            Seq(col("__h")), None)
+          indexed.withColumn(idCol, col("__idx") + 1).drop("__h", "__idx")
       }
       def loadTrain(): DataFrame = withId(Sources.readCsv(spark, trainNew))
       def cvConfigFor(nClasses: Long): CvConfig = {
@@ -324,19 +316,18 @@ object Solution {
       val fsOut = Paths.get(projectLocation, fsDir).toString
       val fsTask: Option[Pipeline.Task] = if (!runFs) None else Some(
         Pipeline.Task(s"FeatureSelection_$model",
-          Seq(s"$fsOut/optimal_features.txt"), deps = Seq(ingest))(() => {
-          val train = loadTrain().cache()
-          val features = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
-          val nClasses = train.select(target).distinct().count()
-          val nbRuns = cfg.getInt(
-            "features_selection.target_permutation.nb_target_permutation_runs")
-          val seed = cfg.getLong("modeling_settings.fs_seed_value")
-          val (keep, _, _) = graft.fs.FeatureSelection.selectFeatures(
-            train, features, target, idCol, Models.RfClassifier(numTrees = 20, maxDepth = 6),
-            modelFor(model, nClasses), cvConfigFor(nClasses), seed, nbRuns)
-          Sources.writeJsonList(s"$fsOut/optimal_features.txt", keep)
-          train.unpersist()
-        }))
+          Seq(s"$fsOut/optimal_features.txt"), deps = Seq(ingest))(() =>
+          Materialize.scoped(loadTrain()) { train =>
+            val features = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
+            val nClasses = train.select(target).distinct().count()
+            val nbRuns = cfg.getInt(
+              "features_selection.target_permutation.nb_target_permutation_runs")
+            val seed = cfg.getLong("modeling_settings.fs_seed_value")
+            val (keep, _, _) = graft.fs.FeatureSelection.selectFeatures(
+              train, features, target, idCol, Models.RfClassifier(numTrees = 20, maxDepth = 6),
+              modelFor(model, nClasses), cvConfigFor(nClasses), seed, nbRuns)
+            Sources.writeJsonList(s"$fsOut/optimal_features.txt", keep)
+          }))
 
       // Stage RunSingleModelHPO (create_solution.py:257-298, when run_hpo)
       val (_, hpoDirRel) = paths.hpoDir(model, runFs, runHpo)
@@ -344,27 +335,25 @@ object Solution {
       val hpoSpace = if (runHpo) hpoSpaceFor(cfg, model) else None
       val hpoTask: Option[Pipeline.Task] = hpoSpace.map { space =>
         Pipeline.Task(s"RunSingleModelHPO_$model",
-          Seq(s"$hpoOut/optimized_hp.txt"), deps = Seq(ingest) ++ fsTask.toSeq)(() => {
-          val train = loadTrain().cache()
-          val features0 = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
-          val features = fsTask.fold(features0)(_ =>
-            Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
-          val nClasses = train.select(target).distinct().count()
-          val hpoCfgBase = "hp_optimization.bayes.hpo_space.single_model_solution"
-          // hpo_method='bayes' -> the GP surrogate, the same family as
-          // the reference's bayes_opt (init_points warmup + n_iter
-          // UCB-guided proposals); seeded TPE stays available as the
-          // lighter proposal rule (graft.hpo.Tpe, same signature)
-          val r = graft.hpo.Gp.optimize(
-            train, features, target, idCol, space,
-            p => modelFor(model, nClasses, p),
-            cvConfigFor(nClasses), cfg.getLong("modeling_settings.hpo_seed_value"),
-            initPoints = cfg.getInt(s"$hpoCfgBase.init_points"),
-            nIter = cfg.getInt(s"$hpoCfgBase.n_iter"))
-          Sources.writeJsonManifest(s"$hpoOut/optimized_hp.txt",
-            r.bestParams.map { case (k, v) => k -> v.toString })
-          train.unpersist()
-        })
+          Seq(s"$hpoOut/optimized_hp.txt"), deps = Seq(ingest) ++ fsTask.toSeq)(() =>
+          Materialize.scoped(loadTrain()) { train =>
+            val features0 = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
+            val features = fsTask.fold(features0)(_ =>
+              Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
+            val nClasses = train.select(target).distinct().count()
+            val hpoCfgBase = "hp_optimization.bayes.hpo_space.single_model_solution"
+            // hpo_method='bayes' -> the GP surrogate, the same family as
+            // the reference's bayes_opt (init_points warmup + n_iter
+            // UCB-guided proposals)
+            val r = graft.hpo.Gp.optimize(
+              train, features, target, idCol, space,
+              p => modelFor(model, nClasses, p),
+              cvConfigFor(nClasses), cfg.getLong("modeling_settings.hpo_seed_value"),
+              initPoints = cfg.getInt(s"$hpoCfgBase.init_points"),
+              nIter = cfg.getInt(s"$hpoCfgBase.n_iter"))
+            Sources.writeJsonManifest(s"$hpoOut/optimized_hp.txt",
+              r.bestParams.map { case (k, v) => k -> v.toString })
+          })
       }
 
       var score = (0.0, 0.0)
@@ -380,64 +369,63 @@ object Solution {
       val predict = Pipeline.Task(s"RunSingleModelPrediction_$model",
         Seq(s"$outDir/train_OOF.csv", s"$outDir/cv_results.csv",
           s"$outDir/$configFile", s"$outDir/${model}_oof_data_info.txt") ++ testOutputs,
-        deps = Seq(ingest) ++ fsTask.toSeq ++ hpoTask.toSeq)(() => {
-        val train = loadTrain().cache()
-        val test = withId(Sources.readCsv(spark, testNew))
-        // P2: optimal-feature projection when FS ran (create_solution.py:236-237)
-        val features0 = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
-        val features = fsTask.fold(features0)(_ =>
-          Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
-        val nClasses = train.select(target).distinct().count()
-        // reinit with optimized params when HPO ran (create_solution.py:328-334)
-        val params: Map[String, Double] = hpoTask.fold(Map.empty[String, Double])(_ =>
-          Sources.readJsonManifest(s"$hpoOut/optimized_hp.txt")
-            .map { case (k, v) => k -> v.toDouble })
-        val cc = cvConfigFor(nClasses)
-        val usedSeeds = if (runBagging) seeds else seeds.take(1)
-        val r = CrossValidation.runCvAndPrediction(
-          train, if (predictTest) Some(test) else None, features, target, idCol,
-          modelFor(model, nClasses, params), cc, usedSeeds)
-        score = (r.cvScore, r.cvStd)
-        Sources.writeCsv(r.oof.orderBy(idCol), s"$outDir/train_OOF.csv",
-          floatDecimals = Some(cc.targetDecimals).filter(_ > 0))
-        r.testPreds.foreach(tp => Sources.writeCsv(tp.orderBy(idCol), s"$outDir/test.csv",
-          floatDecimals = Some(cc.targetDecimals).filter(_ > 0)))
-        Sources.writeCsv(r.cvResults.withColumn("cv_score_per_each_fold",
-            concat_ws(",", col("cv_score_per_each_fold"))),
-          s"$outDir/cv_results.csv", floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
-        // S8-as-tables: the reference plots a confusion matrix from the
-        // OOF predictions (prediction.py:532-605, labels_mapper applied
-        // when predicting probabilities, create_solution.py:345-349);
-        // we emit the underlying table. Mapper specs resolve through
-        // the closed LabelMappers registry — never eval'd.
-        if (nClasses <= 20) {
-          val oofCol = s"${target}_OOF"
-          val predLabels = cfg.getStringOrNull("modeling_settings.labels_mapper") match {
-            case Some(spec) if cc.predictProbability =>
-              graft.ml.LabelMappers.resolve(spec)(col(oofCol))
-            case _ if cc.predictProbability && nClasses == 2 =>
-              when(col(oofCol) > 0.5, 1).otherwise(0) // reference default cut
-            case _ => col(oofCol)
-          }
-          Sources.writeCsv(
-            graft.ops.Stats.confusion(
-              r.oof.withColumn("__pred", predLabels), target, "__pred"),
-            s"$outDir/confusion_matrix.csv", floatDecimals = None)
-        }
-        if (bagging) {
-          // per-seed tables (prediction.py:444-445; FILENAME_*_BAGGED)
-          Sources.writeCsv(r.oofBagged.orderBy(idCol), s"$outDir/train_OOF_bagged.csv",
+        deps = Seq(ingest) ++ fsTask.toSeq ++ hpoTask.toSeq)(() =>
+        Materialize.scoped(loadTrain()) { train =>
+          val test = withId(Sources.readCsv(spark, testNew))
+          // P2: optimal-feature projection when FS ran (create_solution.py:236-237)
+          val features0 = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
+          val features = fsTask.fold(features0)(_ =>
+            Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
+          val nClasses = train.select(target).distinct().count()
+          // reinit with optimized params when HPO ran (create_solution.py:328-334)
+          val params: Map[String, Double] = hpoTask.fold(Map.empty[String, Double])(_ =>
+            Sources.readJsonManifest(s"$hpoOut/optimized_hp.txt")
+              .map { case (k, v) => k -> v.toDouble })
+          val cc = cvConfigFor(nClasses)
+          val usedSeeds = if (runBagging) seeds else seeds.take(1)
+          val r = CrossValidation.runCvAndPrediction(
+            train, if (predictTest) Some(test) else None, features, target, idCol,
+            modelFor(model, nClasses, params), cc, usedSeeds)
+          score = (r.cvScore, r.cvStd)
+          Sources.writeCsv(r.oof.orderBy(idCol), s"$outDir/train_OOF.csv",
             floatDecimals = Some(cc.targetDecimals).filter(_ > 0))
-          r.testBagged.foreach(tb => Sources.writeCsv(tb.orderBy(idCol),
-            s"$outDir/test_bagged.csv",
+          r.testPreds.foreach(tp => Sources.writeCsv(tp.orderBy(idCol), s"$outDir/test.csv",
             floatDecimals = Some(cc.targetDecimals).filter(_ > 0)))
-        }
-        Sources.copyConfig(cfgPath, outDir)
-        Sources.writeJsonManifest(s"$outDir/${model}_oof_data_info.txt",
-          Map("model" -> model, "path" -> solDir,
-            "files" -> "train_OOF.csv,test.csv,cv_results.csv"))
-        r.unpersist(); train.unpersist()
-      })
+          Sources.writeCsv(r.cvResults.withColumn("cv_score_per_each_fold",
+              concat_ws(",", col("cv_score_per_each_fold"))),
+            s"$outDir/cv_results.csv", floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
+          // S8-as-tables: the reference plots a confusion matrix from the
+          // OOF predictions (prediction.py:532-605, labels_mapper applied
+          // when predicting probabilities, create_solution.py:345-349);
+          // we emit the underlying table. Mapper specs resolve through
+          // the closed LabelMappers registry — never eval'd.
+          if (nClasses <= 20) {
+            val oofCol = s"${target}_OOF"
+            val predLabels = cfg.getStringOrNull("modeling_settings.labels_mapper") match {
+              case Some(spec) if cc.predictProbability =>
+                graft.ml.LabelMappers.resolve(spec)(col(oofCol))
+              case _ if cc.predictProbability && nClasses == 2 =>
+                when(col(oofCol) > 0.5, 1).otherwise(0) // reference default cut
+              case _ => col(oofCol)
+            }
+            Sources.writeCsv(
+              graft.ops.Stats.confusion(
+                r.oof.withColumn("__pred", predLabels), target, "__pred"),
+              s"$outDir/confusion_matrix.csv", floatDecimals = None)
+          }
+          if (bagging) {
+            // per-seed tables (prediction.py:444-445; FILENAME_*_BAGGED)
+            Sources.writeCsv(r.oofBagged.orderBy(idCol), s"$outDir/train_OOF_bagged.csv",
+              floatDecimals = Some(cc.targetDecimals).filter(_ > 0))
+            r.testBagged.foreach(tb => Sources.writeCsv(tb.orderBy(idCol),
+              s"$outDir/test_bagged.csv",
+              floatDecimals = Some(cc.targetDecimals).filter(_ > 0)))
+          }
+          Sources.copyConfig(cfgPath, outDir)
+          Sources.writeJsonManifest(s"$outDir/${model}_oof_data_info.txt",
+            Map("model" -> model, "path" -> solDir,
+              "files" -> "train_OOF.csv,test.csv,cv_results.csv"))
+        })
 
       val report = Pipeline.execute(predict)
       ModelRun(model, outDir, score._1, score._2, report)

@@ -34,15 +34,15 @@ object MlQueries {
     * The four scalar metrics come from the fused single-pass report
     * (one job); AUC runs its rank-based plan separately. */
   def metrics(s: SparkSession, d: String): DataFrame = {
-    val preds = pseudoPreds(s, d).cache()
-    val fused = Metrics.report(preds, "label", "pred", "prob")
-    val rows = Seq(
-      ("accuracy", fused("accuracy")),
-      ("log_loss", fused("log_loss")),
-      ("mae", fused("mae")),
-      ("rmse", fused("rmse")),
-      ("roc_auc", Metrics.rocAuc(preds, "label", "prob")))
-    preds.unpersist()
+    val rows = graft.core.Materialize.scoped(pseudoPreds(s, d)) { preds =>
+      val fused = Metrics.report(preds, "label", "pred", "prob")
+      Seq(
+        ("accuracy", fused("accuracy")),
+        ("log_loss", fused("log_loss")),
+        ("mae", fused("mae")),
+        ("rmse", fused("rmse")),
+        ("roc_auc", Metrics.rocAuc(preds, "label", "prob")))
+    }
     import s.implicits._
     rows.toDF("metric", "value")
       .select(col("metric"), round(col("value"), 6).as("value"))
@@ -196,20 +196,19 @@ object MlQueries {
     graft.core.Memo.getOrElseUpdate(
         s"rf_bag:${s.sparkContext.applicationId}:$d") {
       val frame = cvFrame(s, d).filter(col("row_id") % 4 === 0)
-      val folded = graft.cv.Folds.assign(
+      val folds = graft.cv.Folds.assign(
         frame.select(("row_id" +: "target" +: cvFeatures).map(col): _*),
-        bagCfg.numFolds, bagCfg.dataSplitSeed, Some("target")).cache()
-      folded.count() // materialize once before the concurrent fits race the cache
+        bagCfg.numFolds, bagCfg.dataSplitSeed, Some("target"))
       // both seeds' CVs are independent seeded fits — run them from the
       // outer Par pool; the inner fold loop fans out on the second-level
       // pool, so all 2×3 RF fits overlap (round-18 two-level Par)
-      val results = graft.core.Par.mapPar(bagSeedList) { seed =>
-        seed -> CrossValidation.runCvOneSeed(
-          frame, test = None, cvFeatures, "target", "row_id",
-          bagModel, bagCfg, seedVal = seed, preFolded = Some(folded))
-      }.toMap
-      folded.unpersist() // per-seed oof caches are materialized by now
-      results
+      graft.core.Materialize.scoped(folds, eager = true) { folded =>
+        graft.core.Par.mapPar(bagSeedList) { seed =>
+          seed -> CrossValidation.runCvOneSeed(
+            frame, test = None, cvFeatures, "target", "row_id",
+            bagModel, bagCfg, seedVal = seed, preFolded = Some(folded))
+        }.toMap
+      }
     }
 
   /** q89: both seeds' OOF label predictions, long form — the dump q91's
@@ -420,15 +419,15 @@ object MlQueries {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   def cvMetricReplay(s: SparkSession, d: String): DataFrame = {
-    val oof = cvOof(s, d)
-      .select(col("fold"), col("target"), col("oof_score")).cache()
-    val byFold = Metrics.rocAucByGroup(oof, "fold", "target", "oof_score")
-    val foldScores = (0 until 3).map(f => round6(byFold(f)))
-    // cv_mean_score is the metric over the FULL OOF (prediction.py:405,
-    // CrossValidation.cvScore), not the mean of per-fold scores; cv_std
-    // stays the population std of the fold scores (prediction.py:482).
-    val fullOof = round6(Metrics.rocAuc(oof, "target", "oof_score"))
-    oof.unpersist()
+    val (foldScores, fullOof) = graft.core.Materialize.scoped(cvOof(s, d)
+        .select(col("fold"), col("target"), col("oof_score"))) { oof =>
+      val byFold = Metrics.rocAucByGroup(oof, "fold", "target", "oof_score")
+      // cv_mean_score is the metric over the FULL OOF (prediction.py:405,
+      // CrossValidation.cvScore), not the mean of per-fold scores; cv_std
+      // stays the population std of the fold scores (prediction.py:482).
+      ((0 until 3).map(f => round6(byFold(f))),
+        round6(Metrics.rocAuc(oof, "target", "oof_score")))
+    }
     val mean = foldScores.sum / foldScores.size
     val std = math.sqrt(
       foldScores.map(v => (v - mean) * (v - mean)).sum / foldScores.size)

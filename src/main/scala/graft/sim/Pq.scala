@@ -81,22 +81,21 @@ object Pq {
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
     import spark.implicits._
-    val subs = subRows(corpus, idCol, "__id", vecCol, m)
+    val vecs = subRows(corpus, idCol, "__id", vecCol, m)
       .withColumn("__fv", array_to_vector(col("subvec")))
-      .cache()
-    subs.count() // materialize once before the concurrent fits race the cache
     // Independent per-subspace fits run concurrently (graft.core.Par);
     // each is seeded `seed + s`, so the codebook is identical to the
     // sequential loop's.
-    val rows = graft.core.Par.mapPar(0 until m) { s =>
-      val model = new KMeans().setK(ks).setSeed(seed + s)
-        .setFeaturesCol("__fv").setPredictionCol("__c")
-        .fit(subs.filter(col("sub") === s))
-      model.clusterCenters.zipWithIndex.map { case (v, c) =>
-        (s.toLong, c.toLong, v.toArray.map(x => math.rint(x * 1e6) / 1e6).toSeq)
-      }
-    }.flatten
-    subs.unpersist()
+    val rows = graft.core.Materialize.scoped(vecs, eager = true) { subs =>
+      graft.core.Par.mapPar(0 until m) { s =>
+        val model = new KMeans().setK(ks).setSeed(seed + s)
+          .setFeaturesCol("__fv").setPredictionCol("__c")
+          .fit(subs.filter(col("sub") === s))
+        model.clusterCenters.zipWithIndex.map { case (v, c) =>
+          (s.toLong, c.toLong, v.toArray.map(x => math.rint(x * 1e6) / 1e6).toSeq)
+        }
+      }.flatten
+    }
     rows.toDF("sub", "code", "centroid")
   }
 

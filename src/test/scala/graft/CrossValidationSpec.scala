@@ -146,7 +146,6 @@ class CrossValidationSpec extends SparkSpec {
     assert(bagged.count() == te.count())
     assert(bagged.filter(col("seed_1").isNull || col("seed_2").isNull ||
       col("seed_3").isNull).isEmpty, "every seed scored every test row")
-    r.unpersist()
   }
 
   test("metric registry orientation") {

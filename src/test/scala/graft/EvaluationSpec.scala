@@ -242,6 +242,21 @@ class EvaluationSpec extends SparkSpec {
     assert(got(1L) == ((1, 0, 0)) && got(2L) == ((0, 1, 0)))
   }
 
+  test("labelEncode above the cardinality threshold: dense lexicographic codes") {
+    // 100 001 distinct zero-padded values (a permutation of 0..n-1, four
+    // of them repeated) plus one null take the distributed dense-index
+    // branch; every value's code is its rank, which is its number
+    val n = 100001L
+    val df = spark.range(n + 5).select(
+      when(col("id") === n + 4, lit(null).cast("string"))
+        .otherwise(lpad(((col("id") * 7919) % n).cast("string"), 6, "0")).as("c"))
+    val got = graft.ops.Encode.labelEncode(df, "c", "code")
+    assert(got.schema("code").dataType == org.apache.spark.sql.types.LongType)
+    assert(got.count() == n + 5)
+    val wrong = got.filter(col("code") =!= coalesce(col("c").cast("long"), lit(-1L)))
+    assert(wrong.isEmpty, s"codes off their rank: ${wrong.limit(5).collect().toSeq}")
+  }
+
   test("intLike: negative near-integers truncate toward zero like int(x)") {
     import spark.implicits._
     // int(-2.000000001) = -2 (|diff| 1e-9, int-like); floor would give

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard: the session config, the bench checksum, the LSH
-  * banding core and the distributed prefix sum each live in exactly one
-  * place, so every main, the benchmark and the test suite run the same
+  * banding core, the distributed prefix sum and cache ownership each
+  * live in exactly one place, so every main, the benchmark and the test suite run the same
   * settings and force queries the same way, and every near-dup family
   * buckets and caps the same way: a copy-pasted session setup drifts
   * from the shipped config, a copied band hash or census drifts from
@@ -53,6 +53,14 @@ class SingleSourceSpec extends AnyFunSuite {
       val found = hits(fn + """\(\)""", "src/main").distinct
       assert(found.map(_.toString) == Seq("src/main/scala/graft/core/PrefixSum.scala"),
         s"$fn() outside core/PrefixSum.scala: ${found.mkString(", ")}")
+    }
+  }
+
+  test("only core.Materialize caches, persists or unpersists a frame") {
+    for (pattern <- Seq("""\.cache\(\)""", """\.persist\(""", """unpersist\(""")) {
+      val found = hits(pattern, "src/main").distinct.map(_.toString)
+        .filterNot(_ == "src/main/scala/graft/core/Materialize.scala")
+      assert(found.isEmpty, s"$pattern outside core/Materialize.scala: ${found.mkString(", ")}")
     }
   }
 

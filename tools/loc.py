@@ -6,9 +6,13 @@ with `//`, `/**`, `*` or `*/` (scaladoc bodies and line comments; a
 code line with a trailing comment still counts as code).
 
 Usage:
-  python3 tools/loc.py FILE [FILE ...]        # per-file counts + total
+  python3 tools/loc.py PATH [PATH ...]        # per-file counts + total
   git show REV:PATH | python3 tools/loc.py -  # '-' reads stdin
+
+A directory PATH stands for every `*.scala` file under it, recursively,
+in sorted path order.
 """
+import os
 import sys
 
 COMMENT_PREFIXES = ("//", "/**", "*", "*/")
@@ -23,12 +27,25 @@ def code_lines(lines):
     return n
 
 
+def expand(paths):
+    """`paths` with each directory replaced by its `*.scala` files."""
+    for path in paths:
+        if path != "-" and os.path.isdir(path):
+            found = []
+            for root, _, files in os.walk(path):
+                found += [os.path.join(root, f) for f in files if f.endswith(".scala")]
+            yield from sorted(found)
+        else:
+            yield path
+
+
 def main(argv):
     if not argv:
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    paths = list(expand(argv))
     total = 0
-    for path in argv:
+    for path in paths:
         if path == "-":
             n = code_lines(sys.stdin)
         else:
@@ -36,7 +53,7 @@ def main(argv):
                 n = code_lines(f)
         total += n
         print(f"{n:6d}  {path}")
-    if len(argv) > 1:
+    if len(paths) > 1:
         print(f"{total:6d}  total")
     return 0
 
