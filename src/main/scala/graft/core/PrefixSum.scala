@@ -1,20 +1,86 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The engine's one distributed prefix sum. Every rank or cumulative
-  * count — ROC AUC, fold assignment, the target permutation, packing
-  * offsets, percentiles, running totals — rides the same plan:
-  * range-partition by the order, tag each row with its partition id
-  * (`__pid`), pin the blocks with a lazy `localCheckpoint`, collect the
-  * per-partition totals (a numPartitions-sized result), and broadcast
-  * the offsets back. No row-scale frame ever collapses onto a
-  * single-partition global window, and the checkpointed range
-  * exchange is the only full-data shuffle.
+  * count — ROC AUC, Mann–Whitney, fold assignment, the target
+  * permutation, packing offsets, percentiles, running totals — rides
+  * the same plan: range-partition by the order, so partition ids follow
+  * the order, and sum within each partition. The per-partition totals
+  * are a numPartitions-sized collect; the driver turns them into
+  * offsets. Two forms:
+  *
+  *  - row-level results (`runningTotals`, `rowIndex`) pin the blocks
+  *    with a lazy `localCheckpoint`, collect the totals and broadcast
+  *    the offsets back;
+  *  - aggregate results (`rankSums`) need no row back: each partition
+  *    emits its partial sums, and the driver applies the offsets to
+  *    the collected partials — one action, no checkpoint, no join.
+  *
+  * No row-scale frame ever collapses onto a single-partition global
+  * window, and the range exchange is the only full-data shuffle.
   */
 object PrefixSum {
+
+  /** One group's [[rankSums]] result: Σ w·(average rank), Σ w, the row
+    * count, and the sum of each `counts` column in argument order. */
+  final case class RankSum(rankSum: Double, weight: Double, n: Long, counts: Seq[Long])
+
+  /** Per-group rank sums in ONE action. For every value of `group`
+    * (cast to int), ranks the rows by `score` within the group
+    * (ascending, null lowest, ties sharing their average rank) and
+    * returns Σ `weight`·rank, Σ `weight`, the row count and the sum of
+    * every `counts` column (cast to long, null as 0).
+    *
+    * Pre-aggregates (group, score) → (n, Σ w, counts), range-partitions
+    * and sorts by (group, score), and emits one row per (partition,
+    * group): the rank sum with the group's count restarting at the
+    * partition start. The driver adds to each partial Σ w × (rows of
+    * the group in earlier partitions). Every term is an integer or a
+    * half below 2^52, where doubles are exact, so the result does not
+    * depend on the partitioning.
+    */
+  def rankSums(df: DataFrame, group: Column, score: Column, weight: Column,
+      counts: Seq[Column] = Nil): Map[Int, RankSum] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val k = counts.size
+    val order = Seq(col("__g"), col("__s"))
+    val pre = df.groupBy(group.cast("int").as("__g"), score.as("__s"))
+      .agg(count(lit(1)).as("__n"), (sum(weight.cast("double")).as("__w") +:
+        counts.zipWithIndex.map { case (c, i) => sum(c.cast("long")).as(s"__c$i") }): _*)
+    val partials = pre.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+      .drop("__s")
+      .mapPartitions { rows =>
+        val pid = TaskContext.getPartitionId()
+        val it = rows.buffered
+        def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+        Iterator.continually(()).takeWhile(_ => it.hasNext).map { _ =>
+          val g = it.head.getInt(0)
+          var rs, w = 0.0
+          var n = 0L
+          val cs = new Array[Long](k)
+          while (it.hasNext && it.head.getInt(0) == g) {
+            val r = it.next()
+            val (rn, rw) = (r.getLong(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2))
+            rs += rw * (n + (rn + 1) / 2.0)
+            w += rw
+            n += rn
+            cs.indices.foreach(i => cs(i) += long(r, 3 + i))
+          }
+          (g, pid, rs, w, n, cs)
+        }
+      }.collect()
+    partials.groupBy(_._1).map { case (g, unsorted) =>
+      val ps = unsorted.sortBy(_._2)
+      val before = ps.scanLeft(0L)(_ + _._5) // the group's rows in earlier partitions
+      g -> RankSum(ps.zip(before).map { case (p, b) => p._3 + p._4 * b }.sum,
+        ps.map(_._4).sum, before.last, ps.map(_._6.toSeq).reduce(_.zip(_).map(t => t._1 + t._2)))
+    }
+  }
 
   /** `df` range-partitioned and sorted by `order`, each row tagged with
     * its partition id `__pid`. */

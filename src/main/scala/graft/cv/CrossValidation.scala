@@ -85,21 +85,16 @@ object CrossValidation {
 
   /** Per-fold scores and the total score of a pinned OOF frame with a
     * `fold` column in [0, cfg.numFolds), each rounded to
-    * cfg.metricsDecimals. The per-fold evaluation (one grouped pass)
-    * and the total-score evaluation are INDEPENDENT blocking reads of
-    * the pinned frame — overlapped on the Par pool (each is a short
-    * chain of small jobs, so the driver round-trips are the cost). */
+    * cfg.metricsDecimals. One grouped evaluation (`Metrics.byGroup`,
+    * one action) scores the folds and the total together: every OOF row
+    * counts under its fold and under the extra total group -1. */
   private[graft] def scores(oof: DataFrame, target: String, scoreCol: String,
       cfg: CvConfig): (Seq[Double], Double) = {
-    val m = metric(cfg)
-    val evals = Par.mapPar(Seq(true, false)) {
-      case true =>
-        val byFold = Metrics.byGroup(cfg.metricName)(oof, "fold", target, scoreCol)
-        (0 until cfg.numFolds).map(k => round6(byFold(k), cfg.metricsDecimals))
-      case false =>
-        Seq(round6(m(oof, target, scoreCol), cfg.metricsDecimals))
-    }
-    (evals(0), evals(1).head)
+    val byGroup = Metrics.byGroup(cfg.metricName)(
+      oof.withColumn("__scored", explode(array(col("fold"), lit(-1)))),
+      "__scored", target, scoreCol)
+    ((0 until cfg.numFolds).map(k => round6(byGroup(k), cfg.metricsDecimals)),
+      round6(byGroup(-1), cfg.metricsDecimals))
   }
 
   /** Runs `body` on `train`'s (id, target, features) projection with a

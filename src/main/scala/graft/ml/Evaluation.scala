@@ -23,9 +23,10 @@ import graft.core.PrefixSum
   * Scale design: everything either stays scan-local + a bounded-key
   * aggregate (calibration, PSI after the bounded breakpoint collect),
   * or rides the engine's distributed prefix sum (`core.PrefixSum`:
-  * range-partition, per-partition totals, broadcast offsets) so no
-  * row-scale frame ever collapses onto a single-partition global
-  * window.
+  * range-partition, per-partition totals, offsets from the driver —
+  * broadcast back for the KS and gains curves, applied to collected
+  * partials for the Mann-Whitney rank sum) so no row-scale frame ever
+  * collapses onto a single-partition global window.
   */
 object Evaluation {
 
@@ -104,19 +105,14 @@ object Evaluation {
     * approximation WITHOUT tie correction (the simple variant — the
     * contract the oracle replays): U = R_a - n_a(n_a+1)/2,
     * z = (U - n_a n_b / 2) / sqrt(n_a n_b (n_a + n_b + 1) / 12).
-    * Rank sums ride the same distributed prefix sum as `ksStatistic` —
-    * no row-scale global window. */
+    * R_a is the one-group case of the engine's rank sum
+    * (`core.PrefixSum.rankSums`, weight `isA`) — one action, no
+    * row-scale global window. */
   def mannWhitney(df: DataFrame, scoreCol: String, isA: Column): DataFrame = {
-    val g = df.groupBy(col(scoreCol).as("__s")).agg(
-      count(lit(1)).as("__n"), sum(isA.cast("long")).as("__na"))
-    val cum = PrefixSum.runningTotals(g, Seq(col("__s")), Map("__cum" -> col("__n")))
-      .withColumn("__before", col("__cum") - col("__n"))
-      .withColumn("__avg_rank", col("__before") + (col("__n") + 1) / 2.0)
-    val r = cum.agg(
-      sum(col("__na") * col("__avg_rank")).as("ra"),
-      sum(col("__na")).as("n_a"),
-      sum(col("__n") - col("__na")).as("n_b")).head()
-    val (ra, na, nb) = (r.getDouble(0), r.getLong(1), r.getLong(2))
+    val r = PrefixSum.rankSums(df, lit(0), col(scoreCol), isA.cast("long"))
+      .getOrElse(0, PrefixSum.RankSum(0.0, 0.0, 0L, Nil))
+    val (ra, na) = (r.rankSum, r.weight.toLong)
+    val nb = r.n - na
     require(na > 0 && nb > 0, "both cohorts must be non-empty")
     val u = ra - na.toDouble * (na + 1) / 2.0
     val z = (u - na.toDouble * nb / 2.0) /

@@ -13,10 +13,13 @@ import graft.core.PrefixSum
   * the regression wrappers.
   *
   * Every metric is a single distributed aggregation over a predictions
-  * DataFrame — no collect of row-level data. `rocAuc` uses the
-  * rank-statistic (Mann-Whitney) formulation with average ranks for
-  * ties, aggregated per distinct score first and ranked by the
-  * distributed prefix sum (`core.PrefixSum`), never a global window.
+  * DataFrame — no collect of row-level data, one Spark action per
+  * evaluation. `rocAuc` uses the rank-statistic (Mann-Whitney)
+  * formulation with average ranks for ties, aggregated per distinct
+  * score first and ranked by the distributed rank sum
+  * (`core.PrefixSum.rankSums`), never a global window; it raises on a
+  * label outside {0, 1}, a null label and a null or NaN score, as
+  * sklearn's `roc_auc_score` does.
   */
 object Metrics {
 
@@ -65,43 +68,34 @@ object Metrics {
       score: String): Map[Int, Double] =
     auc(df, col(group).cast("int"), label, score)
 
-  /** Scale design: for continuous scores the per-(group, distinct score)
-    * aggregate is nearly row-scale, so a global window over it would
-    * collapse the whole OOF table onto one partition. The cumulative
-    * count is instead `PrefixSum.runningTotals` over (group, score) —
-    * global, not restarting per group. Each group's ranks are therefore
-    * shifted by its base (the row count of the groups before it), which
-    * the driver subtracts from the rank sum as nPos·base, reading the
-    * per-group counts the final collect returns anyway. Every rank sum
-    * is a multiple of ½ below 2^52, where doubles are exact, so the
-    * result equals a per-group ranking bit for bit. */
+  /** Scale design: one `PrefixSum.rankSums` action — the per-(group,
+    * distinct score) pre-aggregate is ranked within each group by a
+    * range-partitioned pass, never a global window, and only
+    * (partitions × groups) partial sums reach the driver. The same
+    * pre-aggregate counts the rows sklearn's `roc_auc_score` rejects
+    * (a label outside {0, 1}, a null label, a null or NaN score), so the
+    * checks cost no extra job. */
   private def auc(df: DataFrame, group: Column, label: String,
       score: String): Map[Int, Double] = {
-    val counts = df.groupBy(group.as("__g"), col(score).as("__s"))
-      .agg(count(lit(1)).as("__n"), sum(col(label).cast("double")).as("__pos"))
-    val perGroup = PrefixSum.runningTotals(
-        counts, Seq(col("__g"), col("__s")), Map("__cum" -> col("__n")))
-      .withColumn("__avg_rank", col("__cum") - col("__n") + (col("__n") + 1) / 2.0)
-      .groupBy("__g").agg(
-        sum(col("__pos") * col("__avg_rank")).as("spr"),
-        sum(col("__pos")).as("np"),
-        sum(col("__n")).as("n"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
-      .sortBy(_._1)
-    var base = 0L
-    perGroup.map { case (g, spr, np, n) =>
-      val nn = n - np
+    val (y, s) = (col(label), col(score))
+    val ranks = PrefixSum.rankSums(df, group, s, y,
+      Seq(y.isNotNull && !y.isin(0, 1), y.isNull, s.isNull || isnan(s)))
+    Seq(s"$label outside {0, 1}", s"null $label", s"null or NaN $score").zipWithIndex
+      .foreach { case (what, i) =>
+        val bad = ranks.values.map(_.counts(i)).sum
+        require(bad == 0, s"rocAuc: $bad rows with $what")
+      }
+    ranks.map { case (g, r) =>
+      val (np, nn) = (r.weight, r.n - r.weight)
       require(np > 0 && nn > 0, s"rocAuc needs both classes in group $g")
-      val sumPosRank = spr - np * base
-      base += n
-      g -> (sumPosRank - np * (np + 1) / 2.0) / (np * nn)
-    }.toMap
+      g -> (r.rankSum - np * (np + 1) / 2.0) / (np * nn)
+    }
   }
 
-  /** Per-group evaluation of a registry metric in one pass (one
-    * aggregation job for the aggregate metrics, one grouped rank plan
-    * for AUC) — what the CV engine uses for its k per-fold scores
-    * instead of k filtered re-evaluations. */
+  /** Per-group evaluation of a registry metric in one action (one
+    * grouped aggregate for the aggregate metrics, one grouped rank sum
+    * for AUC) — what the CV engine uses for its k per-fold scores and
+    * the total instead of k + 1 filtered re-evaluations. */
   def byGroup(name: String): (DataFrame, String, String, String) => Map[Int, Double] =
     if (name == "roc_auc_score") rocAucByGroup _
     else {

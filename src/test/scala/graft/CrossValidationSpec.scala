@@ -119,6 +119,31 @@ class CrossValidationSpec extends SparkSpec {
     }
   }
 
+  test("scores: folds and total from one grouped action, equal to per-fold plus scalar evaluation") {
+    val preds = core.Tables.orders(spark, sf).select(
+      (col("o_orderkey") % 3).cast("int").as("fold"),
+      (((col("o_orderkey") * 2654435761L) % 97) / lit(96.0)).as("prob"),
+      ((col("o_orderkey") + col("o_custkey")) % 3 === 0).cast("int").as("label"))
+      .withColumn("probs", array(lit(1.0) - col("prob"), col("prob")))
+    for (name <- Metrics.registry.keys.toSeq.sorted) {
+      val score = if (name == "multi_logloss") "probs" else "prob"
+      val c = cfg.copy(metricName = name)
+      val byFold = Metrics.byGroup(name)(preds, "fold", "label", score)
+      val wantFolds = (0 until 3).map(k => CrossValidation.round6(byFold(k), c.metricsDecimals))
+      val wantTotal = CrossValidation.round6(
+        Metrics.registry(name)(preds, "label", score), c.metricsDecimals)
+      var got: (Seq[Double], Double) = null
+      assert(actionCount { got = CrossValidation.scores(preds, "label", score, c) } == 1,
+        s"$name: one action for the folds and the total")
+      val (folds, total) = got
+      if (Set("roc_auc_score", "accuracy_score")(name))
+        assert(folds == wantFolds && total == wantTotal, name)
+      else (folds :+ total).zip(wantFolds :+ wantTotal).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-12, s"$name: $a vs $b")
+      }
+    }
+  }
+
   test("the test side is not cached while a seed bag fits") {
     // Test scoring is lazy and first runs after the CV returns, so a
     // test-side cache never serves a read; under seed bagging the seeds

@@ -7,7 +7,8 @@ import graft.core.PrefixSum
 import graft.ml.Metrics
 
 /** The distributed prefix-sum core against single-partition windows,
-  * and the AUC plan built on it against a brute-force Mann–Whitney. */
+  * its rank sums against a brute-force average-rank sum, and the AUC
+  * plan built on them against a brute-force Mann–Whitney. */
 class PrefixSumSpec extends SparkSpec {
   import spark.implicits._
 
@@ -88,5 +89,62 @@ class PrefixSumSpec extends SparkSpec {
     val want = rows.groupBy(_._1).map { case (g, rs) => g -> bruteForce(rs) }
     assert(Metrics.rocAucByGroup(df, "g", "y", "s") == want)
     assert(Metrics.rocAuc(df, "y", "s") == bruteForce(rows))
+  }
+
+  test("rankSums equals a brute-force per-group average-rank sum at 1, 3 and 8 input partitions") {
+    val rnd = new scala.util.Random(29)
+    // group 0: 6 distinct scores and some null ones (heavy ties); group 1:
+    // ~150 distinct scores, spread over several range partitions; group
+    // 2: five rows on one score, within one partition; 3-7: single rows
+    val rows = (1 to 400).map(_ => (0, if (rnd.nextInt(20) == 0) None
+        else Some(rnd.nextInt(6).toDouble), rnd.nextInt(4).toDouble)) ++
+      (1 to 300).map(_ => (1, Some(rnd.nextInt(150) / 7.0), rnd.nextInt(3).toDouble)) ++
+      (1 to 5).map(_ => (2, Some(0.5), 1.0)) ++
+      (3 to 7).map(g => (g, Some(g.toDouble), g % 2.0))
+    def bruteForce(rs: Seq[(Int, Option[Double], Double)]): PrefixSum.RankSum = {
+      val ties = rs.groupBy(_._2).toSeq.sortBy(_._1)
+      val rankSum = ties.foldLeft((0.0, 0L)) { case ((acc, before), (_, tied)) =>
+        (acc + tied.map(_._3).sum * (before + (tied.size + 1) / 2.0), before + tied.size)
+      }._1
+      PrefixSum.RankSum(rankSum, rs.map(_._3).sum, rs.size.toLong,
+        Seq(rs.count(_._2.isEmpty).toLong))
+    }
+    val want = rows.groupBy(_._1).map { case (g, rs) => g -> bruteForce(rs) }
+    val conf = Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val before = conf.map { case (k, _) => k -> spark.conf.get(k) }
+    for (parts <- Seq(1, 3, 8); settings <- Seq(Nil, conf)) {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val df = rows.toDF("g", "s", "w").repartition(parts)
+        val got = PrefixSum.rankSums(df, col("g"), col("s"), col("w"), Seq(col("s").isNull))
+        assert(got == want, s"($parts partitions, conf $settings)")
+      } finally before.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+  }
+
+  test("grouped AUC and Mann–Whitney each run one Spark action") {
+    val rnd = new scala.util.Random(31)
+    val df = (1 to 200).map(i => (i % 3, rnd.nextInt(20) / 19.0, rnd.nextInt(2)))
+      .toDF("g", "s", "y").repartition(3)
+    assert(actionCount(Metrics.rocAucByGroup(df, "g", "y", "s")) == 1)
+    assert(actionCount(Metrics.rocAuc(df, "y", "s")) == 1)
+    assert(actionCount(graft.ml.Evaluation.mannWhitney(df, "s", col("y") === 1)) == 1)
+  }
+
+  test("rocAuc raises on a label outside {0, 1}, a null label and a null or NaN score") {
+    val ok = Seq((Option(0.1), Option(0)), (Option(0.4), Option(1)),
+      (Option(0.45), Option(0)), (Option(0.8), Option(1)))
+    def auc(rows: Seq[(Option[Double], Option[Int])]): Double =
+      Metrics.rocAuc(rows.toDF("s", "y"), "y", "s")
+    assert(auc(ok) == 0.75)
+    for ((bad, what) <- Seq(
+        (Option(0.5), Option(2)) -> "y outside {0, 1}",
+        (Option(0.5), Option.empty[Int]) -> "null y",
+        (Option.empty[Double], Option(1)) -> "null or NaN s",
+        (Option(Double.NaN), Option(0)) -> "null or NaN s")) {
+      val e = intercept[IllegalArgumentException](auc(ok :+ bad))
+      assert(e.getMessage.contains(s"1 rows with $what"), e.getMessage)
+    }
   }
 }

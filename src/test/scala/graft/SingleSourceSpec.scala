@@ -49,11 +49,17 @@ class SingleSourceSpec extends AnyFunSuite {
   }
 
   test("the distributed prefix sum is written once, in core.PrefixSum") {
-    for (fn <- Seq("spark_partition_id", "monotonically_increasing_id")) {
+    for (fn <- Seq("spark_partition_id", "monotonically_increasing_id",
+        "TaskContext.getPartitionId")) {
       val found = hits(fn + """\(\)""", "src/main").distinct
       assert(found.map(_.toString) == Seq("src/main/scala/graft/core/PrefixSum.scala"),
         s"$fn() outside core/PrefixSum.scala: ${found.mkString(", ")}")
     }
+    // rank sums (AUC, Mann–Whitney) go through PrefixSum.rankSums; the
+    // one running total left under ml/ is the KS statistic's two CDFs
+    val running = hits("""PrefixSum\.runningTotals\(""", "src/main/scala/graft/ml")
+    assert(running.map(_.toString) == Seq("src/main/scala/graft/ml/Evaluation.scala"),
+      s"runningTotals under ml/: ${running.mkString(", ")}")
   }
 
   test("only core.Materialize caches, persists or unpersists a frame") {
