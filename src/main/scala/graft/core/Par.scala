@@ -15,19 +15,16 @@ import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorServic
   * On a real cluster the same overlap keeps executors busy while the
   * driver plans the next fit.
   *
-  * Nested sections (a seed bag whose per-seed work is itself a fold
-  * loop, a threshold sweep whose per-threshold CV is a fold loop) run
-  * the INNER level on a SECOND bounded pool: a bounded pool whose tasks
-  * block awaiting tasks of the same pool can deadlock, but an outer
-  * task blocking on a DIFFERENT pool cannot (the inner pool's tasks
-  * never wait on the outer's), so one nesting level fans the fits all
-  * the way out — a 3-threshold × 3-fold sweep runs its 9 fits
-  * concurrently instead of 3 batches of 3 (round-18; the measured cost
-  * of the fit groups is per-fit fixed overhead, so overlap IS the
-  * optimization). Depth ≥ 2 falls back to sequential on the calling
-  * thread. Results always return in input order, and every fit is
-  * seeded-deterministic, so output is identical to the sequential
-  * loop.
+  * There is one bounded pool. A `mapPar` called from inside a Par task
+  * (a seed bag whose per-seed work is a fold loop) runs as a plain
+  * sequential map on that task's thread: a bounded pool whose tasks
+  * block awaiting tasks of the same pool can deadlock, and an alternated
+  * A/B of a second pool for the inner level measured no gain over this
+  * rule on the `solution` workload. Results always return in input
+  * order, and every fit is seeded-deterministic, so output is identical
+  * to the sequential loop. A failing fan-out waits for every sibling
+  * before it rethrows, so its caller never returns while fits it
+  * started still submit Spark jobs.
   *
   * A frame that every task of a fan-out reads is materialized BEFORE
   * the fan-out — `Materialize.scoped(df, eager = true)` inside one
@@ -39,36 +36,34 @@ object Par {
   private val parallelism: Int =
     math.min(8, math.max(2, Runtime.getRuntime.availableProcessors() / 4))
 
-  private def newPool(name: String): ExecutionContextExecutorService =
+  private lazy val ec: ExecutionContextExecutorService =
     ExecutionContext.fromExecutorService(
       Executors.newFixedThreadPool(parallelism, { (r: Runnable) =>
-        val t = new Thread(r, name)
+        val t = new Thread(r, "graft-par")
         t.setDaemon(true)
         t
       }))
 
-  private lazy val outerEc = newPool("graft-par")
-  private lazy val innerEc = newPool("graft-par-inner")
-
-  private val depth: ThreadLocal[java.lang.Integer] =
-    ThreadLocal.withInitial(() => java.lang.Integer.valueOf(0))
+  /** Set on a pool thread while it runs a task. */
+  private val inTask: ThreadLocal[java.lang.Boolean] =
+    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** Map `f` over `xs` with bounded driver-side parallelism, returning
-    * results in input order. Trivial inputs and calls nested two or
-    * more Par levels deep run as a plain sequential map. */
-  def mapPar[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    val d = depth.get().intValue()
-    if (xs.lengthCompare(1) <= 0 || d >= 2) xs.map(f)
+    * results in input order. Trivial inputs and calls from inside a Par
+    * task run as a plain sequential map. When tasks throw, the first
+    * throwable in input order is rethrown once every task has ended. */
+  def mapPar[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.lengthCompare(1) <= 0 || inTask.get()) xs.map(f)
     else {
-      val ec = if (d == 0) outerEc else innerEc
       val fs = xs.map { x =>
         Future {
-          depth.set(java.lang.Integer.valueOf(d + 1))
-          try f(x)
-          finally depth.set(java.lang.Integer.valueOf(d))
+          inTask.set(true)
+          // a Future never completes on a fatal error (a stack
+          // overflow in a fit), so every throwable is carried back here
+          try Right(f(x)) catch { case t: Throwable => Left(t) }
+          finally inTask.set(false)
         }(ec)
       }
-      fs.map(Await.result(_, Duration.Inf))
+      fs.map(Await.result(_, Duration.Inf)).map(_.fold(t => throw t, identity))
     }
-  }
 }

@@ -49,6 +49,17 @@ private[graft] object Banding {
         element_at(col("__sig"), b * rowsPerBand + r + 1)): _*).as("bsig"))
     }: _*)
 
+  /** SimHash band keys from a `simhash` long column: array<struct(band,
+    * bsig)>, bsig = the band's `bandBits` bits of the signature. Shared
+    * by the near-dup pipeline and the sizing probe, so the probe prices
+    * the buckets the pipeline joins. */
+  def simhashBands(nBands: Int, bandBits: Int): Column =
+    array((0 until nBands).map { b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(col("simhash"), b * bandBits)
+          .mod(1L << bandBits).as("bsig"))
+    }: _*)
+
   /** One row per (keep..., band, bsig) from an array<struct(band,
     * bsig)> column. */
   def explodeBands(df: DataFrame, bandKeys: Column, keep: String*): DataFrame =
@@ -98,7 +109,7 @@ private[graft] object Banding {
       log.warn(s"$family maxBucketSize=$maxBucketSize dropped " +
         s"${c.overGroups} bucket(s) spanning ${c.overRows} $unit; " +
         "near-dups colliding only there are not searched - raise the " +
-        "cap or re-band (graft.ProbeBanding prices the shapes)")
+        "cap or re-band (graft.Probe banding prices the shapes)")
       val over = banded.groupBy("band", "bsig").agg(count(lit(1)).as("__n"))
         .filter(col("__n") > maxBucketSize).select("band", "bsig")
       (banded.join(over, Seq("band", "bsig"), "left_anti"), c)

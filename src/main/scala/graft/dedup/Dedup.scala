@@ -102,7 +102,7 @@ object Dedup {
     *    all-pairs). Miss probability for a pair with Jaccard j is
     *    (1 - j^r)^b — at j>=0.9, r=2, b=16 it is < 1e-17. The measured
     *    recall contract of the default (16,2) at threshold 0.5 (the
-    *    sf10/100x PairSlice record, 500k docs): soundness exact on all
+    *    sf10/100x `Probe slice` record, 500k docs): soundness exact on all
     *    120,982 reported pairs, completeness 12,634/12,750 (99.1%) on
     *    the slice replay with every miss confined to the published
     *    S-curve tail j in [0.50, 0.571] and zero false extras — a pair
@@ -122,8 +122,8 @@ object Dedup {
     * ~1e6 at k=2, while a pair at j=0.9 is missed with probability
     * P[Binom(b, j^r) <= 1] (0.35% at b=12, r=6). At 100 TB, pick
     * (bands, rowsPerBand, minBandAgreements) from the
-    * [[graft.ProbeBanding]] census of the corpus's own similarity
-    * profile (runMain graft.ProbeBanding <docsDir> [BxR ...]).
+    * [[graft.Probe]] banding census of the corpus's own similarity
+    * profile (runMain graft.Probe banding <docsDir> [BxR ...]).
     *
     * Returns (id_1, id_2, jaccard) with id_1 < id_2.
     */
@@ -227,7 +227,7 @@ object Dedup {
     * Both messages point at the knobs that fix the shape (rowsPerBand
     * sharpens the per-band collision probability j^r;
     * minBandAgreements >= 2 crushes background mass quadratically) and
-    * at [[graft.ProbeBanding]], which prices candidates against the
+    * at [[graft.Probe]] banding, which prices candidates against the
     * corpus's own similarity profile.
     *
     * Long-running drivers (a foreachBatch loop calling the batch path
@@ -250,7 +250,7 @@ object Dedup {
         s"MAJORITY of the banding index and near-dup recall collapses " +
         s"corpus-wide (low-diversity corpus). Raise rowsPerBand (per-" +
         s"band collision prob is j^r), raise the cap, or require " +
-        s"minBandAgreements >= 2 — graft.ProbeBanding prices the " +
+        s"minBandAgreements >= 2 — graft.Probe banding prices the " +
         s"shapes against this corpus."))
     else if (keptCandidateMass > 100.0 * nDocs) Some((false,
       s"minHashNearDup: banding at (b=$bands, r=$rowsPerBand, k=" +
@@ -258,7 +258,7 @@ object Dedup {
         f"collision candidates over $nDocs%,d docs (${keptCandidateMass * 1.0 / nDocs}%.0f" +
         s"/doc before the verify join) — the shape is saturated for " +
         s"this corpus; raise rowsPerBand or minBandAgreements " +
-        s"(graft.ProbeBanding prices the candidate mass)"))
+        s"(graft.Probe banding prices the candidate mass)"))
     else None
   }
 
@@ -495,7 +495,7 @@ object Dedup {
     * exact hamming verification then removes false candidates.
     *
     * SIZING RULE at scale (the Manku-et-al. table-count trade, probed
-    * at sf10 by SimhashProbe): each band key has only
+    * at sf10 by `graft.Probe simhash`): each band key has only
     * 2^(bits / (maxHamming+1)) values, so the bucket space must be
     * sized to the corpus — 32-bit / 4-band signatures give 256 values
     * per band and SATURATE near 10^5 docs (sf10 measured: 1,010 of the
@@ -533,17 +533,13 @@ object Dedup {
     val nBands = maxHamming + 1
     val bandBits = bits / nBands
     Materialize.scoped(simHash(df, idCol, textCol, bits)) { sig =>
-      val bandKeys = array((0 until nBands).map { b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("simhash"), b * bandBits)
-            .mod(1L << bandBits).as("bsig"))
-      }: _*)
       // the census fills the cache every later stage reads, and the
       // sizing rule (n = rows / nBands) fires BEFORE the quadratic
       // candidate join is paid
       val (sized, census) = Banding.capped(
-        Banding.explodeBands(sig, bandKeys, "id", "simhash"), maxBucketSize,
-        "simhash LSH", "signature rows",
+        Banding.explodeBands(sig, Banding.simhashBands(nBands, bandBits),
+          "id", "simhash"),
+        maxBucketSize, "simhash LSH", "signature rows",
         sizing = c => simHashSizingIssue(c.rows / nBands, maxHamming, bits,
           maxBucketSize))
       // verify-then-dedup: the signatures ride the candidate join, so a

@@ -114,7 +114,7 @@ object StreamingDedup {
                   s"maxBucketSize=$maxBucketSize and is permanently " +
                   "dropped; near-dups colliding only there are not " +
                   "searched - raise the cap or re-band " +
-                  "(graft.ProbeBanding prices the shapes)")
+                  "(graft.Probe banding prices the shapes)")
                 bucket = Bucket(saturated = true, Nil)
                 out.clear()
               } else {

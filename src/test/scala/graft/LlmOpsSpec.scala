@@ -116,7 +116,7 @@ class LlmOpsSpec extends SparkSpec {
     val df = rows.toDF("doc_id", "text")
     val grams = Dedup.charNgramArrays(df, "doc_id", "text", 5).cache()
     Seq((8, 4), (4, 2)).foreach { case (b, r) =>
-      val got = ProbeBanding.shapeCensus(grams, b, r)
+      val got = Probe.shapeCensus(grams, b, r)
       // reference bucket counts from the aggregate-form signature:
       // min over every gram of each seeded xxhash64, then the band hash
       val aggs = (0 until b * r).map(j => min(xxhash64(lit(j), col("s"))).as(s"h$j"))
@@ -128,7 +128,7 @@ class LlmOpsSpec extends SparkSpec {
         .select("bs.band", "bs.bsig").collect()
         .groupBy(k => (k.getInt(0), k.getLong(1))).values.map(_.length.toLong).toSeq
       def mass(cap: Long) = sizes.filter(_ <= cap).map(n => n * (n - 1) / 2).sum
-      assert(got == ProbeBanding.Shape(mass(Long.MaxValue), mass(10000L),
+      assert(got == Probe.Shape(mass(Long.MaxValue), mass(10000L),
         mass(1000L), mass(100L), sizes.max, sizes.size.toLong), s"($b, $r)")
       assert(got.cap100 < got.cap1k && got.maxBucket >= 150L,
         s"the clone buckets must exceed the 100 cap: $got")
@@ -1092,7 +1092,7 @@ class LlmOpsSpec extends SparkSpec {
         threshold = 0.5, maxBucketSize = 10).count()
     }
     assert(ex.getMessage.contains("MAJORITY") &&
-      ex.getMessage.contains("ProbeBanding"), ex.getMessage)
+      ex.getMessage.contains("graft.Probe banding"), ex.getMessage)
   }
 
   test("skew-guard drop stats: every capped family is loud when the cap engages") {

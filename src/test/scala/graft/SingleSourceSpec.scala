@@ -6,13 +6,13 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard: the session config, the bench checksum, the LSH
-  * banding core, the distributed prefix sum and cache ownership each
-  * live in exactly one place, so every main, the benchmark and the test suite run the same
-  * settings and force queries the same way, and every near-dup family
-  * buckets and caps the same way: a copy-pasted session setup drifts
-  * from the shipped config, a copied band hash or census drifts from
-  * its siblings. No
-  * SparkSession needed — this is a pure source scan.
+  * banding core, the distributed prefix sum, cache ownership and the
+  * driver-side thread pool each live in exactly one place, so every
+  * main, the benchmark and the test suite run the same settings and
+  * force queries the same way, and every near-dup family buckets and
+  * caps the same way: a copy-pasted session setup drifts from the
+  * shipped config, a copied band hash or census drifts from its
+  * siblings. No SparkSession needed — this is a pure source scan.
   */
 class SingleSourceSpec extends AnyFunSuite {
 
@@ -76,5 +76,23 @@ class SingleSourceSpec extends AnyFunSuite {
       "src/main")
     assert(found.map(_.toString) == Seq("src/main/scala/graft/dedup/Banding.scala"),
       s"over-cap census copies: ${found.mkString(", ")}")
+  }
+
+  test("the SimHash band-key expression is written once") {
+    val found = hits("""shiftrightunsigned\(col\("simhash"\)""")
+    assert(found.map(_.toString) == Seq("src/main/scala/graft/dedup/Banding.scala"),
+      s"SimHash band-key copies: ${found.mkString(", ")}")
+  }
+
+  test("driver-side fan-outs share one thread pool, built in core.Par") {
+    val found = hits("""newFixedThreadPool\(""")
+    assert(found.map(_.toString) == Seq("src/main/scala/graft/core/Par.scala"),
+      s"thread pools: ${found.mkString(", ")}")
+  }
+
+  test("the runnable mains are Bench, Verify and Probe") {
+    val found = hits("""def main\(""", "src/main").map(_.getFileName.toString).sorted
+    assert(found == Seq("Bench.scala", "Probe.scala", "Verify.scala"),
+      s"mains: ${found.mkString(", ")}")
   }
 }
