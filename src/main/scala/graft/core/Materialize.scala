@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** The engine's one owner of cached frames. Spark gives a cached frame
   * no owner: `cache()` is a hint that lives in the session's
@@ -9,7 +10,14 @@ import org.apache.spark.sql.DataFrame
   *
   *  - **Scoped cache, inside one function.** A frame that several
   *    reads of one function share is pinned by [[scoped]]: cached for
-  *    the body, released in `finally` — also when the body throws.
+  *    the body, released in `finally` — also when the body throws. A
+  *    frame some outer scope already pinned stays that scope's: the
+  *    inner scope neither caches nor releases it.
+  *  - **Deferred cache, for a frame several steps may or may not read.**
+  *    [[deferred]] hands its body a [[Pinned]] handle that loads and
+  *    caches the frame on first use; the scope releases it on exit only
+  *    if some step loaded it, so a run whose steps all skip reads nothing
+  *    (a resumed pipeline).
   *  - **Checkpoint, for anything that escapes.** A frame returned to
   *    the caller (a CV's OOF, a memo slot's value) is pinned with
   *    `localCheckpoint` instead — eager where several reads follow at
@@ -27,11 +35,30 @@ object Materialize {
     * each race to fill the same cache and compute the frame more than
     * once. */
   def scoped[T](df: DataFrame, eager: Boolean = false)(body: DataFrame => T): T = {
-    val cached = df.cache()
+    val owned = df.storageLevel == StorageLevel.NONE
+    val cached = if (owned) df.cache() else df
     try {
       if (eager) cached.count()
       body(cached)
-    } finally cached.unpersist()
+    } finally if (owned) cached.unpersist()
+  }
+
+  /** A frame loaded and cached by its first [[get]], held for the rest
+    * of its [[deferred]] scope. */
+  final class Pinned private[Materialize] (load: () => DataFrame) {
+    private var frame: Option[DataFrame] = None
+    def get: DataFrame = synchronized {
+      frame.getOrElse { val f = load().cache(); frame = Some(f); f }
+    }
+    private[Materialize] def release(): Unit = synchronized { frame.foreach(_.unpersist()) }
+  }
+
+  /** Runs `body` with a [[Pinned]] handle on `load`: nothing is read
+    * until some step calls `get`, and the frame is unpersisted on exit
+    * (also when `body` throws) only if one did. */
+  def deferred[T](load: => DataFrame)(body: Pinned => T): T = {
+    val pinned = new Pinned(() => load)
+    try body(pinned) finally pinned.release()
   }
 
   /** `df` pinned by an eager `localCheckpoint`, for a frame that escapes

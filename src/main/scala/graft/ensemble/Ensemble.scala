@@ -182,7 +182,11 @@ object Ensemble {
       safe.map(CrossValidation.round6(_, 3))
     }
     val trials = Materialize.scoped(oof) { cached =>
-      def scoreOf(w: Seq[Double]): Double = {
+      // the score is a pure function of the normalized, rounded weights,
+      // and trials repeat them (with one input, every trial is [1.0]):
+      // one metric action per distinct vector
+      val scored = scala.collection.mutable.Map.empty[Seq[Double], Double]
+      def scoreOf(w: Seq[Double]): Double = scored.getOrElseUpdate(w, {
         val voted =
           if (hardVote)
             cached.withColumn("__blend",
@@ -190,7 +194,7 @@ object Ensemble {
           else
             cached.withColumn("__blend", graft.ops.RowOps.weightedMean(predCols.map(col), w))
         CrossValidation.round6(metric(voted, target, "__blend"), metricsDecimals)
-      }
+      })
 
       val uniform = normalize(predCols.map(_ => 1.0))
       val baseline = (0, scoreOf(uniform), uniform)

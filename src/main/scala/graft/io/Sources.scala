@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   *    (ensembling/ensembler.py:60-101).
   *  - S3 CSV sink with pandas `float_format='%.Nf'` parity
   *    (prediction.py:743-772): floats are rendered through
-  *    format_string (codegen'd), header on, one part file only when
-  *    `single=true` (the reference's artifacts are single files).
+  *    format_string (codegen'd), header on, one part file (the
+  *    reference's artifacts are single files), optionally sorted.
   *  - S4 JSON manifest I/O: tiny control data (feature lists, best
   *    params, OOF manifests — create_solution.py:167-374), driver-side.
   *  - S7 config copy next to results (prediction.py:774-789).
@@ -42,24 +42,29 @@ object Sources {
     }
   }
 
-  /** S3: CSV sink with float formatting. `floatDecimals=None` writes
-    * raw doubles (pandas float_format=None path for target_decimals=0,
-    * prediction.py:744). */
+  /** S3: CSV sink with float formatting, one part file (the reference's
+    * artifacts are single files). `floatDecimals=None` writes raw
+    * doubles (pandas float_format=None path for target_decimals=0,
+    * prediction.py:744). `sortBy` orders the rows inside that one
+    * partition, so a sorted artifact costs one job: no range-sample job
+    * and no exchange, as an `orderBy` before the write would add. Rows
+    * are sorted on their unformatted values; ties keep no defined order,
+    * so sort on a unique key. */
   def writeCsv(df: DataFrame, path: String, floatDecimals: Option[Int],
-      single: Boolean = true): Unit = {
+      sortBy: Seq[String] = Nil): Unit = {
+    val single =
+      if (sortBy.isEmpty) df.coalesce(1) else df.coalesce(1).sortWithinPartitions(sortBy.map(col): _*)
     val formatted = floatDecimals match {
       case Some(d) =>
-        val cols = df.schema.fields.map {
+        val cols = single.schema.fields.map {
           case f if f.dataType == DoubleType || f.dataType == FloatType =>
             format_string(s"%.${d}f", col(f.name)).as(f.name)
           case f => col(f.name)
         }
-        df.select(cols.toSeq: _*)
-      case None => df
+        single.select(cols.toSeq: _*)
+      case None => single
     }
-    val writer = (if (single) formatted.coalesce(1) else formatted)
-      .write.mode("overwrite").option("header", "true")
-    writer.csv(path)
+    formatted.write.mode("overwrite").option("header", "true").csv(path)
   }
 
   private def esc(s: String): String =

@@ -21,6 +21,16 @@ import graft.ml.{Models, ModelWrapper}
   * (prediction.py:26-34: train_OOF.csv, test.csv, cv_results.csv) so
   * the memoization contract survives a switchover. FS/HPO stages hook
   * in through graft.fs / graft.hpo when enabled.
+  *
+  * Shared frames, each pinned through `core.Materialize.deferred` (read
+  * and cached by the first task that asks, released when its owner
+  * returns or throws, never read when every task is skipped):
+  *  - a model's training frame, its class count and feature list: owned
+  *    by that model's step of [[build]], shared by its FeatureSelection,
+  *    RunSingleModelHPO and RunSingleModelPrediction tasks;
+  *  - the single models' joined, validated OOF matrix and joined test
+  *    matrix: owned by [[buildSolution]]'s ensemble stage, shared by
+  *    every stacker and by the blender when it blends the single models.
   */
 object Solution {
 
@@ -136,105 +146,108 @@ object Solution {
       !cfg.has("modeling_settings.predict_test") || cfg.getBool("modeling_settings.predict_test")
     val singleInputs = models.map(r => r.model -> r.outputDir)
 
-    // ---- stacking branch -------------------------------------------
-    val stackers: Seq[ModelRun] =
-      if (!cfg.getBool("modeling_settings.run_stacking")) Seq.empty
-      else cfg.getStringList("stacker.meta_models").map { meta =>
-        val (runHpo, runBagging) = paths.stackerFlags(meta)
-        val (_, stackDir) = paths.stackedSolutionDir(meta, runHpo, runBagging)
-        val outDir = Paths.get(projectLocation, stackDir).toString
-        var score = (0.0, 0.0)
-        val task = Pipeline.Task(s"RunSingleStacker_$meta",
-          Seq(s"$outDir/train_OOF.csv", s"$outDir/cv_results.csv") ++
-            (if (predictTestGlobal) Seq(s"$outDir/test.csv") else Seq.empty))(() => {
-          val oofMatrix = loadOofMatrix(singleInputs)
-          val sc = cfg.getConfig("stacker.cv_params")
-          val nClasses = oofMatrix.select(target).distinct().count()
-          val cc = CvConfig(
-            numFolds = sc.getInt("num_folds"),
-            stratified = sc.getBool("stratified"),
-            dataSplitSeed = cfg.getLong("modeling_settings.data_split_seed"),
-            predictProbability =
-              cfg.getBool(s"stacker.$meta.predict_probability") && nClasses == 2,
-            metricName = metricKey(cfg.getString(s"stacker.$meta.metrics_scorer")),
-            targetDecimals = cfg.getInt(s"stacker.$meta.target_decimals"),
-            metricsDecimals = cfg.getInt(s"stacker.$meta.metrics_decimals"))
-          val seeds = cfg.getLongList("modeling_settings.model_seeds_list")
-          val usedSeeds = if (runBagging) seeds else seeds.take(1)
-          val testOof =
-            if (predictTestGlobal) Some(loadTestMatrix(singleInputs)) else None
-          val r = graft.ensemble.Ensemble.stack(oofMatrix, testOof, target, idCol,
-            modelFor(meta, nClasses), cc, usedSeeds)
-          score = (r.cvScore, r.cvStd)
-          Sources.writeCsv(r.oof.orderBy(idCol), s"$outDir/train_OOF.csv",
-            floatDecimals = Some(cc.targetDecimals).filter(_ > 0))
-          r.testPreds.foreach(tp => Sources.writeCsv(tp.orderBy(idCol),
-            s"$outDir/test.csv", floatDecimals = Some(cc.targetDecimals).filter(_ > 0)))
-          Sources.writeCsv(r.cvResults.withColumn("cv_score_per_each_fold",
-              concat_ws(",", col("cv_score_per_each_fold"))),
-            s"$outDir/cv_results.csv",
-            floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
-        })
-        val report = Pipeline.execute(task) // must run before reading `score`
-        ModelRun(meta, outDir, score._1, score._2, report)
-      }
+    // The single models' OOF and test matrices are read, joined and
+    // validated once, by the first task that asks, and held until the
+    // ensemble stage ends; on a complete project nothing reads them.
+    Materialize.deferred(loadOofMatrix(singleInputs)) { singleOof =>
+      Materialize.deferred(loadTestMatrix(singleInputs)) { singleTest =>
+        lazy val nClasses = singleOof.get.select(target).distinct().count()
 
-    // ---- blending branch -------------------------------------------
-    val blender: Option[ModelRun] =
-      if (!cfg.getBool("modeling_settings.run_blending")) None
-      else {
-        val method = cfg.getString("modeling_settings.blender_method")
-        val (_, blendDir) = paths.blendedSolutionDir(method)
-        val outDir = Paths.get(projectLocation, blendDir).toString
-        val blendTest = predictTestGlobal
-        var score = 0.0
-        val task = Pipeline.Task(s"RunSingleBlender_$method",
-          Seq(s"$outDir/blend_weights.txt", s"$outDir/blend_history.csv") ++
-            (if (blendTest) Seq(s"$outDir/test.csv") else Seq.empty))(() => {
-          val useStacked = cfg.getBool("modeling_settings.blend_stacked_results") &&
-            stackers.nonEmpty
-          val inputs = if (useStacked) stackers.map(r => r.model -> r.outputDir)
-            else singleInputs
-          val oofMatrix = loadOofMatrix(inputs)
-          val predCols = oofMatrix.columns.filterNot(c => c == idCol || c == target).toSeq
-          // voting type auto-detect (blender.py:202-227): all-integer
-          // prediction columns -> hard vote, else soft
-          val hard = predCols.forall { c =>
-            oofMatrix.schema(c).dataType.typeName match {
-              case "integer" | "long" | "short" | "byte" => true
-              case _ => false
-            }
+        // ---- stacking branch -------------------------------------------
+        val stackers: Seq[ModelRun] =
+          if (!cfg.getBool("modeling_settings.run_stacking")) Seq.empty
+          else cfg.getStringList("stacker.meta_models").map { meta =>
+            val (runHpo, runBagging) = paths.stackerFlags(meta)
+            val (_, stackDir) = paths.stackedSolutionDir(meta, runHpo, runBagging)
+            val outDir = Paths.get(projectLocation, stackDir).toString
+            var score = (0.0, 0.0)
+            val task = Pipeline.Task(s"RunSingleStacker_$meta",
+              Seq(s"$outDir/train_OOF.csv", s"$outDir/cv_results.csv") ++
+                (if (predictTestGlobal) Seq(s"$outDir/test.csv") else Seq.empty))(() => {
+              val sc = cfg.getConfig("stacker.cv_params")
+              val cc = CvConfig(
+                numFolds = sc.getInt("num_folds"),
+                stratified = sc.getBool("stratified"),
+                dataSplitSeed = cfg.getLong("modeling_settings.data_split_seed"),
+                predictProbability =
+                  cfg.getBool(s"stacker.$meta.predict_probability") && nClasses == 2,
+                metricName = metricKey(cfg.getString(s"stacker.$meta.metrics_scorer")),
+                targetDecimals = cfg.getInt(s"stacker.$meta.target_decimals"),
+                metricsDecimals = cfg.getInt(s"stacker.$meta.metrics_decimals"))
+              val seeds = cfg.getLongList("modeling_settings.model_seeds_list")
+              val usedSeeds = if (runBagging) seeds else seeds.take(1)
+              val testOof = if (predictTestGlobal) Some(singleTest.get) else None
+              val r = graft.ensemble.Ensemble.stack(singleOof.get, testOof, target, idCol,
+                modelFor(meta, nClasses), cc, usedSeeds)
+              score = (r.cvScore, r.cvStd)
+              val decimals = Some(cc.targetDecimals).filter(_ > 0)
+              Sources.writeCsv(r.oof, s"$outDir/train_OOF.csv", decimals, sortBy = Seq(idCol))
+              r.testPreds.foreach(tp =>
+                Sources.writeCsv(tp, s"$outDir/test.csv", decimals, sortBy = Seq(idCol)))
+              Sources.writeCsv(r.cvResults.withColumn("cv_score_per_each_fold",
+                  concat_ws(",", col("cv_score_per_each_fold"))),
+                s"$outDir/cv_results.csv",
+                floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
+            })
+            val report = Pipeline.execute(task) // must run before reading `score`
+            ModelRun(meta, outDir, score._1, score._2, report)
           }
-          val r = graft.ensemble.Ensemble.blend(oofMatrix, predCols, target,
-            metricKey(cfg.getString("modeling_settings.cv_params.metrics_scorer")),
-            nIter = 10, seed = cfg.getLong("modeling_settings.blender_seed"),
-            hardVote = hard)
-          score = r.score
-          Sources.writeJsonManifest(s"$outDir/blend_weights.txt",
-            r.weights.map { case (k, v) => k -> v.toString })
-          Sources.writeCsv(r.history, s"$outDir/blend_history.csv", floatDecimals = None)
-          // test-side blend: apply the optimal weights to the joined
-          // per-model test predictions (blender.py:369-384)
-          if (blendTest) {
-            val joined = loadTestMatrix(inputs)
-            // OOF weight keys carry the reference's _OOF suffix; test
-            // prediction columns do not (prediction.py:301-309)
-            val wByCol = r.weights.map { case (k, v) => k.stripSuffix("_OOF") -> v }
-            val predCols = joined.columns.filterNot(_ == idCol).toSeq
-            val w = predCols.map(c => wByCol.getOrElse(c, 0.0))
-            val blendedCol =
-              if (hard) graft.ops.RowOps.weightedVote(predCols.map(col), w).cast("double")
-              else graft.ops.RowOps.weightedMean(predCols.map(col), w)
-            Sources.writeCsv(
-              joined.withColumn(target, blendedCol).select(col(idCol), col(target))
-                .orderBy(idCol), s"$outDir/test.csv", floatDecimals = None)
-          }
-        })
-        val report = Pipeline.execute(task) // must run before reading `score`
-        Some(ModelRun(method, outDir, score, 0.0, report))
-      }
 
-    BuildResult(models, stackers, blender)
+        // ---- blending branch -------------------------------------------
+        val blender: Option[ModelRun] =
+          if (!cfg.getBool("modeling_settings.run_blending")) None
+          else {
+            val method = cfg.getString("modeling_settings.blender_method")
+            val (_, blendDir) = paths.blendedSolutionDir(method)
+            val outDir = Paths.get(projectLocation, blendDir).toString
+            val blendTest = predictTestGlobal
+            var score = 0.0
+            val task = Pipeline.Task(s"RunSingleBlender_$method",
+              Seq(s"$outDir/blend_weights.txt", s"$outDir/blend_history.csv") ++
+                (if (blendTest) Seq(s"$outDir/test.csv") else Seq.empty))(() => {
+              val useStacked = cfg.getBool("modeling_settings.blend_stacked_results") &&
+                stackers.nonEmpty
+              val stackedInputs = stackers.map(r => r.model -> r.outputDir)
+              val oofMatrix = if (useStacked) loadOofMatrix(stackedInputs) else singleOof.get
+              val predCols = oofMatrix.columns.filterNot(c => c == idCol || c == target).toSeq
+              // voting type auto-detect (blender.py:202-227): all-integer
+              // prediction columns -> hard vote, else soft
+              val hard = predCols.forall { c =>
+                oofMatrix.schema(c).dataType.typeName match {
+                  case "integer" | "long" | "short" | "byte" => true
+                  case _ => false
+                }
+              }
+              val r = graft.ensemble.Ensemble.blend(oofMatrix, predCols, target,
+                metricKey(cfg.getString("modeling_settings.cv_params.metrics_scorer")),
+                nIter = 10, seed = cfg.getLong("modeling_settings.blender_seed"),
+                hardVote = hard)
+              score = r.score
+              Sources.writeJsonManifest(s"$outDir/blend_weights.txt",
+                r.weights.map { case (k, v) => k -> v.toString })
+              Sources.writeCsv(r.history, s"$outDir/blend_history.csv", floatDecimals = None)
+              // test-side blend: apply the optimal weights to the joined
+              // per-model test predictions (blender.py:369-384)
+              if (blendTest) {
+                val joined = if (useStacked) loadTestMatrix(stackedInputs) else singleTest.get
+                // OOF weight keys carry the reference's _OOF suffix; test
+                // prediction columns do not (prediction.py:301-309)
+                val wByCol = r.weights.map { case (k, v) => k.stripSuffix("_OOF") -> v }
+                val predCols = joined.columns.filterNot(_ == idCol).toSeq
+                val w = predCols.map(c => wByCol.getOrElse(c, 0.0))
+                val blendedCol =
+                  if (hard) graft.ops.RowOps.weightedVote(predCols.map(col), w).cast("double")
+                  else graft.ops.RowOps.weightedMean(predCols.map(col), w)
+                Sources.writeCsv(joined.withColumn(target, blendedCol).select(col(idCol), col(target)),
+                  s"$outDir/test.csv", floatDecimals = None, sortBy = Seq(idCol))
+              }
+            })
+            val report = Pipeline.execute(task) // must run before reading `score`
+            Some(ModelRun(method, outDir, score, 0.0, report))
+          }
+        BuildResult(models, stackers, blender)
+      }
+    }
   }
 
   /** Run every model in `modeling_settings.models` through
@@ -296,7 +309,6 @@ object Solution {
             Seq(col("__h")), None)
           indexed.withColumn(idCol, col("__idx") + 1).drop("__h", "__idx")
       }
-      def loadTrain(): DataFrame = withId(Sources.readCsv(spark, trainNew))
       def cvConfigFor(nClasses: Long): CvConfig = {
         val predictProb = cfg.getBool(s"modeling_settings.$model.predict_probability")
         CvConfig(
@@ -311,42 +323,47 @@ object Solution {
           metricsDecimals = cvP.getInt("metrics_decimals"))
       }
 
-      // Stage FeatureSelection (create_solution.py:72-171, when run_fs)
-      val (_, fsDir) = paths.featureSelectionDir(model, runFs)
-      val fsOut = Paths.get(projectLocation, fsDir).toString
-      val fsTask: Option[Pipeline.Task] = if (!runFs) None else Some(
-        Pipeline.Task(s"FeatureSelection_$model",
-          Seq(s"$fsOut/optimal_features.txt"), deps = Seq(ingest))(() =>
-          Materialize.scoped(loadTrain()) { train =>
-            val features = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
-            val nClasses = train.select(target).distinct().count()
+      // The FS, HPO and prediction tasks share one training frame, its
+      // class count and its feature list: loaded by the first task that
+      // runs, released when this model's DAG returns or throws.
+      var score = (0.0, 0.0)
+      val report = Materialize.deferred(withId(Sources.readCsv(spark, trainNew))) { train =>
+        lazy val nClasses = train.get.select(target).distinct().count()
+        lazy val allFeatures = train.get.columns
+          .filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
+
+        // Stage FeatureSelection (create_solution.py:72-171, when run_fs)
+        val (_, fsDir) = paths.featureSelectionDir(model, runFs)
+        val fsOut = Paths.get(projectLocation, fsDir).toString
+        val fsTask: Option[Pipeline.Task] = if (!runFs) None else Some(
+          Pipeline.Task(s"FeatureSelection_$model",
+            Seq(s"$fsOut/optimal_features.txt"), deps = Seq(ingest))(() => {
             val nbRuns = cfg.getInt(
               "features_selection.target_permutation.nb_target_permutation_runs")
             val seed = cfg.getLong("modeling_settings.fs_seed_value")
             val (keep, _, _) = graft.fs.FeatureSelection.selectFeatures(
-              train, features, target, idCol, Models.RfClassifier(numTrees = 20, maxDepth = 6),
+              train.get, allFeatures, target, idCol,
+              Models.RfClassifier(numTrees = 20, maxDepth = 6),
               modelFor(model, nClasses), cvConfigFor(nClasses), seed, nbRuns)
             Sources.writeJsonList(s"$fsOut/optimal_features.txt", keep)
           }))
+        // P2: optimal-feature projection when FS ran (create_solution.py:236-237)
+        def features: Seq[String] = fsTask.fold(allFeatures)(_ =>
+          Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
 
-      // Stage RunSingleModelHPO (create_solution.py:257-298, when run_hpo)
-      val (_, hpoDirRel) = paths.hpoDir(model, runFs, runHpo)
-      val hpoOut = Paths.get(projectLocation, hpoDirRel).toString
-      val hpoSpace = if (runHpo) hpoSpaceFor(cfg, model) else None
-      val hpoTask: Option[Pipeline.Task] = hpoSpace.map { space =>
-        Pipeline.Task(s"RunSingleModelHPO_$model",
-          Seq(s"$hpoOut/optimized_hp.txt"), deps = Seq(ingest) ++ fsTask.toSeq)(() =>
-          Materialize.scoped(loadTrain()) { train =>
-            val features0 = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
-            val features = fsTask.fold(features0)(_ =>
-              Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
-            val nClasses = train.select(target).distinct().count()
+        // Stage RunSingleModelHPO (create_solution.py:257-298, when run_hpo)
+        val (_, hpoDirRel) = paths.hpoDir(model, runFs, runHpo)
+        val hpoOut = Paths.get(projectLocation, hpoDirRel).toString
+        val hpoSpace = if (runHpo) hpoSpaceFor(cfg, model) else None
+        val hpoTask: Option[Pipeline.Task] = hpoSpace.map { space =>
+          Pipeline.Task(s"RunSingleModelHPO_$model",
+            Seq(s"$hpoOut/optimized_hp.txt"), deps = Seq(ingest) ++ fsTask.toSeq)(() => {
             val hpoCfgBase = "hp_optimization.bayes.hpo_space.single_model_solution"
             // hpo_method='bayes' -> the GP surrogate, the same family as
             // the reference's bayes_opt (init_points warmup + n_iter
             // UCB-guided proposals)
             val r = graft.hpo.Gp.optimize(
-              train, features, target, idCol, space,
+              train.get, features, target, idCol, space,
               p => modelFor(model, nClasses, p),
               cvConfigFor(nClasses), cfg.getLong("modeling_settings.hpo_seed_value"),
               initPoints = cfg.getInt(s"$hpoCfgBase.init_points"),
@@ -354,29 +371,22 @@ object Solution {
             Sources.writeJsonManifest(s"$hpoOut/optimized_hp.txt",
               r.bestParams.map { case (k, v) => k -> v.toString })
           })
-      }
+        }
 
-      var score = (0.0, 0.0)
-      val bagging = runBagging && seeds.size > 1
-      // predict_test=False -> CV only, no test artifacts
-      // (modeling_settings.predict_test; prediction.py run_cv_one_seed
-      // predict_test flag)
-      val testOutputs =
-        (if (predictTest) Seq(s"$outDir/test.csv") else Seq.empty) ++
-          (if (bagging) Seq(s"$outDir/train_OOF_bagged.csv") else Seq.empty) ++
-          (if (bagging && predictTest) Seq(s"$outDir/test_bagged.csv") else Seq.empty)
-      // Stage 2: RunSingleModelPrediction (create_solution.py:301-377)
-      val predict = Pipeline.Task(s"RunSingleModelPrediction_$model",
-        Seq(s"$outDir/train_OOF.csv", s"$outDir/cv_results.csv",
-          s"$outDir/$configFile", s"$outDir/${model}_oof_data_info.txt") ++ testOutputs,
-        deps = Seq(ingest) ++ fsTask.toSeq ++ hpoTask.toSeq)(() =>
-        Materialize.scoped(loadTrain()) { train =>
+        val bagging = runBagging && seeds.size > 1
+        // predict_test=False -> CV only, no test artifacts
+        // (modeling_settings.predict_test; prediction.py run_cv_one_seed
+        // predict_test flag)
+        val testOutputs =
+          (if (predictTest) Seq(s"$outDir/test.csv") else Seq.empty) ++
+            (if (bagging) Seq(s"$outDir/train_OOF_bagged.csv") else Seq.empty) ++
+            (if (bagging && predictTest) Seq(s"$outDir/test_bagged.csv") else Seq.empty)
+        // Stage 2: RunSingleModelPrediction (create_solution.py:301-377)
+        val predict = Pipeline.Task(s"RunSingleModelPrediction_$model",
+          Seq(s"$outDir/train_OOF.csv", s"$outDir/cv_results.csv",
+            s"$outDir/$configFile", s"$outDir/${model}_oof_data_info.txt") ++ testOutputs,
+          deps = Seq(ingest) ++ fsTask.toSeq ++ hpoTask.toSeq)(() => {
           val test = withId(Sources.readCsv(spark, testNew))
-          // P2: optimal-feature projection when FS ran (create_solution.py:236-237)
-          val features0 = train.columns.filterNot(c => c == target || c == idCol || colsToExclude.contains(c)).toSeq.sorted
-          val features = fsTask.fold(features0)(_ =>
-            Sources.readJsonList(s"$fsOut/optimal_features.txt").toSeq)
-          val nClasses = train.select(target).distinct().count()
           // reinit with optimized params when HPO ran (create_solution.py:328-334)
           val params: Map[String, Double] = hpoTask.fold(Map.empty[String, Double])(_ =>
             Sources.readJsonManifest(s"$hpoOut/optimized_hp.txt")
@@ -384,13 +394,13 @@ object Solution {
           val cc = cvConfigFor(nClasses)
           val usedSeeds = if (runBagging) seeds else seeds.take(1)
           val r = CrossValidation.runCvAndPrediction(
-            train, if (predictTest) Some(test) else None, features, target, idCol,
+            train.get, if (predictTest) Some(test) else None, features, target, idCol,
             modelFor(model, nClasses, params), cc, usedSeeds)
           score = (r.cvScore, r.cvStd)
-          Sources.writeCsv(r.oof.orderBy(idCol), s"$outDir/train_OOF.csv",
-            floatDecimals = Some(cc.targetDecimals).filter(_ > 0))
-          r.testPreds.foreach(tp => Sources.writeCsv(tp.orderBy(idCol), s"$outDir/test.csv",
-            floatDecimals = Some(cc.targetDecimals).filter(_ > 0)))
+          val decimals = Some(cc.targetDecimals).filter(_ > 0)
+          Sources.writeCsv(r.oof, s"$outDir/train_OOF.csv", decimals, sortBy = Seq(idCol))
+          r.testPreds.foreach(tp =>
+            Sources.writeCsv(tp, s"$outDir/test.csv", decimals, sortBy = Seq(idCol)))
           Sources.writeCsv(r.cvResults.withColumn("cv_score_per_each_fold",
               concat_ws(",", col("cv_score_per_each_fold"))),
             s"$outDir/cv_results.csv", floatDecimals = Some(cc.metricsDecimals).filter(_ > 0))
@@ -415,19 +425,18 @@ object Solution {
           }
           if (bagging) {
             // per-seed tables (prediction.py:444-445; FILENAME_*_BAGGED)
-            Sources.writeCsv(r.oofBagged.orderBy(idCol), s"$outDir/train_OOF_bagged.csv",
-              floatDecimals = Some(cc.targetDecimals).filter(_ > 0))
-            r.testBagged.foreach(tb => Sources.writeCsv(tb.orderBy(idCol),
-              s"$outDir/test_bagged.csv",
-              floatDecimals = Some(cc.targetDecimals).filter(_ > 0)))
+            Sources.writeCsv(r.oofBagged, s"$outDir/train_OOF_bagged.csv", decimals,
+              sortBy = Seq(idCol))
+            r.testBagged.foreach(tb =>
+              Sources.writeCsv(tb, s"$outDir/test_bagged.csv", decimals, sortBy = Seq(idCol)))
           }
           Sources.copyConfig(cfgPath, outDir)
           Sources.writeJsonManifest(s"$outDir/${model}_oof_data_info.txt",
             Map("model" -> model, "path" -> solDir,
               "files" -> "train_OOF.csv,test.csv,cv_results.csv"))
         })
-
-      val report = Pipeline.execute(predict)
+        Pipeline.execute(predict)
+      }
       ModelRun(model, outDir, score._1, score._2, report)
     }
   }

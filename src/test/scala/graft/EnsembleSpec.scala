@@ -75,6 +75,20 @@ class EnsembleSpec extends SparkSpec {
     joined.unpersist()
   }
 
+  test("blender: one input scores its one weight vector once") {
+    import spark.implicits._
+    // 10 positives (odd ids) over 10 negatives, score = id / 20: 55 of
+    // the 100 positive-negative pairs are ordered, AUC 0.55
+    val oof = (0 until 20).map(i => (i.toLong, i % 2, i / 20.0)).toDF("row_id", "target", "m_OOF")
+    var r: Ensemble.BlendResult = null
+    val actions = actionCount {
+      r = Ensemble.blend(oof, Seq("m_OOF"), "target", "roc_auc_score", nIter = 10, seed = 27L)
+    }
+    assert(actions == 1, "every trial normalizes to [1.0], one metric action")
+    assert(r.weights == Map("m_OOF" -> 1.0) && r.score == 0.55)
+    assert(r.history.collect().map(_.toSeq).toSeq == (0 until 10).map(i => Seq(i, 0.55, 1.0)))
+  }
+
   test("per-fold blender: weights fit out-of-fold, blender-OOF covers all rows") {
     val base = frame.select("row_id", "target")
     val joined = Ensemble.joinOof(base, "row_id", "target",

@@ -85,6 +85,22 @@ class IoSpec extends SparkSpec {
     assert(back.schema("id").dataType.typeName == "byte", "downcast applied")
   }
 
+  test("a sorted single-file write equals orderBy then write, byte for byte") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_sorted").toString
+    val df = (1 to 300).map(i => ((i * 7919L) % 1000, i / 7.0)).toDF("id", "score")
+      .repartition(4)
+    assert(df.rdd.getNumPartitions == 4)
+    Sources.writeCsv(df, s"$dir/sorted", floatDecimals = Some(3), sortBy = Seq("id"))
+    Sources.writeCsv(df.orderBy("id"), s"$dir/ordered", floatDecimals = Some(3))
+    def bytes(out: String) = {
+      val parts = new java.io.File(out).listFiles.filter(_.getName.endsWith(".csv"))
+      assert(parts.length == 1, s"one part file in $out")
+      Files.readAllBytes(parts.head.toPath).toSeq
+    }
+    assert(bytes(s"$dir/sorted") == bytes(s"$dir/ordered"))
+  }
+
   test("csv debug row limit (S1 nrows) is applied at the scan") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_dbg").toString

@@ -28,6 +28,33 @@ class MaterializeSpec extends SparkSpec {
     assert(cachedEntries() == before, "the entry outlived its scope")
   }
 
+  test("Materialize.scoped leaves a frame an outer scope pinned to that scope") {
+    val df = spark.range(100).withColumn("y", col("id") * 2)
+    val before = cachedEntries()
+    Materialize.scoped(df) { outer =>
+      Materialize.scoped(outer) { inner => assert(inner.count() == 100) }
+      assert(cachedEntries() == before + 1, "the inner scope released the outer pin")
+    }
+    assert(cachedEntries() == before)
+  }
+
+  test("Materialize.deferred loads on first use only and releases on exit") {
+    val before = cachedEntries()
+    var loads = 0
+    def load() = { loads += 1; spark.range(50).withColumn("y", col("id") + 1) }
+    Materialize.deferred(load()) { _ => assert(cachedEntries() == before) }
+    assert(loads == 0, "an unused handle must not load its frame")
+    val err = intercept[IllegalStateException] {
+      Materialize.deferred(load()) { pinned =>
+        assert(pinned.get.count() == 50 && pinned.get.count() == 50)
+        assert(loads == 1 && cachedEntries() == before + 1, "one load, one entry")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assert(cachedEntries() == before, "the entry outlived its scope")
+  }
+
   test("Materialize.checkpoint keeps a one-partition frame's partitioning") {
     // the exchange puts the plan under adaptive execution, like the CV OOF
     val one = spark.range(100).withColumn("g", col("id") % 3).repartition(1)

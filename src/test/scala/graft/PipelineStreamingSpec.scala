@@ -200,7 +200,10 @@ class PipelineStreamingSpec extends SparkSpec {
         StandardCopyOption.REPLACE_EXISTING)
     }
 
-    // every frame a task caches is released once its outputs are written
+    // every frame the build caches is released by its owner: a task's own
+    // once its outputs are written, the frames tasks share (a model's
+    // training frame, the ensemble stage's OOF and test matrices) once
+    // their stage ends
     // (CacheManager.numCachedEntries is private[spark], public in bytecode)
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
@@ -243,10 +246,18 @@ class PipelineStreamingSpec extends SparkSpec {
     assert(Files.exists(Paths.get(s"${bl.outputDir}/test.csv")),
       "test-side blended predictions (blender.py:369-384)")
     assert(bl.cvScore > 0.7, s"blended accuracy ${bl.cvScore}")
-    // memoization: a second build skips every stage
-    val again = Solution.buildSolution(spark, proj, "configs", "solution.conf")
-    assert(again.models.forall(_.report.ran.isEmpty), "all stages skipped on re-run")
-    assert(again.stackers.forall(_.report.ran.isEmpty))
+    // memoization: a second build skips every task and reads nothing,
+    // the shared training, OOF and test frames included
+    var again: Solution.BuildResult = null
+    val jobs = jobCount {
+      again = Solution.buildSolution(spark, proj, "configs", "solution.conf")
+    }
+    (again.models ++ again.stackers ++ again.blender).foreach { r =>
+      assert(r.report.ran.isEmpty && r.report.skipped.nonEmpty,
+        s"${r.model} re-ran on a complete project: ${r.report}")
+    }
+    assert(jobs == 0, s"resuming a complete project ran $jobs Spark jobs")
+    assert(cachedEntries() == cachedBefore, "the resumed build left cached frames behind")
   }
 
   test("streaming: incremental windowed aggregate equals the batch plan") {

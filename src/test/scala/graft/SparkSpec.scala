@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -37,6 +38,31 @@ trait SparkSpec extends AnyFunSuite {
       body
       through("__after")
     } finally session.listenerManager.unregister(listener)
+  }
+
+  /** The number of Spark jobs `body` starts, fenced as in [[actionCount]]
+    * by sentinel jobs that carry a marker local property. */
+  def jobCount(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.mark")))
+          .getOrElse(""))
+    }
+    def through(mark: String): Int = {
+      sc.setLocalProperty("graft.mark", mark)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.mark", null)
+      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail(s"no $mark job event within 60 s")))
+        .takeWhile(_ != mark).size
+    }
+    sc.addSparkListener(listener)
+    try {
+      through("__before")
+      body
+      through("__after")
+    } finally sc.removeSparkListener(listener)
   }
 }
 

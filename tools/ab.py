@@ -12,7 +12,11 @@ which leaves the tree as it is; untracked files need `git add` first).
 One unrecorded run per side builds it and warms the file cache. Then
 pair i runs seed i (cycling through --seeds) on both sides, parent first
 in even pairs and change first in odd ones, and records each run's
-launch loadavg. Every run is one `perfbench/run.py --trace 0` call in
+launch posture: the 1-minute loadavg, and the non-idle share of all CPU
+time over the ~2 s before launch (from /proc/stat). The loadavg still
+carries the previous run's decaying load; the busy share reads what the
+box does right now, so co-tenant load shows apart from the A/B's own.
+Every run is one `perfbench/run.py --trace 0` call in
 its side's checkout; nothing under perfbench/ is read otherwise.
 
 Runs are appended to DIR/ab_runs.jsonl as they finish. At the end (or
@@ -28,6 +32,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 SIDES = ("parent", "change")
 
@@ -86,7 +91,9 @@ def summarize(runs):
 def report(runs):
     rows = summarize(runs)
     loads = [r["loadavg"] for r in runs]
-    lines = [f"{len(runs)} runs, launch loadavg {min(loads):.2f}-{max(loads):.2f}"
+    busy = [r["cpu_busy"] for r in runs if "cpu_busy" in r]
+    lines = [(f"{len(runs)} runs, launch loadavg {min(loads):.2f}-{max(loads):.2f}" +
+              (f", cpu busy {min(busy):.2f}-{max(busy):.2f}" if busy else ""))
              if loads else "no runs",
              f"{'metric':14} {'parent':>9} {'(q3-q1)':>9} {'change':>9} {'(q3-q1)':>9}"
              f" {'gain':>9} {'won':>6}  clears"]
@@ -115,6 +122,35 @@ def extract(rev, dest):
 def loadavg():
     with open("/proc/loadavg") as f:
         return float(f.read().split()[0])
+
+
+def cpu_times(stat):
+    """(busy, total) CPU time in jiffies from the aggregate `cpu` line of a
+    /proc/stat text. Idle and iowait count as idle; steal (time another
+    guest of the host ran) counts as busy. guest and guest_nice are left
+    out of the total: the kernel already counts them in user and nice."""
+    for line in stat.splitlines():
+        fields = line.split()
+        if fields and fields[0] == "cpu":
+            ticks = [int(v) for v in fields[1:9]]
+            idle = sum(ticks[3:5])
+            return sum(ticks) - idle, sum(ticks)
+    raise ValueError("no aggregate cpu line in /proc/stat text")
+
+
+def busy_share(before, after):
+    """Non-idle share of the CPU time between two /proc/stat texts."""
+    (b0, t0), (b1, t1) = cpu_times(before), cpu_times(after)
+    return (b1 - b0) / (t1 - t0) if t1 > t0 else 0.0
+
+
+def cpu_busy(seconds=2.0):
+    """Non-idle CPU share of the whole box over the next `seconds`."""
+    with open("/proc/stat") as f:
+        before = f.read()
+    time.sleep(seconds)
+    with open("/proc/stat") as f:
+        return busy_share(before, f.read())
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -159,10 +195,11 @@ def main(argv):
     for pair in range(args.pairs):
         seed = seeds[pair % len(seeds)]
         for side in order(pair):
+            busy = cpu_busy()
             load = loadavg()
             correct, values = run_once(checkouts[side], args.workload, seed, args.seconds)
             run = {"pair": pair, "side": side, "seed": seed, "loadavg": load,
-                   "correct": correct, "metrics": values}
+                   "cpu_busy": busy, "correct": correct, "metrics": values}
             runs.append(run)
             with open(log, "a") as f:
                 f.write(json.dumps(run, sort_keys=True) + "\n")

@@ -41,6 +41,36 @@ class OrderTest(unittest.TestCase):
         self.assertEqual(set(ab.order(1)), {"parent", "change"})
 
 
+STAT = """cpu  {} 0 {} {} {} 0 {} {} 50 0
+cpu0 1 2 3 4 5 6 7 8 9 10
+intr 12345 0 0
+"""
+
+
+class PostureTest(unittest.TestCase):
+
+    def test_cpu_times_reads_the_aggregate_line(self):
+        # user nice system idle iowait irq softirq steal guest guest_nice
+        text = STAT.format(100, 20, 600, 30, 5, 45)
+        self.assertEqual(ab.cpu_times(text), (100 + 20 + 5 + 45, 800))
+
+    def test_busy_share_is_the_non_idle_part_of_the_delta(self):
+        before = STAT.format(100, 20, 600, 30, 5, 0)
+        after = STAT.format(250, 70, 900, 30, 5, 0)  # +150 user, +50 sys, +300 idle
+        self.assertEqual(ab.busy_share(before, after), 0.4)
+        self.assertEqual(ab.busy_share(after, after), 0.0)
+
+    def test_a_text_without_the_aggregate_line_is_rejected(self):
+        with self.assertRaises(ValueError):
+            ab.cpu_times("cpu0 1 2 3 4 5 6 7 8 9 10\n")
+
+    def test_report_shows_the_busy_range_when_recorded(self):
+        runs = [dict(run(0, "parent", x=1.0), cpu_busy=0.1),
+                dict(run(0, "change", x=1.0), cpu_busy=0.35)]
+        self.assertEqual(ab.report(runs).splitlines()[0],
+                         "2 runs, launch loadavg 0.50-0.50, cpu busy 0.10-0.35")
+
+
 class SummarizeTest(unittest.TestCase):
 
     def test_medians_spread_and_pairs_won(self):
