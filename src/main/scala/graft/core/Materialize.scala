@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** The engine's one owner of cached frames. Spark gives a cached frame
   * no owner: `cache()` is a hint that lives in the session's
@@ -10,9 +9,7 @@ import org.apache.spark.storage.StorageLevel
   *
   *  - **Scoped cache, inside one function.** A frame that several
   *    reads of one function share is pinned by [[scoped]]: cached for
-  *    the body, released in `finally` — also when the body throws. A
-  *    frame some outer scope already pinned stays that scope's: the
-  *    inner scope neither caches nor releases it.
+  *    the body, released in `finally` — also when the body throws.
   *  - **Deferred cache, for a frame several steps may or may not read.**
   *    [[deferred]] hands its body a [[Pinned]] handle that loads and
   *    caches the frame on first use; the scope releases it on exit only
@@ -35,12 +32,11 @@ object Materialize {
     * each race to fill the same cache and compute the frame more than
     * once. */
   def scoped[T](df: DataFrame, eager: Boolean = false)(body: DataFrame => T): T = {
-    val owned = df.storageLevel == StorageLevel.NONE
-    val cached = if (owned) df.cache() else df
+    val cached = df.cache()
     try {
       if (eager) cached.count()
       body(cached)
-    } finally if (owned) cached.unpersist()
+    } finally cached.unpersist()
   }
 
   /** A frame loaded and cached by its first [[get]], held for the rest

@@ -32,6 +32,10 @@ object Sessions {
       // default; read as epoch-nanos long and convert explicitly.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // compiled generated classes are reused only while they stay in
+      // this JVM-wide cache; its 100-entry default evicts a pipeline
+      // build's ~275 distinct classes before their reuse
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

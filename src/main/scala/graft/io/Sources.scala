@@ -49,7 +49,13 @@ object Sources {
     * partition, so a sorted artifact costs one job: no range-sample job
     * and no exchange, as an `orderBy` before the write would add. Rows
     * are sorted on their unformatted values; ties keep no defined order,
-    * so sort on a unique key. */
+    * so sort on a unique key. The trade-off: `coalesce(1)` is narrow, so
+    * the input's last stage (a final aggregation, a window, a join) runs
+    * in the same single task as the sort, where an `orderBy` would run
+    * it and the sort in parallel. Every sorted caller writes one
+    * artifact of one row per id, which fits one task at the workflow's
+    * scale; a frame too large for one task should be written unsorted
+    * or by a range-partitioned sink. */
   def writeCsv(df: DataFrame, path: String, floatDecimals: Option[Int],
       sortBy: Seq[String] = Nil): Unit = {
     val single =

@@ -31,6 +31,9 @@ import graft.ml.{Models, ModelWrapper}
   *  - the single models' joined, validated OOF matrix and joined test
   *    matrix: owned by [[buildSolution]]'s ensemble stage, shared by
   *    every stacker and by the blender when it blends the single models.
+  *    The blender reads the OOF matrix last, and `Ensemble.blend`'s own
+  *    `Materialize.scoped` releases that pin when it returns; the
+  *    stage's release of it is then a no-op.
   */
 object Solution {
 

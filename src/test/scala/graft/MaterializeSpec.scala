@@ -28,16 +28,6 @@ class MaterializeSpec extends SparkSpec {
     assert(cachedEntries() == before, "the entry outlived its scope")
   }
 
-  test("Materialize.scoped leaves a frame an outer scope pinned to that scope") {
-    val df = spark.range(100).withColumn("y", col("id") * 2)
-    val before = cachedEntries()
-    Materialize.scoped(df) { outer =>
-      Materialize.scoped(outer) { inner => assert(inner.count() == 100) }
-      assert(cachedEntries() == before + 1, "the inner scope released the outer pin")
-    }
-    assert(cachedEntries() == before)
-  }
-
   test("Materialize.deferred loads on first use only and releases on exit") {
     val before = cachedEntries()
     var loads = 0
